@@ -132,11 +132,6 @@ object ConnectedComponents {
       nNodes = n2
       labels = next
       round += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        // scalastyle:off println
-        println(s"[cc] round $round converged=$converged " +
-          s"t=${System.nanoTime() / 1000000}")
-        // scalastyle:on println
     }
     if (!converged)
       throw new IllegalStateException(

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -105,14 +103,4 @@ object DotProduct {
     require(args.length == 2, s"graft_dot takes (array, array); got ${args.length}")
     DotProduct(args(0), args(1))
   }
-
-  /** Programmatic per-session registration so plain sessions (Bench,
-    * Verify, the driver's) get the function without the
-    * `spark.sql.extensions` config; idempotent. [[GraftExtensions]]
-    * registers the same builder for extension-configured sessions. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      builder)
 }

@@ -1,7 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.DoubleType
 
@@ -15,74 +16,7 @@ import org.apache.spark.sql.types.DoubleType
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_haversine_km"),
-      new ExpressionInfo(classOf[HaversineKm].getName, "graft_haversine_km"),
-      (args: Seq[Expression]) => {
-        require(args.length == 4,
-          s"graft_haversine_km takes (lon1, lat1, lon2, lat2); got ${args.length}")
-        val d = args.map(a => Cast(a, DoubleType): Expression)
-        HaversineKm(d(0), d(1), d(2), d(3))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      DotProduct.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nt_unescape"),
-      new ExpressionInfo(classOf[NtUnescape].getName, "graft_nt_unescape"),
-      NtUnescape.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nq_terms"),
-      new ExpressionInfo(classOf[NqTerms].getName, "graft_nq_terms"),
-      NqTerms.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nt_escape"),
-      new ExpressionInfo(classOf[NtEscape].getName, "graft_nt_escape"),
-      NtEscape.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      JaroWinkler.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sf_relate"),
-      new ExpressionInfo(classOf[SfRelate].getName, "graft_sf_relate"),
-      SfRelate.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      NfcNormalize.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_wkt_bbox"),
-      new ExpressionInfo(classOf[WktBbox].getName, "graft_wkt_bbox"),
-      WktBbox.builder))
-    GeomConstruct.UnaryNames.foreach { case (name, op) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GeomConstruct].getName, name),
-        GeomConstruct.unaryBuilder(name, op)))
-    }
-    GeomConstruct.BinaryNames.foreach { case (name, op) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GeomOverlay].getName, name),
-        GeomConstruct.binaryBuilder(name, op)))
-    }
-    GeomConstruct.MeasureNames.foreach { case (name, op) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GeomMeasure].getName, name),
-        GeomConstruct.measureBuilder(name, op)))
-    }
-    ext.injectFunction((
-      FunctionIdentifier("graft_st_buffer"),
-      new ExpressionInfo(classOf[GeomBuffer].getName, "graft_st_buffer"),
-      GeomConstruct.bufferBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_st_buffer_m"),
-      new ExpressionInfo(classOf[GeomBufferMetres].getName,
-        "graft_st_buffer_m"),
-      GeomConstruct.bufferMetresBuilder))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RadiusJoinRewrite)
     ext.injectOptimizerRule(_ => SpatialRelateJoinRewrite)
     // Post-operator-batch slot (runs ONCE, after InferFiltersFromConstraints
@@ -91,5 +25,56 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // injected might_contain back onto the build side through the join
     // equality, bloom-filtering the build against itself.
     ext.injectPreCBORule(_ => BloomJoinInject)
+  }
+}
+
+object GraftExtensions {
+
+  private def fn(name: String, cls: Class[_],
+      builder: FunctionBuilder): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  /** Every native SQL function, the one list both the extension
+    * injection and [[register]] read. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("graft_haversine_km", classOf[HaversineKm], args => {
+      require(args.length == 4,
+        s"graft_haversine_km takes (lon1, lat1, lon2, lat2); got ${args.length}")
+      val d = args.map(a => Cast(a, DoubleType): Expression)
+      HaversineKm(d(0), d(1), d(2), d(3))
+    }),
+    fn("graft_dot", classOf[DotProduct], DotProduct.builder),
+    fn("graft_nt_unescape", classOf[NtUnescape], NtUnescape.builder),
+    fn("graft_nq_terms", classOf[NqTerms], NqTerms.builder),
+    fn("graft_nt_escape", classOf[NtEscape], NtEscape.builder),
+    fn("graft_jaro_winkler", classOf[JaroWinkler], JaroWinkler.builder),
+    fn("graft_sf_relate", classOf[SfRelate], SfRelate.builder),
+    fn("graft_nfc", classOf[NfcNormalize], NfcNormalize.builder),
+    fn("graft_wkt_bbox", classOf[WktBbox], WktBbox.builder),
+    fn("graft_st_buffer", classOf[GeomBuffer], GeomConstruct.bufferBuilder),
+    fn("graft_st_buffer_m", classOf[GeomBufferMetres],
+      GeomConstruct.bufferMetresBuilder)) ++
+    GeomConstruct.UnaryNames.map { case (name, op) =>
+      fn(name, classOf[GeomConstruct], GeomConstruct.unaryBuilder(name, op))
+    } ++
+    GeomConstruct.BinaryNames.map { case (name, op) =>
+      fn(name, classOf[GeomOverlay], GeomConstruct.binaryBuilder(name, op))
+    } ++
+    GeomConstruct.MeasureNames.map { case (name, op) =>
+      fn(name, classOf[GeomMeasure], GeomConstruct.measureBuilder(name, op))
+    }
+
+  /** Programmatic registration for sessions built without the
+    * extension (Bench, Verify, RunOne, `newSession()` children):
+    * adds only the functions the session's registry lacks, so calling
+    * it before every use never replaces a registered builder. */
+  def register(s: SparkSession): Unit = {
+    val registry = s.sessionState.functionRegistry
+    registry.synchronized {
+      functions.foreach { case (id, info, builder) =>
+        if (!registry.functionExists(id))
+          registry.registerFunction(id, info, builder)
+      }
+    }
   }
 }

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -113,13 +111,4 @@ object JaroWinkler {
       s"graft_jaro_winkler takes (string, string); got ${args.length}")
     JaroWinkler(args(0), args(1))
   }
-
-  /** Programmatic per-session registration (idempotent), mirroring
-    * [[DotProduct.register]]; [[GraftExtensions]] covers
-    * extension-configured sessions. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      builder)
 }

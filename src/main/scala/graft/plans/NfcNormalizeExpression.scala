@@ -2,10 +2,8 @@ package graft.plans
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -60,13 +58,4 @@ object NfcNormalize {
       s"graft_nfc takes (string); got ${args.length}")
     NfcNormalize(args.head)
   }
-
-  /** Programmatic per-session registration (idempotent), mirroring
-    * [[DotProduct.register]]; [[GraftExtensions]] covers
-    * extension-configured sessions. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      builder)
 }

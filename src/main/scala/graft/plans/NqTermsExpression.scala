@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
@@ -87,13 +85,4 @@ object NqTerms {
       s"graft_nq_terms takes (string); got ${args.length}")
     NqTerms(args.head)
   }
-
-  /** Programmatic per-session registration (idempotent), mirroring
-    * [[DotProduct.register]]; [[GraftExtensions]] covers
-    * extension-configured sessions. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_nq_terms"),
-      new ExpressionInfo(classOf[NqTerms].getName, "graft_nq_terms"),
-      builder)
 }

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -80,13 +78,4 @@ object NtEscape {
       s"graft_nt_escape takes (string); got ${args.length}")
     NtEscape(args.head)
   }
-
-  /** Programmatic per-session registration (idempotent), mirroring
-    * [[DotProduct.register]]; [[GraftExtensions]] covers
-    * extension-configured sessions. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_nt_escape"),
-      new ExpressionInfo(classOf[NtEscape].getName, "graft_nt_escape"),
-      builder)
 }

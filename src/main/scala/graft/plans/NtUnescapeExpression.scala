@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -113,13 +111,4 @@ object NtUnescape {
       s"graft_nt_unescape takes (string); got ${args.length}")
     NtUnescape(args.head)
   }
-
-  /** Programmatic per-session registration (idempotent), mirroring
-    * [[DotProduct.register]]; [[GraftExtensions]] covers
-    * extension-configured sessions. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_nt_unescape"),
-      new ExpressionInfo(classOf[NtUnescape].getName, "graft_nt_unescape"),
-      builder)
 }

@@ -2,13 +2,13 @@ package graft.plans
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.operation.relateng.{RelateNG, RelatePredicate, TopologyPredicate}
 
 /** Native GeoSPARQL simple-feature relation over WKT lexical forms
   * (SURVEY §2.12a custom-Expression tier; the predicates the reference
@@ -19,40 +19,32 @@ import org.apache.spark.unsafe.types.UTF8String
   * `within | intersects | disjoint | touches | overlaps | equals |
   * crosses` (a foldable literal); `geomWkt` the row geometry; `otherWkt`
   * a POLYGON/MULTIPOLYGON — usually a foldable FILTER literal (parsed
-  * ONCE per plan into a cached [[SfRelate.ConstPoly]]), but a per-row
-  * polygon COLUMN is supported too (the point-in-polygon join path and
-  * the polygon-column relation variants), re-parsed per row by the same
-  * tokenizer.
+  * and prepared ONCE per plan into a cached [[SfRelate.ConstPoly]]),
+  * but a per-row polygon COLUMN is supported too (the point-in-polygon
+  * join path and the polygon-column relation variants), read and
+  * prepared once per distinct value per task.
   *
   * Why an Expression and not composed `functions._`: the composed HOF
-  * formulation (nested `exists`/`forall`/`aggregate` over parsed vertex
-  * arrays) evaluates INTERPRETED — higher-order functions are codegen
-  * fallbacks and get no common-subexpression elimination, so every
-  * sub-predicate re-walked an allocation-heavy lambda tree. At 100 TB
-  * the relation test is the scan's inner loop; here it is one WKT
-  * tokenizer pass plus primitive `while` loops per row (PERF.md #31:
-  * 7.0 s → sub-second for the relation-pack gate).
+  * formulation evaluated INTERPRETED with no common-subexpression
+  * elimination (PERF.md #31); here it is one call per row inside
+  * whole-stage codegen.
   *
-  * Semantics are op-for-op the prior Column composition, which the
-  * OperatorsSpec relation matrix and the geof gate oracles pin:
-  * even-odd ray cast (crossing parity over ALL rings; on-edge =
-  * collinear + bbox clamp) and orientation-sign segment crossings. The
-  * containment and interior-overlap decisions go beyond the r11
-  * heuristics and are EXACT for even-odd polygon regions: containment
-  * and interior overlap are decided by the overlay-face sampler
-  * ([[SfRelate.overlayExists]]) with clipped-sub-segment and vertex
-  * witnesses as sound fast paths ([[SfRelate.regionWithin]],
-  * [[SfRelate.interiorsOverlap]] — closes the ADVICE r11 concave
-  * false positive and the r11 "interleaved combs" bound, holed and
-  * multi-part regions included). IEEE double arithmetic is
-  * deterministic, so no oracle hash moves.
+  * The DE-9IM decision is JTS `RelateNG`, on the regions
+  * [[GeomConstruct]] reads: polygon ring lists by the EVEN-ODD rule (a
+  * ring list JTS reads as valid as is, any other as the XOR of its
+  * rings' regions), points and curves as written. So holed,
+  * multi-part, concave and crossing-ring operands, and every
+  * constructive output, relate exactly. A foldable polygon is prepared
+  * once per plan (`RelateNG.prepare`).
   *
-  * Null contract: null inputs poison to null; a geometry whose prefix
-  * is recognized but whose coordinates fail to parse yields null for
+  * Null contract: null inputs poison to null; `within` is null for any
+  * row that is not a POINT; `equals`/`overlaps` are false for non-polygon
+  * rows and `crosses` for non-curve rows; a geometry whose prefix is
+  * recognized but whose coordinates fail to parse yields null for
   * every relation EXCEPT disjoint (which treats unparseable as
   * not-disjoint=false — "garbage is neither intersecting nor
   * disjoint"); an unrecognized prefix is false for every relation
-  * (and false for disjoint via the known-prefix guard). */
+  * but `within`. A leading `<crs>` prefix is ignored on both sides. */
 case class SfRelate(first: Expression, second: Expression, third: Expression)
   extends TernaryExpression {
 
@@ -82,11 +74,21 @@ case class SfRelate(first: Expression, second: Expression, third: Expression)
       if (v == null) null else SfRelate.constPoly(v.toString)
     } else null
 
+  /** A polygon COLUMN repeats few distinct values (the broadcast
+    * dimension side of a spatial join), so each distinct one is read
+    * and prepared once per task; the bound caps a column of unique
+    * polygons. */
+  @transient private lazy val columnPolys =
+    new java.util.HashMap[String, SfRelate.ConstPoly]()
+
   /** Row-level entry shared by eval and codegen. */
   def relate(g: UTF8String, o: UTF8String): java.lang.Boolean = {
     val cp =
       if (third.foldable) constPoly
-      else SfRelate.constPoly(o.toString)
+      else {
+        if (columnPolys.size >= 1024) columnPolys.clear()
+        columnPolys.computeIfAbsent(o.toString, SfRelate.constPoly(_))
+      }
     if (cp == null) null
     else SfRelate.relate(relation, g.toString, cp)
   }
@@ -120,544 +122,66 @@ object SfRelate {
   val Relations: Set[String] = Set("within", "intersects", "disjoint",
     "touches", "overlaps", "equals", "crosses")
 
-  // ------------------------------------------------------------------
-  // WKT tokenizing (same shapes the Column parser accepted: innermost
-  // parenthesis groups are the coordinate runs; tokens split on commas
-  // then whitespace; extra coordinates beyond x y are ignored).
-  // ------------------------------------------------------------------
-
-  private val Num = "(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)"
-  private val PointCoordP = Pattern.compile(s"POINT\\s*\\(\\s*$Num\\s+$Num\\s*\\)")
-  private val InnerP = Pattern.compile("\\(([^()]+)\\)")
-  private val PointP = Pattern.compile("^\\s*POINT\\s*\\(")
-  private val MultiPointP = Pattern.compile("^\\s*MULTIPOINT\\s*\\(")
-  private val LineP = Pattern.compile("^\\s*(LINESTRING|MULTILINESTRING)\\s*\\(")
-  private val PolyP = Pattern.compile("^\\s*(POLYGON|MULTIPOLYGON)\\s*\\(")
-  private val KnownP = Pattern.compile("^\\s*(POINT|MULTIPOINT|LINESTRING|" +
+  private val KindP = Pattern.compile("^\\s*(POINT|MULTIPOINT|LINESTRING|" +
     "MULTILINESTRING|POLYGON|MULTIPOLYGON)\\s*\\(")
 
-  /** Coordinate runs as flat (x0,y0,x1,y1,…) arrays, one per innermost
-    * parenthesis group; null when any coordinate fails to parse
-    * (poisons the relation to null, like the Column cast did). */
-  private[plans] def parseParts(s: String): Array[Array[Double]] = {
-    val m = InnerP.matcher(s)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-    while (m.find()) {
-      val toks = m.group(1).split(",")
-      val part = new Array[Double](toks.length * 2)
-      var i = 0
-      while (i < toks.length) {
-        val xy = toks(i).trim.split("\\s+")
-        if (xy.length < 2) return null
-        try {
-          part(2 * i) = java.lang.Double.parseDouble(xy(0))
-          part(2 * i + 1) = java.lang.Double.parseDouble(xy(1))
-        } catch { case _: NumberFormatException => return null }
-        i += 1
-      }
-      parts += part
-    }
-    parts.toArray
+  /** The recognized geometry keyword a WKT literal starts with, else
+    * null (`EMPTY` forms included: they have no coordinate list). */
+  private def kind(wkt: String): String = {
+    val m = KindP.matcher(GeomConstruct.stripCrs(wkt))
+    if (m.find()) m.group(1) else null
   }
 
-  /** The constant side: a POLYGON/MULTIPOLYGON with the ring edge
-    * list, bbox, and distinct vertex witnesses precomputed. Built once
-    * per plan for FILTER literals; rebuilt per row for polygon columns
-    * (the tokenizer is a single pass, still far cheaper than the old
-    * interpreted HOF chain). Null for non-polygon/garbage input. */
-  final class ConstPoly(val rings: Array[Array[Double]]) {
-    // bbox over all ring vertices
-    var minX: Double = Double.PositiveInfinity
-    var maxX: Double = Double.NegativeInfinity
-    var minY: Double = Double.PositiveInfinity
-    var maxY: Double = Double.NegativeInfinity
-    rings.foreach { r =>
-      var i = 0
-      while (i < r.length) {
-        val x = r(i); val y = r(i + 1)
-        if (x < minX) minX = x; if (x > maxX) maxX = x
-        if (y < minY) minY = y; if (y > maxY) maxY = y
-        i += 2
-      }
-    }
-    /** Distinct ring vertices (closing duplicates dropped). */
-    val verts: Array[Double] = {
-      val seen = scala.collection.mutable.LinkedHashSet.empty[(Double, Double)]
-      rings.foreach { r =>
-        var i = 0
-        while (i < r.length - 2) { seen += ((r(i), r(i + 1))); i += 2 }
-      }
-      seen.toArray.flatMap { case (x, y) => Array(x, y) }
-    }
+  /** The constant side: a POLYGON/MULTIPOLYGON's even-odd region,
+    * prepared for repeated evaluation. */
+  final class ConstPoly(region: Geometry) {
+    private val prepared = RelateNG.prepare(region)
+
+    /** `relation(row, region)`. RelateNG evaluates
+      * `predicate(region, row)`, so `within` is asked as contains. */
+    def holds(relation: String, row: Geometry): Boolean =
+      prepared.evaluate(row, predicate(relation))
   }
 
-  /** Parse + precompute the constant side; null when not a
+  /** A fresh predicate per evaluation: they accumulate state. */
+  private def predicate(relation: String): TopologyPredicate =
+    relation match {
+      case "within" => RelatePredicate.contains()
+      case "intersects" => RelatePredicate.intersects()
+      case "disjoint" => RelatePredicate.disjoint()
+      case "touches" => RelatePredicate.touches()
+      case "overlaps" => RelatePredicate.overlaps()
+      case "equals" => RelatePredicate.equalsTopo()
+      case "crosses" => RelatePredicate.crosses()
+    }
+
+  /** Read + prepare the constant side; null when not a
     * (MULTI)POLYGON or coordinates fail. Ring closure is NOT enforced
-    * here (the Column `within` never enforced it for polygon columns);
-    * the FILTER-literal builders validate closure loudly on the driver
-    * before constructing the expression. */
+    * here (unclosed rings are closed); the FILTER-literal builders
+    * validate closure loudly on the driver before constructing the
+    * expression. */
   def constPoly(wkt: String): ConstPoly = {
-    if (!PolyP.matcher(wkt).find()) return null
-    val rings = parseParts(wkt)
-    if (rings == null || rings.isEmpty || rings.exists(_.length < 4)) null
-    else new ConstPoly(rings)
-  }
-
-  // ------------------------------------------------------------------
-  // Geometry primitives — formulas op-for-op the Column composition.
-  // ------------------------------------------------------------------
-
-  /** Even-odd ray cast over consecutive-vertex edges of every part.
-    * Bit 0: odd crossing parity (inside); bit 1: on-edge contact. */
-  def rayCast(px: Double, py: Double, parts: Array[Array[Double]]): Int = {
-    var c = 0
-    var onEdge = false
-    var p = 0
-    while (p < parts.length) {
-      val r = parts(p)
-      var i = 0
-      while (i < r.length - 2) {
-        val ax = r(i); val ay = r(i + 1)
-        val bx = r(i + 2); val by = r(i + 3)
-        if (((ay > py) != (by > py)) &&
-          px < (bx - ax) * (py - ay) / (by - ay) + ax) c += 1
-        if ((bx - ax) * (py - ay) - (by - ay) * (px - ax) == 0d &&
-          px >= math.min(ax, bx) && px <= math.max(ax, bx) &&
-          py >= math.min(ay, by) && py <= math.max(ay, by)) onEdge = true
-        i += 2
-      }
-      p += 1
-    }
-    (c % 2) | (if (onEdge) 2 else 0)
-  }
-
-  private def orient(px: Double, py: Double, qx: Double, qy: Double,
-      rx: Double, ry: Double): Double =
-    math.signum((qx - px) * (ry - py) - (qy - py) * (rx - px))
-
-  /** Any row-edge × const-ring-edge crossing; `proper` requires all
-    * four orientation signs nonzero (interior-point crossing).
-    * `private[plans]`: GeomConstruct reuses it as the non-crossing
-    * contract check on overlay outputs (ADVICE r12). */
-  private[plans] def anyEdgeCross(parts: Array[Array[Double]],
-      rings: Array[Array[Double]], proper: Boolean): Boolean = {
-    var p = 0
-    while (p < parts.length) {
-      val e = parts(p)
-      var i = 0
-      while (i < e.length - 2) {
-        val ax = e(i); val ay = e(i + 1); val bx = e(i + 2); val by = e(i + 3)
-        var q = 0
-        while (q < rings.length) {
-          val r = rings(q)
-          var j = 0
-          while (j < r.length - 2) {
-            val cx = r(j); val cy = r(j + 1)
-            val dx = r(j + 2); val dy = r(j + 3)
-            val o1 = orient(ax, ay, bx, by, cx, cy)
-            val o2 = orient(ax, ay, bx, by, dx, dy)
-            val o3 = orient(cx, cy, dx, dy, ax, ay)
-            val o4 = orient(cx, cy, dx, dy, bx, by)
-            if (o1 != o2 && o3 != o4 &&
-              (!proper || (o1 != 0d && o2 != 0d && o3 != 0d && o4 != 0d)))
-              return true
-            j += 2
-          }
-          q += 1
-        }
-        i += 2
-      }
-      p += 1
-    }
-    false
-  }
-
-  /** finish codes for the point-set tests. */
-  private final val InOrOn = 0   // inside || onEdge
-  private final val OnOnly = 1   // onEdge
-  private final val StrictIn = 2 // inside && !onEdge
-  private final val StrictOut = 3 // !inside && !onEdge
-
-  private def finish(mask: Int, code: Int): Boolean = {
-    val in = (mask & 1) == 1
-    val on = (mask & 2) == 2
-    code match {
-      case InOrOn => in || on
-      case OnOnly => on
-      case StrictIn => in && !on
-      case StrictOut => !in && !on
-    }
-  }
-
-  /** Some row vertex satisfying `code` against the const rings. */
-  private def anyRowVertex(parts: Array[Array[Double]],
-      rings: Array[Array[Double]], code: Int): Boolean = {
-    var p = 0
-    while (p < parts.length) {
-      val r = parts(p)
-      var i = 0
-      while (i < r.length) {
-        if (finish(rayCast(r(i), r(i + 1), rings), code)) return true
-        i += 2
-      }
-      p += 1
-    }
-    false
-  }
-
-  /** Some flat-witness-array point satisfying `code` vs row parts. */
-  private def anyWitness(ws: Array[Double],
-      parts: Array[Array[Double]], code: Int): Boolean = {
-    var i = 0
-    while (i < ws.length) {
-      if (finish(rayCast(ws(i), ws(i + 1), parts), code)) return true
-      i += 2
-    }
-    false
-  }
-
-  private def bboxOverlap(parts: Array[Array[Double]], cp: ConstPoly): Boolean = {
-    var any = false
-    var minX = Double.PositiveInfinity; var maxX = Double.NegativeInfinity
-    var minY = Double.PositiveInfinity; var maxY = Double.NegativeInfinity
-    parts.foreach { r =>
-      var i = 0
-      while (i < r.length) {
-        any = true
-        val x = r(i); val y = r(i + 1)
-        if (x < minX) minX = x; if (x > maxX) maxX = x
-        if (y < minY) minY = y; if (y > maxY) maxY = y
-        i += 2
-      }
-    }
-    any && minX <= cp.maxX && maxX >= cp.minX &&
-      minY <= cp.maxY && maxY >= cp.minY
-  }
-
-  // ------------------------------------------------------------------
-  // Relations.
-  // ------------------------------------------------------------------
-
-  private def pointMask(g: String, rings: Array[Array[Double]]): Integer = {
-    val m = PointCoordP.matcher(g)
-    if (!m.find()) return null
-    val px = java.lang.Double.parseDouble(m.group(1))
-    val py = java.lang.Double.parseDouble(m.group(2))
-    Integer.valueOf(rayCast(px, py, rings))
-  }
-
-  /** sfIntersects legs for the non-POINT shapes (dispatch already
-    * settled); parts parsed. Contact is proven by a row vertex
-    * inside/on the const rings, a const vertex inside/on the row
-    * geometry (parity only meaningful against closed rings — the
-    * on-edge leg alone serves open curves), or a crossing edge pair. */
-  private def interShaped(g: String, parts: Array[Array[Double]],
-      cp: ConstPoly): Boolean = {
-    if (!bboxOverlap(parts, cp)) return false
-    val multiPoint = MultiPointP.matcher(g).find()
-    val line = !multiPoint && LineP.matcher(g).find()
-    val poly = !multiPoint && !line && PolyP.matcher(g).find()
-    if (!multiPoint && !line && !poly) return false
-    if (anyRowVertex(parts, cp.rings, InOrOn)) return true
-    if (multiPoint) return false
-    val constHit =
-      anyWitness(cp.verts, parts, if (poly) InOrOn else OnOnly)
-    constHit || anyEdgeCross(parts, cp.rings, proper = false)
-  }
-
-  /** Overlay-face sampler — the EXACT decision core for interior
-    * overlap and containment over arbitrary even-odd regions (holed,
-    * multi-part). The edges of both regions partition the plane into
-    * open faces on which membership in each region is constant. Bands
-    * between consecutive CRITICAL ordinates (every vertex of either
-    * region plus every subject-edge × region-edge intersection) contain
-    * no criticals, so inside a band every edge crosses the full band
-    * height and every face-component meets the band's mid scanline;
-    * sampling the midpoints of consecutive x-crossings therefore
-    * visits EVERY face (completeness), and each sample avoids all
-    * edges (soundness of the strict classifications). Returns whether
-    * some face satisfies `codeS` against the subject AND `codeR`
-    * against the region; bands are clipped to the subject's y-range —
-    * faces outside it cannot be strictly inside the subject. */
-  private def overlayExists(subject: Array[Array[Double]],
-      region: Array[Array[Double]], codeS: Int, codeR: Int): Boolean = {
-    var sMinY = Double.PositiveInfinity; var sMaxY = Double.NegativeInfinity
-    subject.foreach { r =>
-      var i = 1
-      while (i < r.length) {
-        if (r(i) < sMinY) sMinY = r(i)
-        if (r(i) > sMaxY) sMaxY = r(i)
-        i += 2
-      }
-    }
-    if (sMinY >= sMaxY) return false
-    val ys = scala.collection.mutable.SortedSet(sMinY, sMaxY)
-    def addVerts(parts: Array[Array[Double]]): Unit =
-      parts.foreach { r =>
-        var i = 1
-        while (i < r.length) {
-          if (r(i) > sMinY && r(i) < sMaxY) ys += r(i)
-          i += 2
-        }
-      }
-    addVerts(subject); addVerts(region)
-    // subject-edge × region-edge intersection ordinates
-    subject.foreach { e =>
-      var i = 0
-      while (i < e.length - 2) {
-        val ax = e(i); val ay = e(i + 1); val bx = e(i + 2); val by = e(i + 3)
-        val rx = bx - ax; val ry = by - ay
-        region.foreach { r =>
-          var j = 0
-          while (j < r.length - 2) {
-            val cx = r(j); val cy = r(j + 1)
-            val sx = r(j + 2) - cx; val sy = r(j + 3) - cy
-            val denom = rx * sy - ry * sx
-            if (denom != 0d) {
-              val qpx = cx - ax; val qpy = cy - ay
-              val t = (qpx * sy - qpy * sx) / denom
-              val u = (qpx * ry - qpy * rx) / denom
-              if (t >= 0d && t <= 1d && u >= 0d && u <= 1d) {
-                val iy = ay + t * ry
-                if (iy > sMinY && iy < sMaxY) ys += iy
-              }
-            }
-            j += 2
-          }
-        }
-        i += 2
-      }
-    }
-    val bands = ys.toArray
-    var b = 0
-    while (b < bands.length - 1) {
-      val midY = (bands(b) + bands(b + 1)) / 2d
-      val xs = scala.collection.mutable.ArrayBuffer.empty[Double]
-      def crossings(parts: Array[Array[Double]]): Unit =
-        parts.foreach { r =>
-          var i = 0
-          while (i < r.length - 2) {
-            val ax = r(i); val ay = r(i + 1)
-            val bx = r(i + 2); val by = r(i + 3)
-            if ((ay > midY) != (by > midY))
-              xs += (bx - ax) * (midY - ay) / (by - ay) + ax
-            i += 2
-          }
-        }
-      crossings(subject); crossings(region)
-      val sorted = xs.sorted
-      var k = 0
-      while (k < sorted.length - 1) {
-        val mx = (sorted(k) + sorted(k + 1)) / 2d
-        if (mx > sorted(k) && mx < sorted(k + 1) &&
-          finish(rayCast(mx, midY, subject), codeS) &&
-          finish(rayCast(mx, midY, region), codeR)) return true
-        k += 1
-      }
-      b += 1
-    }
-    false
-  }
-
-  /** Segment-clipping probe: split each `subject` edge at every
-    * intersection with the `region` boundary (transversal crossings,
-    * vertex touches, collinear-overlap endpoints all contribute
-    * parameters), then test whether SOME sub-segment midpoint
-    * satisfies `code` against the region. Region membership is
-    * constant on sub-segments, so the midpoints classify the whole
-    * boundary exactly:
-    *  - `StrictIn`: a boundary point of one region strictly interior
-    *    to the other — forces interior overlap (interiors are open,
-    *    and every neighborhood of a boundary point meets its own
-    *    interior), and with the vertex witnesses is complete for
-    *    non-containment overlap (boundary∩interior, when non-empty,
-    *    contains a vertex or an open edge sub-arc).
-    *  - `StrictOut`: a boundary escape — its absence (with all
-    *    vertices in-or-on) decides containment EXACTLY, because
-    *    ext(region) is path-connected: an interior point of the
-    *    subject outside the region would force a boundary escape. */
-  private def clipAny(subject: Array[Array[Double]],
-      region: Array[Array[Double]], code: Int): Boolean = {
-    var p = 0
-    while (p < subject.length) {
-      val e = subject(p)
-      var i = 0
-      while (i < e.length - 2) {
-        val ax = e(i); val ay = e(i + 1)
-        val bx = e(i + 2); val by = e(i + 3)
-        val rx = bx - ax; val ry = by - ay
-        val ts = scala.collection.mutable.SortedSet(0d, 1d)
-        var q = 0
-        while (q < region.length) {
-          val r = region(q)
-          var j = 0
-          while (j < r.length - 2) {
-            val cx = r(j); val cy = r(j + 1)
-            val dx = r(j + 2); val dy = r(j + 3)
-            val sx = dx - cx; val sy = dy - cy
-            val denom = rx * sy - ry * sx
-            val qpx = cx - ax; val qpy = cy - ay
-            if (denom != 0d) {
-              val t = (qpx * sy - qpy * sx) / denom
-              val u = (qpx * ry - qpy * rx) / denom
-              if (t >= 0d && t <= 1d && u >= 0d && u <= 1d) ts += t
-            } else if (qpx * ry - qpy * rx == 0d) {
-              val len2 = rx * rx + ry * ry
-              if (len2 != 0d) {
-                val tc = (qpx * rx + qpy * ry) / len2
-                val td = ((dx - ax) * rx + (dy - ay) * ry) / len2
-                if (tc >= 0d && tc <= 1d) ts += tc
-                if (td >= 0d && td <= 1d) ts += td
-              }
-            }
-            j += 2
-          }
-          q += 1
-        }
-        val params = ts.toArray
-        var k = 0
-        while (k < params.length - 1) {
-          val tm = (params(k) + params(k + 1)) / 2d
-          if (finish(rayCast(ax + tm * rx, ay + tm * ry, region), code))
-            return true
-          k += 1
-        }
-        i += 2
-      }
-      p += 1
-    }
-    false
-  }
-
-  /** Interior-overlap decision: a point strictly inside both regions
-    * exists. Cheap sound witnesses first (a strict vertex either way,
-    * a PROPER edge crossing, a clipped-sub-segment midpoint either
-    * way), then the [[overlayExists]] face sampler as the exact
-    * decision — SOUND and COMPLETE for even-odd polygon regions,
-    * holed and multi-part included (r12; closes the r11 "interleaved
-    * combs" completeness bound). */
-  private def interiorsOverlap(parts: Array[Array[Double]],
-      cp: ConstPoly): Boolean = {
-    if (anyRowVertex(parts, cp.rings, StrictIn)) return true
-    if (anyWitness(cp.verts, parts, StrictIn)) return true
-    if (anyEdgeCross(parts, cp.rings, proper = true)) return true
-    if (clipAny(parts, cp.rings, StrictIn)) return true
-    if (clipAny(cp.rings, parts, StrictIn)) return true
-    overlayExists(parts, cp.rings, StrictIn, StrictIn)
-  }
-
-  /** subject-region ⊆ region-closure, exactly: no overlay face is
-    * strictly inside the subject and strictly outside the region
-    * (int(A) ⊆ B̄ ⟺ no in-A face lies in ext(B), and A ⊆ B̄ follows
-    * because B̄ is closed). Cheap sound REJECTS first: a subject
-    * vertex or clipped sub-segment midpoint strictly outside forces a
-    * face escape (boundary points have interior points arbitrarily
-    * close). The plain boundary-subset test is NOT sufficient for
-    * holed regions — a subject whose interior swallows a region hole
-    * keeps its whole boundary inside (the r12 band-vs-annulus case);
-    * the face sampler sees the hole. */
-  private def regionWithin(subject: Array[Array[Double]],
-      region: Array[Array[Double]]): Boolean = {
-    var p = 0
-    while (p < subject.length) {
-      val r = subject(p)
-      var i = 0
-      while (i < r.length) {
-        if (!finish(rayCast(r(i), r(i + 1), region), InOrOn)) return false
-        i += 2
-      }
-      p += 1
-    }
-    if (clipAny(subject, region, StrictOut)) return false
-    !overlayExists(subject, region, StrictIn, StrictOut)
-  }
-
-  private def totalVerts(parts: Array[Array[Double]]): Int = {
-    var n = 0; var p = 0
-    while (p < parts.length) { n += parts(p).length / 2; p += 1 }
-    n
+    val k = kind(wkt)
+    if (k != "POLYGON" && k != "MULTIPOLYGON") return null
+    val g = GeomConstruct.read(wkt)
+    if (g == null) null else new ConstPoly(g)
   }
 
   /** Full relation dispatch. Returns null on coordinate-parse poison
     * (except disjoint, where unparseable is false — "neither"). */
   def relate(relation: String, g: String, cp: ConstPoly): java.lang.Boolean = {
-    val isPoint = PointP.matcher(g).find()
-    relation match {
-      case "within" =>
-        // non-POINT rows poison to null (the Column form's point regex
-        // returned null and castPoint propagated it) — never false,
-        // matching the pre-native behavior bit-for-bit
-        val mask = pointMask(g, cp.rings)
-        if (mask == null) null
-        else java.lang.Boolean.valueOf((mask.intValue() & 1) == 1)
-      case "intersects" =>
-        if (isPoint) {
-          val mask = pointMask(g, cp.rings)
-          if (mask == null) null
-          else java.lang.Boolean.valueOf(mask.intValue() != 0)
-        } else {
-          val parts = parseParts(g)
-          if (parts == null) null
-          else java.lang.Boolean.valueOf(interShaped(g, parts, cp))
-        }
-      case "disjoint" =>
-        if (!KnownP.matcher(g).find()) java.lang.Boolean.FALSE
-        else {
-          val i = relate("intersects", g, cp)
-          // unparseable coordinates: neither intersecting nor disjoint
-          java.lang.Boolean.valueOf(i != null && !i.booleanValue())
-        }
-      case "touches" =>
-        if (isPoint) {
-          val mask = pointMask(g, cp.rings)
-          if (mask == null) null
-          else java.lang.Boolean.valueOf((mask.intValue() & 2) == 2)
-        } else {
-          val parts = parseParts(g)
-          if (parts == null) return null
-          if (!interShaped(g, parts, cp)) return java.lang.Boolean.FALSE
-          val anyStrict = anyRowVertex(parts, cp.rings, StrictIn)
-          if (MultiPointP.matcher(g).find())
-            java.lang.Boolean.valueOf(!anyStrict)
-          else if (LineP.matcher(g).find())
-            java.lang.Boolean.valueOf(!anyStrict &&
-              !anyEdgeCross(parts, cp.rings, proper = true))
-          else if (PolyP.matcher(g).find())
-            java.lang.Boolean.valueOf(!interiorsOverlap(parts, cp))
-          else java.lang.Boolean.FALSE
-        }
-      case "equals" =>
-        if (!PolyP.matcher(g).find()) java.lang.Boolean.FALSE
-        else {
-          val parts = parseParts(g)
-          if (parts == null) return null
-          // mutual boundary containment ⟺ identical closed regions
-          java.lang.Boolean.valueOf(totalVerts(parts) >= 4 &&
-            regionWithin(parts, cp.rings) &&
-            regionWithin(cp.rings, parts))
-        }
-      case "crosses" =>
-        if (!LineP.matcher(g).find()) java.lang.Boolean.FALSE
-        else {
-          val parts = parseParts(g)
-          if (parts == null) return null
-          java.lang.Boolean.valueOf(
-            anyEdgeCross(parts, cp.rings, proper = true) ||
-              (anyRowVertex(parts, cp.rings, StrictIn) &&
-                anyRowVertex(parts, cp.rings, StrictOut)))
-        }
-      case "overlaps" =>
-        if (!PolyP.matcher(g).find()) java.lang.Boolean.FALSE
-        else {
-          val parts = parseParts(g)
-          if (parts == null) return null
-          if (!interShaped(g, parts, cp) || !interiorsOverlap(parts, cp))
-            return java.lang.Boolean.FALSE
-          java.lang.Boolean.valueOf(
-            !regionWithin(parts, cp.rings) &&
-              !regionWithin(cp.rings, parts))
-        }
+    val k = kind(g)
+    val applies = relation match {
+      case "within" => k == "POINT"
+      case "equals" | "overlaps" => k == "POLYGON" || k == "MULTIPOLYGON"
+      case "crosses" => k == "LINESTRING" || k == "MULTILINESTRING"
+      case _ => k != null
     }
+    if (!applies) return if (relation == "within") null else java.lang.Boolean.FALSE
+    val geom = GeomConstruct.read(g)
+    if (geom != null) java.lang.Boolean.valueOf(cp.holds(relation, geom))
+    else if (relation == "disjoint") java.lang.Boolean.FALSE
+    else null
   }
 
   val builder: Seq[Expression] => Expression = { args =>
@@ -665,23 +189,13 @@ object SfRelate {
       s"graft_sf_relate takes (relation, geomWkt, otherWkt); got ${args.length}")
     SfRelate(args(0), args(1), args(2))
   }
-
-  /** Programmatic per-session registration so plain sessions (Bench,
-    * Verify, the driver's) get the function without the
-    * `spark.sql.extensions` config; idempotent. [[GraftExtensions]]
-    * registers the same builder for extension-configured sessions. */
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_sf_relate"),
-      new ExpressionInfo(classOf[SfRelate].getName, "graft_sf_relate"),
-      builder)
 }
 
 /** `graft_wkt_bbox(wkt)` → `struct<minx,miny,maxx,maxy:double>` — the
-  * bounding box of any WKT geometry's coordinate runs (same tokenizer
-  * as [[SfRelate]]); null for unparseable/empty input. The grid-cover
-  * key extractor behind [[SpatialRelateJoinRewrite]]: a geometry's
-  * cell cover is the cross product of the floored bbox ranges. */
+  * bounding box of any WKT geometry's coordinates; null for
+  * unparseable/empty input. The grid-cover key extractor behind
+  * [[SpatialRelateJoinRewrite]]: a geometry's cell cover is the cross
+  * product of the floored bbox ranges. */
 case class WktBbox(child: Expression)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
@@ -725,24 +239,11 @@ object WktBbox {
     StructField("maxy", DoubleType, nullable = false)))
 
   def compute(wkt: String): org.apache.spark.sql.catalyst.InternalRow = {
-    val parts = SfRelate.parseParts(wkt)
-    if (parts == null || parts.isEmpty) return null
-    var minX = Double.PositiveInfinity; var maxX = Double.NegativeInfinity
-    var minY = Double.PositiveInfinity; var maxY = Double.NegativeInfinity
-    var any = false
-    parts.foreach { r =>
-      var i = 0
-      while (i < r.length) {
-        any = true
-        val x = r(i); val y = r(i + 1)
-        if (x < minX) minX = x; if (x > maxX) maxX = x
-        if (y < minY) minY = y; if (y > maxY) maxY = y
-        i += 2
-      }
-    }
-    if (!any) null
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](minX, minY, maxX, maxY))
+    val g = GeomConstruct.parse(wkt)
+    if (g == null || g.isEmpty) return null
+    val e = g.getEnvelopeInternal
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      Array[Any](e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
   }
 
   val builder: Seq[Expression] => Expression = { args =>
@@ -750,10 +251,4 @@ object WktBbox {
       s"graft_wkt_bbox takes (wkt); got ${args.length}")
     WktBbox(args(0))
   }
-
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_wkt_bbox"),
-      new ExpressionInfo(classOf[WktBbox].getName, "graft_wkt_bbox"),
-      builder)
 }

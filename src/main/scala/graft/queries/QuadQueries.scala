@@ -1576,8 +1576,8 @@ object QuadQueries extends QueryCatalog {
     }),
 
     // GeoSPARQL geof:sfWithin (r9) — point-in-polygon as a bare
-    // boolean FILTER over the wktLiteral column: an even-odd ray cast
-    // in native HOFs (GeoFunctions.within), per-row, shuffle-free.
+    // boolean FILTER over the wktLiteral column: the even-odd rule in
+    // the native relation (GeoFunctions.within), per-row, shuffle-free.
     // The polygon is a convex diamond chosen OFF the integer geocode
     // lattice so the open-interior semantics are unambiguous; the
     // oracle states the same diamond as its |dx|/a + |dy|/b < 1

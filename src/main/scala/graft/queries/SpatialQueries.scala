@@ -728,7 +728,7 @@ object SpatialQueries extends QueryCatalog {
         graft.plans.SpatialRelateJoinRewrite
     // newSession has a fresh function registry; the relate builder
     // registers into the ACTIVE session, which is the parent here
-    graft.plans.SfRelate.register(s2)
+    graft.plans.GraftExtensions.register(s2)
     val k = col("c_custkey")
     val x = coord(k, 7919L); val y = coord(k, 104729L)
     def pt(px: Column, py: Column): Column =
@@ -761,7 +761,7 @@ object SpatialQueries extends QueryCatalog {
   // ====================================================================
   // Constructive geometry (r12): the GeoSPARQL §8.7 non-topological
   // functions — envelope / convexHull / getSRID / boundary and the
-  // even-odd ring-algebra set ops (graft.plans.GeomConstruct). All
+  // even-odd set ops (graft.plans.GeomConstruct). All
   // geometries below are synthesized on INTEGER coordinates so the
   // canonical WKT output strings replay in DuckDB with integer string
   // concatenation (the canonical-serialization contract: CCW rings
@@ -912,13 +912,11 @@ object SpatialQueries extends QueryCatalog {
 
   /** CONCAVE × CONCAVE constructive overlay (r13 — VERDICT r12 Missing
     * #1, the cadastral parcel ∩ zone shape): a per-customer L-shaped
-    * parcel clipped by the constant comb region, both concave, so
-    * every row takes the band-decomposition path the fast convex clip
-    * cannot serve. The oracle decomposes both operands into their
-    * generating rectangles (the shapes are rectilinear by
-    * construction) and sums pairwise rectangle overlaps — a closed
-    * form that is exact in integers, independent of the engine's
-    * arrangement machinery. */
+    * parcel clipped by the constant comb region, both concave. The
+    * oracle decomposes both operands into their generating rectangles
+    * (the shapes are rectilinear by construction) and sums pairwise
+    * rectangle overlaps — a closed form that is exact in integers,
+    * independent of the engine's overlay. */
   private def geomIntersectionConcave(s: SparkSession,
       dir: String): DataFrame = {
     val k = col("c_custkey")
@@ -938,10 +936,10 @@ object SpatialQueries extends QueryCatalog {
       .orderBy(col("qid"))
   }
 
-  /** geof:intersection, compared LEXICALLY: the Sutherland–Hodgman clip
-    * of the row square against the constant rectangle must canonicalize
-    * to exactly the min/max-corner rectangle the oracle string-builds
-    * (touch-only pairs degrade to zero-area rings → POLYGON EMPTY). */
+  /** geof:intersection, compared LEXICALLY: the overlay of the row
+    * square and the constant rectangle must canonicalize to exactly the
+    * min/max-corner rectangle the oracle string-builds (touch-only pairs
+    * have no areal part → POLYGON EMPTY). */
   private def geomIntersection(s: SparkSession, dir: String): DataFrame = {
     val k = col("c_custkey")
     Tables.customer(s, dir)

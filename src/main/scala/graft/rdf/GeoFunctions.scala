@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   * forms, so Catalyst pushes them like any other row predicate: point
   * extraction is one regexp per coordinate, distance reuses the
   * haversine composition every spatial oracle already pins
-  * ([[graft.functions.GraftFunctions.haversineKm]]), and containment is
-  * an EVEN-ODD ray cast over ALL rings — crossing parity summed across
-  * outer rings and holes classifies hole interiors as outside and
+  * ([[graft.functions.GraftFunctions.haversineKm]]), and containment
+  * follows the EVEN-ODD rule over ALL rings — crossing parity summed
+  * across outer rings and holes classifies hole interiors as outside and
   * island interiors as inside with one uniform rule (the classic
   * even-odd fill rule; no per-ring bookkeeping). No UDFs, no driver
   * state, scale-independent.
@@ -127,31 +127,27 @@ object GeoFunctions {
   // Simple-feature relations. Each builder validates any constant
   // polygon loudly on the driver (parseRings: closed rings, >=4
   // vertices), then compiles to ONE native [[graft.plans.SfRelate]]
-  // call — a single WKT tokenizer pass plus primitive loops per row,
-  // inside whole-stage codegen (PERF.md #31; the prior composed-HOF
-  // formulation evaluated interpreted with no CSE and re-parsed the
-  // WKT at every sub-predicate). Semantics, witnesses, and the
-  // documented completeness bounds live with the implementation:
-  // [[graft.plans.SfRelate]].
+  // call inside whole-stage codegen (PERF.md #31). Semantics live with
+  // the implementation: [[graft.plans.SfRelate]].
   // ====================================================================
 
   // ====================================================================
   // Constructive (non-topological) functions — geof:envelope /
   // geof:boundary / geof:convexHull / geof:getSRID and the even-odd
-  // ring-algebra set ops. Each compiles to one native expression
+  // set ops. Each compiles to one native expression
   // ([[graft.plans.GeomConstruct]] / [[graft.plans.GeomOverlay]]);
-  // semantics, completeness bounds, and the canonical serialization
-  // contract are documented there.
+  // semantics and the canonical serialization contract are documented
+  // there.
   // ====================================================================
 
   private def constructCall(op: String, name: String, g: Column): Column = {
-    graft.plans.GeomConstruct.register(
+    graft.plans.GraftExtensions.register(
       org.apache.spark.sql.SparkSession.active)
     call_function(name, g.cast("string"))
   }
 
   private def overlayCall(name: String, a: Column, b: Column): Column = {
-    graft.plans.GeomConstruct.register(
+    graft.plans.GraftExtensions.register(
       org.apache.spark.sql.SparkSession.active)
     call_function(name, a.cast("string"), b.cast("string"))
   }
@@ -165,7 +161,7 @@ object GeoFunctions {
   def boundaryGeom(g: Column): Column =
     constructCall("boundary", "graft_st_boundary", g)
 
-  /** `geof:convexHull(g)` — monotone-chain hull of any WKT literal. */
+  /** `geof:convexHull(g)` — convex hull of any WKT literal. */
   def convexHull(g: Column): Column =
     constructCall("convex_hull", "graft_st_convex_hull", g)
 
@@ -174,33 +170,31 @@ object GeoFunctions {
   def getSrid(g: Column): Column =
     constructCall("srid", "graft_st_srid", g)
 
-  /** `geof:intersection(a, b)` — exact for any even-odd operand against
-    * a convex-ringed one; null past that bound (see GeomConstruct). */
+  /** `geof:intersection(a, b)` of the two even-odd regions. */
   def intersection(a: Column, b: Column): Column =
     overlayCall("graft_st_intersection", a, b)
 
-  /** `geof:union(a, b)` — A ⊕ B ⊕ (A∩B) in the ring algebra. */
+  /** `geof:union(a, b)` of the two even-odd regions. */
   def unionGeom(a: Column, b: Column): Column =
     overlayCall("graft_st_union", a, b)
 
-  /** `geof:difference(a, b)` — A ⊕ (A∩B) in the ring algebra. */
+  /** `geof:difference(a, b)` of the two even-odd regions. */
   def differenceGeom(a: Column, b: Column): Column =
     overlayCall("graft_st_difference", a, b)
 
-  /** `geof:symDifference(a, b)` — ring concatenation: exact for
-    * arbitrary even-odd operands. */
+  /** `geof:symDifference(a, b)` of the two even-odd regions. */
   def symDifference(a: Column, b: Column): Column =
     overlayCall("graft_st_symdifference", a, b)
 
   /** `geof:buffer(g, r, units)` (r13 — the reference's
     * distance-threshold road match, etl_lalf_road_qrt_spatial_match):
     * dilation by the inscribed Pythagorean 20-gon disk —
-    * [[graft.plans.GeomBuffer]]. The ring algebra is PLANAR: uom:degree
+    * [[graft.plans.GeomBuffer]]. The buffer is PLANAR: uom:degree
     * buffers in the coordinates' own unit under CRS84; uom:metre (r14)
     * goes through [[bufferGeomMetres]]'s local equirectangular
     * projection. */
   def bufferGeom(g: Column, r: Column): Column = {
-    graft.plans.GeomConstruct.register(
+    graft.plans.GraftExtensions.register(
       org.apache.spark.sql.SparkSession.active)
     call_function("graft_st_buffer", g.cast("string"), r.cast("double"))
   }
@@ -212,7 +206,7 @@ object GeoFunctions {
     * as the degree form (a constant road's metric buffer folds once
     * for the whole scan). */
   def bufferGeomMetres(g: Column, r: Column): Column = {
-    graft.plans.GeomConstruct.register(
+    graft.plans.GraftExtensions.register(
       org.apache.spark.sql.SparkSession.active)
     call_function("graft_st_buffer_m", g.cast("string"), r.cast("double"))
   }
@@ -237,7 +231,7 @@ object GeoFunctions {
     constructCall("centroid", "graft_st_centroid", g)
 
   private def relateCall(rel: String, geom: Column, other: Column): Column = {
-    graft.plans.SfRelate.register(
+    graft.plans.GraftExtensions.register(
       org.apache.spark.sql.SparkSession.active)
     call_function("graft_sf_relate", lit(rel), geom.cast("string"),
       other.cast("string"))

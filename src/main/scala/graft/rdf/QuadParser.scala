@@ -63,8 +63,7 @@ object QuadParser {
     * match); term classification and body strips are plain string
     * expressions. */
   def parse(lines: DataFrame): DataFrame = {
-    graft.plans.NtUnescape.register(lines.sparkSession)
-    graft.plans.NqTerms.register(lines.sparkSession)
+    graft.plans.GraftExtensions.register(lines.sparkSession)
     import graft.model.TermKind
     lines
       .select(call_function("graft_nq_terms", col("value")).as("t"))
@@ -100,7 +99,7 @@ object QuadParser {
   /** Data lines that fail the statement grammar (blank/comment lines are
     * legal, never rejects). Empty ⇔ [[parse]] was lossless on this input. */
   def rejects(lines: DataFrame): DataFrame = {
-    graft.plans.NqTerms.register(lines.sparkSession)
+    graft.plans.GraftExtensions.register(lines.sparkSession)
     lines.filter(!isBlankOrComment(col("value")) &&
       call_function("graft_nq_terms", col("value")).isNull)
   }

@@ -61,7 +61,7 @@ import org.apache.spark.sql.functions._
  *   [FILTER(geof:sfWithin(?w, "POLYGON…") | geof:sfContains(…))]
  *                                           (bare boolean calls — the
  *                                            GeoSPARQL point-in-polygon
- *                                            tests, native-HOF ray cast)
+ *                                            tests, native SfRelate)
  *   [FILTER [NOT] EXISTS { triples }]
   *   [VALUES ?v { "lit" <iri> … }]
   * }
@@ -1084,7 +1084,7 @@ object SparqlParser {
       GeoFunctions.distance(bindCol(g1), bindCol(g2), units)
     // GeoSPARQL non-topological (constructive) functions (r12):
     // geof:envelope/boundary/convexHull/getSRID and the even-odd
-    // ring-algebra set ops — native expressions, constant operands
+    // set ops — native expressions, constant operands
     // fold at optimization time (GeomConstruct/GeomOverlay)
     case BCall(GeoFunctions.EnvelopeFn, Seq(g)) =>
       GeoFunctions.envelope(bindCol(g))
@@ -1103,7 +1103,7 @@ object SparqlParser {
     case BCall(GeoFunctions.SymDifferenceFn, Seq(a, b)) =>
       GeoFunctions.symDifference(bindCol(a), bindCol(b))
     // geof:buffer(g, r, units) — planar dilation in uom:degree (the
-    // ring algebra's coordinate unit under CRS84); uom:metre (r14)
+    // coordinates' own unit under CRS84); uom:metre (r14)
     // routes through the local equirectangular projection at the
     // geometry's own latitude
     case BCall(GeoFunctions.BufferFn, Seq(g, r, BStr(units))) =>

@@ -233,6 +233,50 @@ class GeomConstructSpec extends AnyFunSuite with SparkTestBase {
     assert(m("area", "LINESTRING(0 0, 5 5)") == 0.0)
     assert(m("area", "POINT(1 1)") == 0.0)
     assert(m("area", "junk") == null)
+    // ring lists JTS reads as INVALID still relate and measure by the
+    // even-odd rule. Each region is a union of unit cells, so the
+    // membership oracle decides point-within, and a probe square
+    // straddling the grid line x = i in row j intersects the region iff
+    // either neighbouring cell is in it, and overlaps it iff exactly one
+    // is (both as the row and as the constant operand)
+    def sq(x1: Int, y1: Int, x2: Int, y2: Int): String =
+      s"POLYGON(($x1 $y1, $x2 $y1, $x2 $y2, $x1 $y2, $x1 $y1))"
+    def rel(r: String, g: String, p: String): Boolean =
+      SfRelate.relate(r, g, SfRelate.constPoly(p)) == true
+    val (a, b) = (sq(0, 0, 2, 2), sq(1, 1, 3, 3))
+    val (outer, hole) = (sq(0, 0, 10, 10), sq(2, 2, 8, 8))
+    val invalid: Seq[(String, (Double, Double) => Boolean, Double)] = Seq(
+      // the crossing-ring list sym_difference(a, b) once emitted
+      ("POLYGON((0 0, 2 0, 2 2, 0 2, 0 0),(1 1, 3 1, 3 3, 1 3, 1 1))",
+        (x, y) => member(x, y, a) ^ member(x, y, b), 6.0),
+      // a hole listed before its shell
+      ("POLYGON((2 2, 8 2, 8 8, 2 8, 2 2),(0 0, 10 0, 10 10, 0 10, 0 0))",
+        (x, y) => member(x, y, outer) && !member(x, y, hole), 64.0),
+      // two MULTIPOLYGON parts sharing the edge x = 2
+      ("MULTIPOLYGON(((0 0, 2 0, 2 2, 0 2, 0 0)),((2 0, 4 0, 4 2, 2 2, 2 0)))",
+        (x, y) => member(x, y, sq(0, 0, 4, 2)), 8.0),
+      // a pair of duplicate rings cancels, leaving the third
+      ("POLYGON((0 0, 4 0, 4 4, 0 4, 0 0),(0 0, 4 0, 4 4, 0 4, 0 0)," +
+        "(1 1, 3 1, 3 3, 1 3, 1 1))",
+        (x, y) => member(x, y, sq(1, 1, 3, 3)), 4.0),
+      // one self-crossing ring: a figure eight crossing itself at (1, 1)
+      ("POLYGON((0 0, 1 0, 1 2, 2 2, 2 1, 0 1, 0 0))",
+        (x, y) => member(x, y, sq(0, 0, 1, 1)) || member(x, y, sq(1, 1, 2, 2)),
+        2.0))
+    for ((wkt, want, area) <- invalid) {
+      assert(m("area", wkt) == area, wkt)
+      for (i <- -1 to 11; j <- -1 to 10) {
+        val (l, r) = (want(i - 0.5, j + 0.5), want(i + 0.5, j + 0.5))
+        assert(member(i + 0.5, j + 0.5, wkt) == r, s"within ($i,$j) $wkt")
+        val (x1, x2, y1, y2) = (i - 0.25, i + 0.25, j + 0.25, j + 0.75)
+        val probe =
+          s"POLYGON(($x1 $y1, $x2 $y1, $x2 $y2, $x1 $y2, $x1 $y1))"
+        for ((g, p) <- Seq((probe, wkt), (wkt, probe))) {
+          assert(rel("intersects", g, p) == (l || r), s"intersects $g $p")
+          assert(rel("overlaps", g, p) == (l != r), s"overlaps $g $p")
+        }
+      }
+    }
   }
 
   test("length: curve length, polygon boundary length (holes count)") {
@@ -608,7 +652,7 @@ class GeomConstructSpec extends AnyFunSuite with SparkTestBase {
 
   test("SQL surface: the graft_st_* functions register and run inside " +
       "whole-stage codegen") {
-    GeomConstruct.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val row = spark.sql(
       """SELECT
         |  graft_st_envelope('LINESTRING(1 2, 5 4)') AS env,

@@ -91,7 +91,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("signLshBucketSql stays within [0, 2^bits) and is deterministic") {
-    graft.plans.DotProduct.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     for (bits <- Seq(2, 4, 6)) {
       val b = Tables.embeddings(spark, sf)
         .select(expr(VectorSearch.signLshBucketSql("embedding", bits))
@@ -103,7 +103,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfAssignPartitioned == ivfAssign (broadcast vs two-stage argmin)") {
-    graft.plans.DotProduct.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val v = VectorSearch.withNorm(spark, Tables.embeddings(spark, sf),
       col("vec_id"), col("embedding"))
     val cents = VectorSearch.ivfCentroids(v, centroidModulus = 7)
@@ -118,7 +118,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfCentroids: modulus 1 selects the whole relation (ADVICE r5 #1)") {
-    graft.plans.DotProduct.register(spark)
+    graft.plans.GraftExtensions.register(spark)
     val v = VectorSearch.withNorm(spark, Tables.embeddings(spark, sf),
       col("vec_id"), col("embedding"))
     val n = v.count()

@@ -1334,6 +1334,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
   test("r13: BFS and SSSP loops schedule ONE job per round (lazy cut + " +
     "probe action fused)") {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // the excluded jobs are counted too: a run that broadcasts must see
+    // at least one, so a renamed Spark tag fails here instead of
+    // silently counting broadcast builds as actions
+    val broadcastJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -1344,7 +1348,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
         // BroadcastExchangeExec stamps on its build job
         val tags = Option(js.properties)
           .map(_.getProperty("spark.job.tags", "")).getOrElse("")
-        if (!tags.contains("broadcast exchange")) jobs.incrementAndGet()
+        if (tags.contains("broadcast exchange")) broadcastJobs.incrementAndGet()
+        else jobs.incrementAndGet()
       }
     }
     val sc = spark.sparkContext
@@ -1381,6 +1386,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     val ssspJobs = countJobs(graft.SparkEntry.queries("q_graph_sssp")(
       spark, dir))
     assert(ssspJobs <= 8, s"SSSP scheduled $ssspJobs jobs (want ≤ 8)")
+    assert(broadcastJobs.get() > 0,
+      "no job carried the \"broadcast exchange\" tag although the BFS/SSSP " +
+        "frontier and distance vectors broadcast — did Spark rename it?")
   }
 
   test("r13: score-vector broadcast is size-gated — strategy flips " +
