@@ -39,6 +39,18 @@ if [ "${1:-}" != "--allow-dirty" ]; then
   fi
 fi
 
+# One local session builder, and the engine's SQL functions and optimizer
+# rules come from the extension's service file, never per call site.
+# (Tests may read extraOptimizations to assert that it stays empty.)
+builders=$(grep -rl 'SparkSession.builder()' src |
+  grep -vx 'src/main/scala/graft/LocalSession.scala' | tr '\n' ' ')
+[ -z "$builders" ] ||
+  fail "SparkSession.builder() outside graft.LocalSession: $builders"
+hand=$( { grep -rl 'GraftExtensions\.register' src
+  grep -rl 'extraOptimizations' src/main; } | sort -u | tr '\n' ' ')
+[ -z "$hand" ] ||
+  fail "GraftExtensions.register or extraOptimizations in src/: $hand"
+
 sbt -batch compile >/tmp/final_gate_compile.log 2>&1 ||
   { tail -20 /tmp/final_gate_compile.log >&2; fail "sbt compile failed"; }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: a warm-up pass over EVERY query (JIT/codegen/scan
   * caches; itself timed as the fallback estimate), then whole timed
@@ -37,21 +36,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalescing is byte-based; the sketch/pair stages here are
-      // compute-heavy per byte, and coalescing their few-MB shuffles to
-      // one partition serializes minutes of work. Small targets keep the
-      // planned parallelism (32 extra empty tasks cost milliseconds).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(envInt("SPARK_GRAFT_CPUS", 32))
     // Dev-loop filter: SPARK_GRAFT_BENCH_ONLY=<regex> times just the
     // matching queries (the driver never sets it, so round benches are
     // always the full catalog).

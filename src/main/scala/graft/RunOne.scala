@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one named query from SparkEntry.queries with timing —
   * `sbt "runMain graft.RunOne q_dedup_minhash /root/testdata/sf0.1 3"`.
@@ -10,17 +9,7 @@ object RunOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536")
-      .config("spark.ui.enabled", sys.env.getOrElse("RUNONE_UI", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // JOBLOG=1: per-job wall times (guide §1.1 empirical loop without a
     // UI — tells you whether a query's seconds sit in one big job or in
     // many scheduled little ones).

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
 
 import graft.JsonUtil.jstr
@@ -18,18 +18,7 @@ object Verify {
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
     def selected(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // See Bench: keep compute-heavy small-byte shuffles parallel.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name))

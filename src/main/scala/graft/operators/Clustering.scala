@@ -76,7 +76,6 @@ object Clustering {
       iters: Int): (DataFrame, DataFrame) = {
     require(initModulus >= 1, "initModulus must be >= 1")
     require(iters >= 1, "iters must be >= 1")
-    graft.plans.GraftExtensions.register(v.sparkSession)
     val vv = v.select(col("vec_id"), col("embedding"))
       .repartition(col("vec_id")) // spread the fold math off a one-split scan
       .select(col("vec_id"), col("embedding"),

@@ -44,7 +44,6 @@ object GradientDescent {
     require(iters >= 1, "iters must be >= 1")
     require(lr > 0, "lr must be > 0")
     val session = data.sparkSession
-    graft.plans.GraftExtensions.register(session)
     val d = data.select(col("features").cast("array<double>").as("x"),
       col("y").cast("double").as("y"))
     val dim = d.select(size(col("x")).as("d")).head.getInt(0)

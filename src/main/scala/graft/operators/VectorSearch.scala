@@ -27,7 +27,6 @@ object VectorSearch {
     * can't push the fold into the scan (PERF.md #2). */
   def withNorm(s: SparkSession, emb: DataFrame, id: Column,
       embedding: Column): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     emb
       .select(id.as("vec_id"), embedding.as("embedding"))
       .repartition(col("vec_id")) // spread vector math off a one-split scan
@@ -153,7 +152,6 @@ object VectorSearch {
     * expression and (cos desc, id) tie-break all round-trip exactly. */
   def ivfSearchIndex(s: SparkSession, path: String, queries: DataFrame,
       nprobe: Int = 2, k: Int = 3): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val cents = s.read.parquet(s"$path/centroids")
     val lists = s.read.parquet(s"$path/lists")
     val probes = ivfAssign(queries, cents, nprobe)

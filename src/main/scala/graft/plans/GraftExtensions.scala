@@ -1,20 +1,24 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.DoubleType
 
-/** SparkSessionExtensions entry point (SURVEY §2.12 / builder brief
-  * "registered via SparkSessionExtensions"): native function surface +
-  * the radius-join optimizer rule.
+/** SparkSessionExtensions entry point (SURVEY §2.12): the native
+  * function surface plus the radius-join, relate-join and runtime-bloom
+  * optimizer rules.
   *
-  * Usable both programmatically (`builder.withExtensions(new
-  * GraftExtensions)`) and by config
-  * (`spark.sql.extensions=graft.plans.GraftExtensions`).
+  * Every session gets it once, when the session is built: the provider
+  * is listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * which Spark loads from the classpath into each new session and each
+  * `newSession()` child (`spark.sql.extensions.test.loadFromCp`, on by
+  * default). Naming it in `spark.sql.extensions` still works, but is
+  * redundant on this classpath.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RadiusJoinRewrite)
@@ -34,8 +38,7 @@ object GraftExtensions {
       builder: FunctionBuilder): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
     (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
 
-  /** Every native SQL function, the one list both the extension
-    * injection and [[register]] read. */
+  /** Every native SQL function the extension injects. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     fn("graft_haversine_km", classOf[HaversineKm], args => {
       require(args.length == 4,
@@ -63,18 +66,4 @@ object GraftExtensions {
     GeomConstruct.MeasureNames.map { case (name, op) =>
       fn(name, classOf[GeomMeasure], GeomConstruct.measureBuilder(name, op))
     }
-
-  /** Programmatic registration for sessions built without the
-    * extension (Bench, Verify, RunOne, `newSession()` children):
-    * adds only the functions the session's registry lacks, so calling
-    * it before every use never replaces a registered builder. */
-  def register(s: SparkSession): Unit = {
-    val registry = s.sessionState.functionRegistry
-    registry.synchronized {
-      functions.foreach { case (id, info, builder) =>
-        if (!registry.functionExists(id))
-          registry.registerFunction(id, info, builder)
-      }
-    }
-  }
 }

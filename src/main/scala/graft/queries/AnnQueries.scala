@@ -139,7 +139,6 @@ object AnnQueries extends QueryCatalog {
     // generation AND stage-2 ordering; `slice` keeps the truncation a
     // pure column op — the full vectors never shuffle for stage 1.
     "q_ann_two_stage" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val Coarse = 16
       val v = Tables.embeddings(s, dir)
         .withColumn("e16", slice(col("embedding"), 1, Coarse))
@@ -353,7 +352,6 @@ object AnnQueries extends QueryCatalog {
     // BEFORE use (the q_ann_standardize parity rule) so engine-order
     // float addition can never reach the gated distances.
     "q_ann_centroid_outliers" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"))
       val em = Tables.embeddings(s, dir)
         .join(docs, col("vec_id") === col("doc_id"))
@@ -440,7 +438,6 @@ object AnnQueries extends QueryCatalog {
     //    summation order can't flip a rank; literal rank <= 5 →
     //    WindowGroupLimit.
     "q_ann_pq_adc" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val M = 8; val SubDim = 8; val CM = 50; val QM = 100
       val sub = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding"))

@@ -265,20 +265,14 @@ object JoinQueries extends QueryCatalog {
     // that spots the selective small build side and rewrites the probe
     // scan to pre-filter on a scalar-subquery bloom of the build keys.
     // Runs in a child session (`newSession` shares the SparkContext and
-    // extensions but isolates SQL conf) so enabling the rule — and
-    // thresholds low enough to fire at test SF; the defaults are sized
-    // for the 100 TB regime — cannot leak into sibling queries. Spark's
-    // own runtime filter is disabled in that session so the asserted
-    // bloom is provably this rule's. The oracle is the UNREWRITTEN join:
-    // result identity is the rule's exactness contract.
+    // extensions but isolates SQL conf) so the conf that enables the
+    // rule — and thresholds low enough to fire at test SF; the defaults
+    // are sized for the 100 TB regime — cannot leak into sibling
+    // queries. Spark's own runtime filter is disabled in that session so
+    // the asserted bloom is provably this rule's. The oracle is the
+    // UNREWRITTEN join: result identity is the rule's exactness contract.
     "q_join_bloom_auto" -> ((s, dir) => {
       val s2 = s.newSession()
-      // Per-session registration path for plain (extension-less) sessions —
-      // the public `experimental` hook schedules the rule in the late
-      // "User Provided Optimizers" batch, after constraint inference (the
-      // withExtensions path lands it in the equivalent preCBO slot).
-      s2.experimental.extraOptimizations =
-        s2.experimental.extraOptimizations :+ graft.plans.BloomJoinInject
       s2.conf.set("spark.graft.runtimeBloom.enabled", "true")
       s2.conf.set("spark.graft.runtimeBloom.maxCreationSideBytes",
         (64L * 1024 * 1024).toString)

@@ -335,7 +335,6 @@ object MiningQueries extends QueryCatalog {
     // (conventions verified identical on 3000 random pairs incl. the
     // integer-floored transposition count and the 0.7 boost threshold).
     "q_join_jaro_winkler" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val p = Tables.part(s, dir).select(col("p_partkey"), col("p_name"),
         split(col("p_name"), " ").getItem(0).as("blk"))
       val probes = p.filter(col("p_partkey") % 100 === 0)

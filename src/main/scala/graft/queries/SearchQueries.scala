@@ -275,7 +275,6 @@ object SearchQueries extends QueryCatalog {
         .filter(col("lrank") <= 20)
         .select(col("doc_id"), col("lrank"))
       import graft.operators.VectorSearch.dotSql
-      graft.plans.GraftExtensions.register(s)
       val v = Tables.embeddings(s, dir)
         .withColumn("nrm", sqrt(expr(dotSql("embedding", "embedding"))))
       val q = v.filter(col("vec_id") === 0)

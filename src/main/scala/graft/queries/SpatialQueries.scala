@@ -717,18 +717,11 @@ object SpatialQueries extends QueryCatalog {
     * the reference's `ST_Intersects` join shape), and
     * [[graft.plans.SpatialRelateJoinRewrite]] turns it into the
     * grid-cell cover equi-join with a canonical-cell conjunct
-    * (exactly-once per pair, no DISTINCT). Runs in a child session so
-    * enabling the rule cannot leak into sibling queries. The oracle is
+    * (exactly-once per pair, no DISTINCT). The rule is installed in
+    * every session by [[graft.plans.GraftExtensions]]. The oracle is
     * the same interval restatement as the manual gate: result identity
     * is the rule's exactness contract. */
   private def polyOverlapsAutoJoin(s: SparkSession, dir: String): DataFrame = {
-    val s2 = s.newSession()
-    s2.experimental.extraOptimizations =
-      s2.experimental.extraOptimizations :+
-        graft.plans.SpatialRelateJoinRewrite
-    // newSession has a fresh function registry; the relate builder
-    // registers into the ACTIVE session, which is the parent here
-    graft.plans.GraftExtensions.register(s2)
     val k = col("c_custkey")
     val x = coord(k, 7919L); val y = coord(k, 104729L)
     def pt(px: Column, py: Column): Column =
@@ -736,14 +729,14 @@ object SpatialQueries extends QueryCatalog {
     def ringWkt(x1: Column, y1: Column, x2: Column, y2: Column): Column =
       concat(pt(x1, y1), lit(", "), pt(x2, y1), lit(", "), pt(x2, y2),
         lit(", "), pt(x1, y2), lit(", "), pt(x1, y1))
-    val squares = Tables.customer(s2, dir).select(
+    val squares = Tables.customer(s, dir).select(
         k.as("qid"), (x - 0.3d).as("sx1"), (x + 0.3d).as("sx2"),
         (y - 0.3d).as("sy1"), (y + 0.3d).as("sy2"))
       .withColumn("swkt", concat(lit("POLYGON(("),
         ringWkt(col("sx1"), col("sy1"), col("sx2"), col("sy2")), lit("))")))
       .select(col("qid"), col("swkt"))
     val n = col("n_nationkey")
-    val rects = Tables.nation(s2, dir).select(n,
+    val rects = Tables.nation(s, dir).select(n,
         (((n * 3) % 8).cast("double") - 0.005d).as("a1"),
         (((n * 5) % 8).cast("double") - 0.005d).as("b1"))
       .withColumn("a2", col("a1") + 2.01d)

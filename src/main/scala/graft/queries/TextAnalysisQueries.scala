@@ -481,7 +481,6 @@ object TextAnalysisQueries extends QueryCatalog {
     // normalized strings is hash-gated). Oracle independence: DuckDB
     // normalizes with utf8proc's NFC, a second implementation of TR#15.
     "q_text_nfc_dedup" -> ((s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val d = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"),
           substring(trim(col("text")), 1, 40).as("t"))

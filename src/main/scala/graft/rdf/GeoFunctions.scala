@@ -140,35 +140,29 @@ object GeoFunctions {
   // there.
   // ====================================================================
 
-  private def constructCall(op: String, name: String, g: Column): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  private def constructCall(name: String, g: Column): Column =
     call_function(name, g.cast("string"))
-  }
 
-  private def overlayCall(name: String, a: Column, b: Column): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  private def overlayCall(name: String, a: Column, b: Column): Column =
     call_function(name, a.cast("string"), b.cast("string"))
-  }
 
   /** `geof:envelope(g)` — bounding geometry of any WKT literal. */
   def envelope(g: Column): Column =
-    constructCall("envelope", "graft_st_envelope", g)
+    constructCall("graft_st_envelope", g)
 
   /** `geof:boundary(g)` — OGC boundary (polygon rings as curves, curve
     * mod-2 endpoints as points, empty set for points). */
   def boundaryGeom(g: Column): Column =
-    constructCall("boundary", "graft_st_boundary", g)
+    constructCall("graft_st_boundary", g)
 
   /** `geof:convexHull(g)` — convex hull of any WKT literal. */
   def convexHull(g: Column): Column =
-    constructCall("convex_hull", "graft_st_convex_hull", g)
+    constructCall("graft_st_convex_hull", g)
 
   /** `geof:getSRID(g)` — the literal's embedded `<crs>` prefix, else
     * the GeoSPARQL default CRS84 IRI. */
   def getSrid(g: Column): Column =
-    constructCall("srid", "graft_st_srid", g)
+    constructCall("graft_st_srid", g)
 
   /** `geof:intersection(a, b)` of the two even-odd regions. */
   def intersection(a: Column, b: Column): Column =
@@ -193,11 +187,8 @@ object GeoFunctions {
     * buffers in the coordinates' own unit under CRS84; uom:metre (r14)
     * goes through [[bufferGeomMetres]]'s local equirectangular
     * projection. */
-  def bufferGeom(g: Column, r: Column): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def bufferGeom(g: Column, r: Column): Column =
     call_function("graft_st_buffer", g.cast("string"), r.cast("double"))
-  }
 
   /** `geof:buffer(g, r, uom:metre)` (r14 — VERDICT r13 Missing #2):
     * metric radius via the local equirectangular projection at the
@@ -205,11 +196,8 @@ object GeoFunctions {
     * [[graft.plans.GeomBufferMetres]]. Same constant-folding behavior
     * as the degree form (a constant road's metric buffer folds once
     * for the whole scan). */
-  def bufferGeomMetres(g: Column, r: Column): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def bufferGeomMetres(g: Column, r: Column): Column =
     call_function("graft_st_buffer_m", g.cast("string"), r.cast("double"))
-  }
 
   /** `graft_st_area(g)` — planar even-odd area of a (MULTI)POLYGON WKT
     * (holes subtract, islands add); 0 for points/curves and the empty
@@ -218,24 +206,21 @@ object GeoFunctions {
     * deliberately NOT exposed under `geof:` (GeoSPARQL 1.0 defines no
     * area function; a unit-less planar one would masquerade as one). */
   def areaGeom(g: Column): Column =
-    constructCall("area", "graft_st_area", g)
+    constructCall("graft_st_area", g)
 
   /** `graft_st_length(g)` — planar curve length / polygon boundary
     * length; 0 for points and the empty region. */
   def lengthGeom(g: Column): Column =
-    constructCall("length", "graft_st_length", g)
+    constructCall("graft_st_length", g)
 
   /** `graft_st_centroid(g)` — area-weighted centroid of the even-odd
     * region as a WKT POINT (`POINT EMPTY` for the empty region). */
   def centroidGeom(g: Column): Column =
-    constructCall("centroid", "graft_st_centroid", g)
+    constructCall("graft_st_centroid", g)
 
-  private def relateCall(rel: String, geom: Column, other: Column): Column = {
-    graft.plans.GraftExtensions.register(
-      org.apache.spark.sql.SparkSession.active)
+  private def relateCall(rel: String, geom: Column, other: Column): Column =
     call_function("graft_sf_relate", lit(rel), geom.cast("string"),
       other.cast("string"))
-  }
 
   /** `geof:sfWithin(point, constPolygon)` — POINT strictly inside a WKT
     * POLYGON (any ring count) or MULTIPOLYGON: even-odd crossing parity

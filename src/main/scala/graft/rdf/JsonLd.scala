@@ -36,7 +36,6 @@ object JsonLd {
   /** One expanded node object per (graph, subject); columns
     * `(graph, value)`. Blank-node subjects keep their `_:label` ids. */
   def renderNodes(quads: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(quads.sparkSession)
     def esc(c: Column) = call_function("graft_nt_escape", c)
     val g: Column =
       if (quads.columns.contains("graph")) col("graph")
@@ -87,7 +86,6 @@ object JsonLd {
     * bare `{"@graph":[…]}` object for default-graph nodes; everything
     * sorted. Single-row result — the small-document contract. */
   def renderDocument(quads: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(quads.sparkSession)
     val nodes = renderNodes(quads)
     val graphObjs = nodes.groupBy(col("graph"))
       .agg(sort_array(collect_list(col("value"))).as("ns"))

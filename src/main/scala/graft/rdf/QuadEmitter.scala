@@ -155,7 +155,6 @@ object QuadEmitter {
     // old five-regexp_replace chain the DuckDB oracles still replay
     // (ExtensionsSpec asserts parity); one string walk instead of five
     // regex passes per literal on the serialize hot path
-    graft.plans.GraftExtensions.register(quads.sparkSession)
     val escaped = call_function("graft_nt_escape", v)
     val objectTerm = when(col("objectKind") === graft.model.TermKind.Iri,
         concat(lit("<"), v, lit(">")))
@@ -259,7 +258,6 @@ object QuadEmitter {
   private def turtleTerms(quads: DataFrame,
       prefixes: Seq[(String, String)]): (Column, Column, Column) = {
     val v = col("objectValue")
-    graft.plans.GraftExtensions.register(quads.sparkSession)
     val escaped = call_function("graft_nt_escape", v)
     val objectTerm = when(col("objectKind") === graft.model.TermKind.Iri,
         compactIri(v, prefixes))

@@ -63,7 +63,6 @@ object QuadParser {
     * match); term classification and body strips are plain string
     * expressions. */
   def parse(lines: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(lines.sparkSession)
     import graft.model.TermKind
     lines
       .select(call_function("graft_nq_terms", col("value")).as("t"))
@@ -99,7 +98,6 @@ object QuadParser {
   /** Data lines that fail the statement grammar (blank/comment lines are
     * legal, never rejects). Empty ⇔ [[parse]] was lossless on this input. */
   def rejects(lines: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(lines.sparkSession)
     lines.filter(!isBlankOrComment(col("value")) &&
       call_function("graft_nq_terms", col("value")).isNull)
   }

@@ -6,11 +6,13 @@ import org.apache.spark.sql.DataFrame
   * step every RDF store runs at load time (GraphDB and TDB2 both
   * collect predicate histograms during their bulk import; the
   * reference preloads exactly such a store, README "importrdf
-  * preload"). Collected ONCE per preloaded quad relation — one
-  * aggregation over the already-materialized blocks, driver state is
-  * one small map (one entry per distinct predicate; RDF corpora have
-  * tens of predicates regardless of row count, so this is O(schema),
-  * not O(data), at 100 TB too).
+  * preload"). Collected ONCE per quad relation — one per-predicate
+  * `count` + `countDistinct(subject, objectValue)` aggregation, whose
+  * distinct is a shuffle over the whole relation ([[QuadStore.write]]
+  * runs it at bulk load and persists the result in the store's
+  * sidecar). Driver state is one small map (one entry per distinct
+  * predicate; RDF corpora have tens of predicates regardless of row
+  * count, so this is O(schema), not O(data), at 100 TB too).
   *
   * Two statistics per predicate:
   *

@@ -121,8 +121,11 @@ object QuadStore {
 
   /** Bulk-load: write the quad relation as the partitioned + predicate-
     * clustered parquet layout and persist its predicate statistics
-    * alongside. One predicate-keyed shuffle — the same cost class as
-    * any store's bulk import sort. */
+    * alongside. Two shuffles: the predicate-keyed layout shuffle (the
+    * same cost class as any store's bulk import sort), and the
+    * per-predicate `count` + `countDistinct(subject, objectValue)`
+    * aggregation behind the [[QuadStats]] uniqueness flag, whose
+    * distinct shuffles the whole corpus once more. */
   def write(quads: DataFrame, path: String): Unit =
     write(quads, path, fp = None)
 

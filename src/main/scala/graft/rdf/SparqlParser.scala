@@ -2477,19 +2477,6 @@ object SparqlParser {
   private def executeQuery(quads: DataFrame, q0: Query,
       functions: Map[String, PropertyFunction],
       services: Map[String, DataFrame] = Map.empty): DataFrame = {
-    // A multi-variable boolean FILTER (geof:sfIntersects(?w, ?p) over
-    // two pattern groups) is the GeoSPARQL spatial θ-join; make sure
-    // the executing session carries the grid-cover rewrite so the plan
-    // is a cell-keyed hash join, not a nested loop (r12). The rule
-    // no-ops on every other plan shape; registration is idempotent.
-    if (q0.boolFilters.exists(bindExprVars(_).size >= 2)) {
-      val s = quads.sparkSession
-      if (!s.experimental.extraOptimizations
-          .contains(graft.plans.SpatialRelateJoinRewrite))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+
-            graft.plans.SpatialRelateJoinRewrite
-    }
     // CONSTRUCT dispatches AFTER the solution pipeline below — its
     // WHERE is a full group graph pattern (filters, OPTIONAL, BIND…),
     // so the template instantiates over exactly the solutions SELECT *
@@ -2578,7 +2565,7 @@ object SparqlParser {
       // θ-join, not an accidental cartesian — it evaluates as the
       // cross-product filtered by the relate predicate, which
       // [[graft.plans.SpatialRelateJoinRewrite]] turns into a
-      // grid-cover equi-join in rule-enabled sessions.
+      // grid-cover equi-join.
       val filterEdges = q.boolFilters.map(bindExprVars) ++
         // only EQUALITY-shaped comparison FILTERs fully connect
         // (ADVICE r13): `FILTER(?a = ?b)` is an equi-θ-join Catalyst

@@ -72,7 +72,6 @@ object SparqlResults {
   def tsv(solutions: DataFrame,
       kinds: Map[String, String] = Map.empty,
       orderBy: Seq[Column] = Nil): DataFrame = {
-    graft.plans.GraftExtensions.register(solutions.sparkSession)
     val cols = solutions.columns.toSeq
     def term(n: String): Column = {
       val v = col(n).cast("string")
@@ -166,7 +165,6 @@ object SparqlResults {
   def json(solutions: DataFrame,
       kinds: Map[String, String] = Map.empty,
       orderBy: Seq[Column] = Nil): DataFrame = {
-    graft.plans.GraftExtensions.register(solutions.sparkSession)
     def esc(c: Column) = call_function("graft_nt_escape", c)
     val cols = solutions.columns.toSeq
     val headVars = cols.map(v => "\"" + v + "\"").mkString(",")

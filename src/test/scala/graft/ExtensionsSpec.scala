@@ -1,27 +1,44 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
 import graft.plans.GraftExtensions
 
-/** GraftExtensions: injected SQL function + the radius-join rewrite rule. */
-class ExtensionsSpec extends AnyFunSuite {
+/** GraftExtensions: injected SQL functions + the join rewrite rules,
+  * which every session loads from the classpath service file. */
+class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
 
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+  /** Two small point sets built in `s` and their radius θ-join
+    * (squared distance <= 0.25). */
+  private def radiusJoin(s: SparkSession): (DataFrame, DataFrame, DataFrame) = {
+    import s.implicits._
+    val a = (1 to 200).map(i => (i.toLong, (i % 20) / 2.0, (i % 10) / 2.0))
+      .toDF("aid", "ax", "ay")
+    val b = (1 to 50).map(i => (i.toLong, (i % 15) / 2.0, (i % 7) / 2.0))
+      .toDF("bid", "bx", "by")
+    val d2 = (col("ax") - col("bx")) * (col("ax") - col("bx")) +
+      (col("ay") - col("by")) * (col("ay") - col("by"))
+    (a, b, a.join(b, d2 <= lit(0.25)))
+  }
+
+  private def assertNoNestedLoop(joined: DataFrame): Unit = {
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin") &&
+      !plan.contains("CartesianProduct"),
+      "radius join was not rewritten:\n" + plan)
+  }
+
+  test("a newSession() child gets every function and rule with no " +
+      "registration call") {
+    val child = spark.newSession()
+    val registry = child.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, _, _) =>
+      assert(registry.functionExists(id), s"$id missing in the child session")
+    }
+    assertNoNestedLoop(radiusJoin(child)._3)
   }
 
   test("graft_haversine_km SQL function matches the Column composition") {
@@ -260,19 +277,8 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("radius theta-join is rewritten to a grid-bucketed equi-join") {
-    import spark.implicits._
-    val a = (1 to 200).map(i => (i.toLong, (i % 20) / 2.0, (i % 10) / 2.0))
-      .toDF("aid", "ax", "ay")
-    val b = (1 to 50).map(i => (i.toLong, (i % 15) / 2.0, (i % 7) / 2.0))
-      .toDF("bid", "bx", "by")
-    val d2 = (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-      (col("ay") - col("by")) * (col("ay") - col("by"))
-    val joined = a.join(b, d2 <= lit(0.25))
-
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin") &&
-      !plan.contains("CartesianProduct"),
-      "radius join was not rewritten:\n" + plan)
+    val (a, b, joined) = radiusJoin(spark)
+    assertNoNestedLoop(joined)
 
     // Ground truth from a driver-side nested loop.
     val av = a.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))

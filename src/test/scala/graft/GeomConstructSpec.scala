@@ -652,7 +652,6 @@ class GeomConstructSpec extends AnyFunSuite with SparkTestBase {
 
   test("SQL surface: the graft_st_* functions register and run inside " +
       "whole-stage codegen") {
-    graft.plans.GraftExtensions.register(spark)
     val row = spark.sql(
       """SELECT
         |  graft_st_envelope('LINESTRING(1 2, 5 4)') AS env,

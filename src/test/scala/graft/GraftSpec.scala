@@ -5,13 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per suite via lazy val). */
 trait SparkTestBase { self: AnyFunSuite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
   val sf: String = "/root/testdata/sf0.001"
 }

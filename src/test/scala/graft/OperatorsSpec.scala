@@ -91,7 +91,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("signLshBucketSql stays within [0, 2^bits) and is deterministic") {
-    graft.plans.GraftExtensions.register(spark)
     for (bits <- Seq(2, 4, 6)) {
       val b = Tables.embeddings(spark, sf)
         .select(expr(VectorSearch.signLshBucketSql("embedding", bits))
@@ -103,7 +102,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfAssignPartitioned == ivfAssign (broadcast vs two-stage argmin)") {
-    graft.plans.GraftExtensions.register(spark)
     val v = VectorSearch.withNorm(spark, Tables.embeddings(spark, sf),
       col("vec_id"), col("embedding"))
     val cents = VectorSearch.ivfCentroids(v, centroidModulus = 7)
@@ -118,7 +116,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("ivfCentroids: modulus 1 selects the whole relation (ADVICE r5 #1)") {
-    graft.plans.GraftExtensions.register(spark)
     val v = VectorSearch.withNorm(spark, Tables.embeddings(spark, sf),
       col("vec_id"), col("embedding"))
     val n = v.count()
@@ -1979,7 +1976,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       // groups — the GeoSPARQL spatial θ-join idiom, which the
       // cartesian guard recognizes as a CONNECTING edge (r12); no
       // allowCartesian opt-in needed (and SpatialRelateJoinRewrite
-      // grid-buckets it in rule-enabled sessions)
+      // grid-buckets it)
       val spatialJoin = SparqlParser.execute(quads.union(zones),
         s"""PREFIX geof: <${GeoFunctions.Ns}>
            |SELECT ?r WHERE {
@@ -1988,14 +1985,18 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
            |} ORDER BY ?r""".stripMargin)
       val got = spatialJoin.collect().map(_.getString(0)).toSeq
       assert(got == Seq("r1"))
-      // and the executing session auto-registers the grid-cover
-      // rewrite, so the θ-join plans as a cell-keyed join, never a
-      // nested loop (r12)
+      // every session carries the grid-cover rewrite from the
+      // extension, so the θ-join plans as a cell-keyed join, never a
+      // nested loop (r12) — and running the query installs nothing in
+      // the caller's session
       val sjPlan = spatialJoin.queryExecution.executedPlan.toString
       assert(!sjPlan.contains("BroadcastNestedLoopJoin") &&
         !sjPlan.contains("CartesianProduct") &&
         sjPlan.contains("__graft_cellx_l"),
         "SPARQL spatial θ-join should grid-bucket:\n" + sjPlan)
+      assert(spark.experimental.extraOptimizations.isEmpty,
+        "query execution changed the caller's optimizer rules: " +
+          spark.experimental.extraOptimizations)
       // a filter touching only ONE group does NOT connect — still the
       // guarded cartesian
       intercept[IllegalArgumentException] {
