@@ -28,17 +28,26 @@ object Tables {
     * are single-file tables — trivial), so in-session overwrites are
     * picked up, and each call gets fresh expression ids.
     *
-    * The key includes the nanosAsLong legacy flag because it changes
-    * what inference RETURNS for TIMESTAMP(NANOS) columns (LongType vs a
-    * failure) — two sessions differing on that flag must not share an
-    * entry. */
+    * The key includes every session conf that changes what inference
+    * RETURNS for the same footer — nanosAsLong (TIMESTAMP(NANOS) as
+    * LongType vs a failure), binaryAsString, int96AsTimestamp and
+    * caseSensitive — so two sessions differing on one of them never
+    * share an entry. A path's schema is assumed immutable within a JVM:
+    * rewriting a table with a different schema at the same path is not
+    * picked up. */
   private val schemas = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive")
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      .getOrElse("false") + "|" + path
+    val key = (schemaConfs.map(k => spark.conf.getOption(k).getOrElse("")) :+
+      path).mkString("|")
     val schema = schemas.computeIfAbsent(key,
       _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)

@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering,
+  UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.operators.Checkpoints.CutOps
 
@@ -9,48 +16,116 @@ import graft.operators.Checkpoints.CutOps
   * large-scale dedup pipeline runs AFTER near-dup pair detection: pairs
   * only say "a duplicates b"; keeping one canonical document per GROUP
   * needs the transitive closure (a~b, b~c ⇒ {a,b,c} is one cluster).
+  * Every node is labeled with its component's minimum id — which is
+  * simultaneously the canonical "keep" choice (min doc_id), so no second
+  * pass.
   *
-  * Algorithm: hash-min label propagation. Every node starts labeled with
-  * itself; each round, a node's label becomes the min of its own and its
-  * neighbors' labels; at fixpoint every node in a component carries the
-  * component's minimum id — which is simultaneously the canonical
-  * "keep" choice (min doc_id), so no second pass.
+  * Two paths, selected by ONE size check: the edge relation is cut
+  * lazily and counted once, and that job also materializes the edges
+  * for whichever path runs next.
+  *  - Up to [[Broadcasts.MaxVectorRows]] edges (every catalog graph):
+  *    the edges are collected and union-find labels them on the driver
+  *    — two jobs in total, where each distributed round below costs a
+  *    signature job, a lineage cut, a label broadcast and sometimes a
+  *    probe. This is the in-memory finish of Kiveris et al.,
+  *    "Connected Components in MapReduce and Beyond" (SoCC'14), taken
+  *    from the start because the graph is already small.
+  *  - Above the cap: hash-min label propagation ([[rounds]]). Every
+  *    node starts labeled with itself; each round is ONE equi-join of
+  *    the symmetrized edge relation against the label relation plus a
+  *    map-side-combinable min-aggregate, followed by a POINTER JUMP
+  *    (follow the label's own label — the path-halving shortcut of the
+  *    same paper): the effective propagation distance DOUBLES each
+  *    round, so rounds ≈ log₂(diameter), not diameter. Lineage is cut
+  *    per round through [[Checkpoints.cut]]; convergence is detected by
+  *    a hash signature plus an exact anti-join probe — no `collect()` of
+  *    labels, no driver-side graph state.
   *
-  * Scale shape: each round is ONE equi-join of the (symmetrized) edge
-  * relation against the label relation keyed on node id — the node id is
-  * the shuffle key — followed by a map-side-combinable min-aggregate and
-  * a POINTER JUMP (follow the label's own label — the path-halving
-  * shortcut of Kiveris et al., "Connected Components in MapReduce and
-  * Beyond", SoCC'14): each round the effective propagation distance
-  * DOUBLES, so rounds ≈ log₂(diameter), not diameter. Dedup clusters
-  * (cliques from banding, diameter 1-3) converge in 2-3 rounds as
-  * before; grid/chain graphs — the r12 cell-DBSCAN gate's 20×20 dense
-  * grid has Chebyshev diameter 19, which plain propagation walked in 19
-  * rounds, brushing the maxRounds cliff — converge in ~6 (PERF.md #33).
-  * Lineage is cut per round through [[Checkpoints.cut]] (reliable mode
-  * available session-wide); every round stays a plain shuffle join with
-  * no driver-side graph state.
-  *
-  * Convergence is detected by an anti-join probe (`changed.isEmpty`) —
-  * one cheap action per round, no `collect()` of labels.
+  * Both paths return identical rows: the minimum is taken under SPARK's
+  * ordering of the node type (UTF-8 byte order for strings, not
+  * `String.compareTo`), and the node set is every endpoint.
   */
 object ConnectedComponents {
 
   /** Label every node of the undirected graph `edges` with its
     * component's minimum node id.
     *
-    * @param edges one row per undirected edge
-    * @param a,b   edge endpoint columns (any orderable, id-like type)
-    * @param maxRounds hard stop; with convergence unreached after it, an
+    * @param edges one row per undirected edge; a row with a null
+    *              endpoint is dropped (no caller produces one)
+    * @param a,b   edge endpoint columns (any orderable, id-like type;
+    *              the two are widened to one common type)
+    * @param maxRounds hard stop for the distributed rounds; with
+    *                  convergence unreached after it, an
     *                  IllegalStateException names the round count (a
     *                  silently-partial clustering would merge dup groups
-    *                  wrongly downstream — fail loud instead)
+    *                  wrongly downstream — fail loud instead). The
+    *                  in-memory path is never partial.
     * @return (node, comp) — every node that appears in `edges`
     */
   def label(edges: DataFrame, a: Column, b: Column,
       maxRounds: Int = 20): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
+    val e = endpoints(edges, a, b).cutLineage(eager = false)
+    if (e.count() <= Broadcasts.MaxVectorRows) unionFind(e)
+    else rounds(e, col("src"), col("dst"), maxRounds)
+  }
+
+  /** `(src, dst)` over the endpoints' common type, null endpoints
+    * dropped. */
+  private def endpoints(edges: DataFrame, a: Column, b: Column)
+      : DataFrame = {
     val e = edges.select(a.as("src"), b.as("dst"))
+    val t = e.select(col("src")).unionByName(e.select(col("dst").as("src")))
+      .schema.head.dataType
+    e.select(col("src").cast(t).as("src"), col("dst").cast(t).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+  }
+
+  /** Driver-side union-find over the collected `(src, dst)` relation,
+    * returned as a local relation. Nodes are keyed by their UnsafeRow
+    * bytes (Spark's grouping equality) and every union keeps the root
+    * that is smaller under Catalyst's interpreted ordering, so each
+    * root IS its component's minimum. */
+  private def unionFind(e: DataFrame): DataFrame = {
+    val t = e.schema("src").dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(t)
+    val toKey = UnsafeProjection.create(Array[DataType](t))
+    val order = InterpretedOrdering.forSchema(Seq(t))
+    val ids = mutable.HashMap.empty[UnsafeRow, Int]
+    val nodes = mutable.ArrayBuffer.empty[Any]
+    val keys = mutable.ArrayBuffer.empty[UnsafeRow]
+    val parent = mutable.ArrayBuffer.empty[Int]
+    def id(v: Any): Int = {
+      val k = toKey(InternalRow(toCatalyst(v))).copy()
+      ids.getOrElseUpdate(k, {
+        nodes += v; keys += k; parent += parent.length; parent.length - 1
+      })
+    }
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    e.collect().foreach { r =>
+      val (ra, rb) = (find(id(r.get(0))), find(id(r.get(1))))
+      if (ra != rb) {
+        if (order.compare(keys(ra), keys(rb)) <= 0) parent(rb) = ra
+        else parent(ra) = rb
+      }
+    }
+    val rows = nodes.indices.map(i => Row(nodes(i), nodes(find(i))))
+    e.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("node", t, nullable = false),
+      StructField("comp", t, nullable = false))))
+  }
+
+  /** The distributed path of [[label]]: hash-min rounds with pointer
+    * jumping, bounded by `maxRounds`. `label` runs it above the size
+    * cap; tests call it directly, because below the cap `label` never
+    * reaches it. */
+  private[graft] def rounds(edges: DataFrame, a: Column, b: Column,
+      maxRounds: Int = 20): DataFrame = {
+    val e = endpoints(edges, a, b)
     val sym0 = e.unionByName(e.select(col("dst").as("src"),
       col("src").as("dst")))
     // self-loops make each node its own neighbor, so one equi-join

@@ -214,10 +214,10 @@ object DedupQueries extends QueryCatalog {
     // become ONE cluster {a,b,c} with one survivor before anything is
     // dropped, or transitive groups lose extra members (a kept, b
     // dropped vs a, c kept vs b). Connected components over the verified
-    // pair graph — hash-min label propagation, node id as the shuffle
-    // key every round (operators/ConnectedComponents) — then one
-    // summary row per cluster with the canonical keep (min doc_id,
-    // which IS the component label at fixpoint — no second pass).
+    // pair graph (operators/ConnectedComponents: driver-side union-find
+    // below its size cap, hash-min rounds above it) — then one summary
+    // row per cluster with the canonical keep (min doc_id, which IS the
+    // component label — no second pass).
     "q_dedup_clusters" -> ((s, dir) => {
       val labels = graft.operators.ConnectedComponents.label(
         minhashPairs(s, dir), col("doc_a"), col("doc_b"))

@@ -8,7 +8,7 @@ import graft.operators.Checkpoints.CutOps
 
 /** Graph-shaped analytics beyond the iterative loops in
   * [[HierarchyQueries]] (frontier traversal, PageRank) and the
-  * label-propagation components in [[graft.operators.ConnectedComponents]]:
+  * connected components in [[graft.operators.ConnectedComponents]]:
   * whole-graph structural metrics computed as plain relational plans.
   *
   * Triangle counting is the canonical "join-shaped graph analytics"

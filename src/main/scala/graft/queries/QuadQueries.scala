@@ -1489,7 +1489,7 @@ object QuadQueries extends QueryCatalog {
     // subject and object rewriting are exercised, and the smushed graph
     // unites all facts under the component-min IRI. The oracle replays
     // the closure with a genuine WITH RECURSIVE reachability — fully
-    // independent of the hash-min propagation loop.
+    // independent of the ConnectedComponents labeling.
     "q_quads_sameas_smush" -> ((s, dir) => {
       import graft.model.TermKind
       val cust = Tables.customer(s, dir)

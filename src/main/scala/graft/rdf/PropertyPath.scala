@@ -18,8 +18,8 @@ import graft.operators.Checkpoints.CutOps
   * one-join-deep per round. Rounds = graph diameter; the anti-join makes
   * the loop terminate on CYCLIC graphs too (a pair can only be discovered
   * once). At 100 TB every round is one shuffle keyed on the join node —
-  * the same discipline as ConnectedComponents/PageRank; no driver-side
-  * graph state beyond the loop counter.
+  * the same discipline as the ConnectedComponents rounds and PageRank;
+  * no driver-side graph state beyond the loop counter.
   */
 object PropertyPath {
 

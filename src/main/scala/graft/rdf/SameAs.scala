@@ -16,11 +16,11 @@ import graft.operators.ConnectedComponents
   * now-duplicate statements.
   *
   * sameAs is symmetric + transitive, so alias groups are the connected
-  * components of the sameAs edge relation — [[ConnectedComponents]]'s
-  * hash-min propagation labels every alias with its component's minimum
-  * IRI, which doubles as the deterministic canonical choice. Alias
-  * groups in practice are tiny (2-4 IRIs per entity), so the loop
-  * converges in 2-3 rounds.
+  * components of the sameAs edge relation — [[ConnectedComponents]]
+  * labels every alias with its component's minimum IRI, which doubles
+  * as the deterministic canonical choice. Alias groups in practice are
+  * tiny (2-4 IRIs per entity); below its size cap the whole sameAs
+  * relation is labeled by one driver-side union-find pass.
   *
   * Scale shape: the canonical-label relation holds ALIASED nodes only —
   * orders of magnitude smaller than the corpus — and the rewrite is two
@@ -53,21 +53,22 @@ object SameAs {
     * nquads sink (ADVICE r7). */
   def smush(quads: DataFrame, labels: DataFrame): DataFrame = {
     val hasSubjKind = quads.columns.contains("subjectKind")
-    // r14 opt (guide §3.1): the label relation comes out of the CC loop
-    // as a checkpointed LogicalRDD, whose size estimate never clears
-    // the auto-broadcast threshold — both rewrite joins planned as
-    // SortMergeJoin, shuffling the FULL quad relation twice just to
-    // rewrite a (small) alias table's worth of IRIs. The alias table is
-    // node-cardinality (grows with the data), so the broadcast is
-    // SIZE-GATED like every score-vector join (Broadcasts.sizeGated,
-    // 5M-row cap): below the cap the quad relation is never shuffled
-    // by the rewrite (only dropDuplicates pays one exchange), above it
-    // the join degrades to the node-keyed shuffle it is today. The
-    // count is O(1)-ish at the current call sites — labels is already
-    // materialized by the CC loop — and cutOnce (ADVICE r14 low) guards
-    // the general caller: a raw-lineage label relation is materialized
-    // ONCE by the count instead of computing the full derivation for
-    // the count and again for each rewrite join.
+    // r14 opt (guide §3.1): above its size cap ConnectedComponents
+    // returns the label relation as a checkpointed LogicalRDD, whose
+    // size estimate never clears the auto-broadcast threshold — both
+    // rewrite joins would plan as SortMergeJoin, shuffling the FULL
+    // quad relation twice just to rewrite a (small) alias table's worth
+    // of IRIs. The alias table is node-cardinality (grows with the
+    // data), so the broadcast is SIZE-GATED like every score-vector
+    // join (Broadcasts.sizeGated, 5M-row cap): below the cap the quad
+    // relation is never shuffled by the rewrite (only dropDuplicates
+    // pays one exchange), above it the join degrades to the node-keyed
+    // shuffle. The count is cheap at the current call sites — labels is
+    // a local relation (below the CC cap) or already materialized by
+    // the rounds — and cutOnce (ADVICE r14 low) guards the general
+    // caller: a raw-lineage label relation is materialized ONCE by the
+    // count instead of computing the full derivation for the count and
+    // again for each rewrite join.
     val mat = graft.operators.Checkpoints.cutOnce(labels, eager = false)
     val gated = graft.operators.Broadcasts.sizeGated(mat, mat.count())
     val subjL = gated.select(col("node").as("_s_node"),

@@ -8,6 +8,34 @@ import graft.functions.GraftFunctions._
 /** §5.2 inline invariants: the fail-fast vocab fallback chain. */
 class InvariantsSpec extends AnyFunSuite with SparkTestBase {
 
+  test("Tables schema memo: a session reading binary as string gets its " +
+      "own entry") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    // inference consults binaryAsString only for a footer WITHOUT a Spark
+    // schema in its key-value metadata (what non-Spark writers produce),
+    // so the file is written with parquet-mr directly
+    val dir = java.nio.file.Files.createTempDirectory("tables-memo")
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required binary b; }")
+    val w = ExampleParquetWriter
+      .builder(new Path(s"$dir/bin.parquet")).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", "hi"))
+    finally w.close()
+    try {
+      assert(Tables.table(spark, dir.toString, "bin").schema("b").dataType ==
+        BinaryType)
+      val child = spark.newSession()
+      child.conf.set("spark.sql.parquet.binaryAsString", "true")
+      val t = Tables.table(child, dir.toString, "bin")
+      assert(t.schema("b").dataType == StringType)
+      assert(t.collect().map(_.getString(0)).toSeq == Seq("hi"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("vocabLookupOrFail resolves through the fallback chain") {
     import spark.implicits._
     val df = Seq(("A", Some("vocab-a"), None: Option[String]),

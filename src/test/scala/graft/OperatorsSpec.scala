@@ -221,9 +221,11 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
-    // a bound too tight for the diameter fails LOUD, never partial
+    // a bound too tight for the diameter fails LOUD, never partial —
+    // only the distributed rounds have a bound to hit (below the size
+    // cap `label` finishes on the driver), so call them directly
     assertThrows[IllegalStateException] {
-      ConnectedComponents.label(edges, col("a"), col("b"), maxRounds = 1)
+      ConnectedComponents.rounds(edges, col("a"), col("b"), maxRounds = 1)
     }
   }
 
@@ -233,9 +235,10 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     import graft.operators.ConnectedComponents
     // a 200-node path (diameter 199): plain hash-min propagation would
     // need 199 rounds — far past the default bound; path halving
-    // reaches fixpoint within the default 20
+    // reaches fixpoint within the default 20 (the rounds are called
+    // directly: below the size cap `label` never runs them)
     val edges = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
-    val got = ConnectedComponents.label(edges, col("a"), col("b"))
+    val got = ConnectedComponents.rounds(edges, col("a"), col("b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 200 && got.forall(_._2 == 0L))
   }
@@ -243,10 +246,13 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
   test("ConnectedComponents == union-find on random graphs") {
     import spark.implicits._
     import graft.operators.ConnectedComponents
-    for (seed <- 1 to 3) {
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.get(0), r.get(1))).toSeq.sortBy(_.toString)
+    for (seed <- 1 to 20) {
       val rnd = new scala.util.Random(seed)
       val n = 40
-      val edges = (1 to 50).map(_ => (rnd.nextInt(n).toLong,
+      // nodes 0 and 1 always share a component
+      val edges = (0L, 1L) +: (1 to 50).map(_ => (rnd.nextInt(n).toLong,
         rnd.nextInt(n).toLong))
       // reference: textbook union-find with path compression
       val parent = Array.tabulate(n)(identity)
@@ -259,13 +265,34 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
         (0 until n).filter(j => find(j) == find(i)).min.toLong
       }).toMap
       val touched = edges.flatMap(e => Seq(e._1, e._2)).toSet
-      val got = ConnectedComponents.label(edges.toDF("a", "b"),
-          col("a"), col("b"))
+      val longs = edges.toDF("a", "b")
+      val got = ConnectedComponents.label(longs, col("a"), col("b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got.keySet == touched, s"seed $seed: node set diverged")
       got.foreach { case (node, comp) =>
         assert(comp == want(node), s"seed $seed: node $node → $comp, " +
           s"union-find says ${want(node)}")
+      }
+      // the driver-side finish must equal the distributed rounds row for
+      // row, for every id type. String ids start with "｡" (U+FF61) or
+      // "😀" (U+1F600): Spark's UTF-8 byte order puts "｡" first, Java's
+      // UTF-16 String.compareTo puts "😀" first, so in every component
+      // holding both kinds a minimum taken in Java order picks the wrong
+      // label.
+      val names = Array("｡", "😀") ++
+        (2 until n).map(i => (if (i % 2 == 0) "｡" else "😀") + i)
+      val graphs = Seq(
+        longs,
+        edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a", "b"),
+        edges.map { case (a, b) => (names(a.toInt), names(b.toInt)) }
+          .toDF("a", "b"))
+      for (g <- graphs) {
+        val inMemory = ConnectedComponents.label(g, col("a"), col("b"))
+        val distributed = ConnectedComponents.rounds(g, col("a"), col("b"))
+        assert(inMemory.schema.map(_.dataType) ==
+          distributed.schema.map(_.dataType))
+        assert(rowsOf(inMemory) == rowsOf(distributed),
+          s"seed $seed, ${g.schema("a").dataType}: the two paths diverged")
       }
     }
   }

@@ -1331,21 +1331,23 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(ix.count() == 50) // named points with x in 1..50
   }
 
-  test("r13: BFS and SSSP loops schedule ONE job per round (lazy cut + " +
-    "probe action fused)") {
+  /** Jobs scheduled while `build` constructs its plan (the loop
+    * operators run their actions during plan CONSTRUCTION), and
+    * separately the broadcast-build jobs among them. Broadcast-BUILD
+    * jobs (the r15 size-gated frontier/dist vectors) are not scheduled
+    * passes over the data — they REPLACE a per-round edge shuffle; the
+    * invariant under test is driver ACTIONS, so they are excluded from
+    * the first count by the job tag BroadcastExchangeExec stamps on its
+    * build job. They are still returned: a run that broadcasts must see
+    * at least one, so a renamed Spark tag fails instead of silently
+    * counting broadcast builds as actions. */
+  private def countJobs(build: => org.apache.spark.sql.DataFrame)
+      : (Int, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    // the excluded jobs are counted too: a run that broadcasts must see
-    // at least one, so a renamed Spark tag fails here instead of
-    // silently counting broadcast builds as actions
     val broadcastJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // broadcast-BUILD jobs (the r15 size-gated frontier/dist
-        // vectors) are not scheduled passes over the data — they
-        // REPLACE a per-round edge shuffle; the invariant under test
-        // is driver ACTIONS per round, so exclude them by the job tag
-        // BroadcastExchangeExec stamps on its build job
         val tags = Option(js.properties)
           .map(_.getProperty("spark.job.tags", "")).getOrElse("")
         if (tags.contains("broadcast exchange")) broadcastJobs.incrementAndGet()
@@ -1353,42 +1355,58 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       }
     }
     val sc = spark.sparkContext
-    def countJobs(build: => org.apache.spark.sql.DataFrame): Int = {
-      sc.addSparkListener(l)
-      // AQE materializes each shuffle stage as its own scheduler job,
-      // so "jobs" would over-count ACTIONS by the plan's stage count —
-      // the invariant under test is actions per round, measured with
-      // AQE off
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
-        jobs.set(0)
-        build // loop actions run during plan CONSTRUCTION
-        org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
-        jobs.get()
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        sc.removeSparkListener(l)
-      }
+    // AQE materializes each shuffle stage as its own scheduler job,
+    // so "jobs" would over-count ACTIONS by the plan's stage count —
+    // the invariant under test is actions per round, measured with
+    // AQE off
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+    sc.addSparkListener(l)
+    try {
+      build
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+      (jobs.get(), broadcastJobs.get())
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      sc.removeSparkListener(l)
     }
+  }
+
+  test("r13: BFS and SSSP loops schedule ONE job per round (lazy cut + " +
+    "probe action fused)") {
     val dir = "/root/testdata/sf0.001"
     // BFS: 1 eager seed cut + 1 initial frontier count + 3 rounds × 1
     // fused count-and-materialize + 1 edge-relation seed job = 6
     // COUNT actions (broadcast-build jobs excluded by the listener —
     // an eager-cut + isEmpty loop would schedule 2 actions/round → 9+)
-    val bfsJobs = countJobs(graft.SparkEntry.queries("q_graph_bfs")(
-      spark, dir))
+    val (bfsJobs, bfsBroadcasts) = countJobs(
+      graft.SparkEntry.queries("q_graph_bfs")(spark, dir))
     assert(bfsJobs <= 6, s"BFS scheduled $bfsJobs jobs (want ≤ 6)")
     // SSSP: 1 eager seed cut + 1 seed signature + per round 1 fused
     // signature (+ the exact probe only on the convergence round) —
     // ≤ 4 rounds → ≤ 8 jobs total
-    val ssspJobs = countJobs(graft.SparkEntry.queries("q_graph_sssp")(
-      spark, dir))
+    val (ssspJobs, ssspBroadcasts) = countJobs(
+      graft.SparkEntry.queries("q_graph_sssp")(spark, dir))
     assert(ssspJobs <= 8, s"SSSP scheduled $ssspJobs jobs (want ≤ 8)")
-    assert(broadcastJobs.get() > 0,
+    assert(bfsBroadcasts + ssspBroadcasts > 0,
       "no job carried the \"broadcast exchange\" tag although the BFS/SSSP " +
         "frontier and distance vectors broadcast — did Spark rename it?")
+  }
+
+  test("connected components below the size cap finish on the driver: " +
+      "count + collect instead of per-round jobs") {
+    val dir = "/root/testdata/sf0.001"
+    Tables.customer(spark, dir) // schema inference is not a loop job
+    // one label call = 1 count (which also materializes the cut edges)
+    // + 1 collect; the hash-min rounds scheduled 2+ jobs per round
+    val (cellJobs, _) = countJobs(
+      graft.SparkEntry.queries("q_spatial_cluster_cells")(spark, dir))
+    assert(cellJobs == 2, s"cluster_cells scheduled $cellJobs jobs (want 2)")
+    // base labeling + incremental fold = two label calls
+    val (incJobs, _) = countJobs(
+      graft.SparkEntry.queries("q_graph_cc_incremental")(spark, dir))
+    assert(incJobs == 4, s"cc_incremental scheduled $incJobs jobs (want 4)")
   }
 
   test("r13: score-vector broadcast is size-gated — strategy flips " +
