@@ -51,6 +51,14 @@ hand=$( { grep -rl 'GraftExtensions\.register' src
 [ -z "$hand" ] ||
   fail "GraftExtensions.register or extraOptimizations in src/: $hand"
 
+# Bloom filters and exact-distinct bitmaps are Spark's built-ins
+# (graft_bloom_filter_agg / graft_might_contain, bitmap_*); the
+# hand-written aggregators they replaced stay deleted.
+copies=$(grep -rlwE 'BloomFilterAgg|BitmapDistinctAgg|BitmapSketchAgg|BitmapOrCountAgg' src |
+  tr '\n' ' ')
+[ -z "$copies" ] ||
+  fail "hand-written bloom/bitmap aggregator in src/: $copies"
+
 sbt -batch compile >/tmp/final_gate_compile.log 2>&1 ||
   { tail -20 /tmp/final_gate_compile.log >&2; fail "sbt compile failed"; }
 

@@ -22,8 +22,10 @@ import org.apache.spark.sql.expressions.Aggregator
   * sorted-insert union — a classic partial-aggregable sketch: partials
   * combine map-side, the shuffle carries ≤ 8k bytes per group, and
   * sketches of DIFFERENT corpora union losslessly (distinct counts
-  * don't sum; KMV states do), the same re-aggregation contract as
-  * [[BitmapSketchAgg]] without the bounded-domain restriction.
+  * don't sum; KMV states do), the same re-aggregation contract as the
+  * exact bitmap partials of q_agg_bitmap_rollup (Spark's
+  * `bitmap_construct_agg` / `bitmap_or_agg`), but in ≤ k longs per group
+  * whatever the key count.
   */
 class KmvDistinctAgg(k: Int)
     extends Aggregator[Long, Array[Long], Double] {

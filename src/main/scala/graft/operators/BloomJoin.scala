@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-import graft.functions.BloomFilterAgg
 
 /** Bloom-filter join pruning — the "runtime filter" / sideways-
   * information-passing pattern (reference analogue: the key-membership
@@ -11,70 +9,47 @@ import graft.functions.BloomFilterAgg
   * engine analogue: Spark's `spark.sql.optimizer.runtime.bloomFilter.*`,
   * which this operator makes an explicit, composable library surface).
   *
-  * Shape at 100 TB: the dim side's key set collapses to a few-KB bitmap
-  * ([[BloomFilterAgg]], OR-mergeable partials), the bitmap rides a
-  * broadcast to every probe task, and the membership test is a pure
-  * codegen'd expression evaluated AT THE SCAN — so fact rows that cannot
-  * join are dropped before they are shuffled, which is the entire point:
-  * the exact verify join afterwards sees only `matches + ε` rows (ε =
-  * false positives, tunable via bits-per-key) instead of the full fact
-  * table. When the dim itself fits the broadcast cap the verify join is
-  * a broadcast join and the bloom is belt-and-braces; the win is the
-  * SHUFFLE verify join on a dim too big to broadcast, where the bloom is
-  * hundreds of times smaller than the dim rows it summarizes.
+  * The filter is Spark's own: `graft_bloom_filter_agg` (Spark's
+  * `BloomFilterAggregate`) folds the dim keys' `xxhash64` into a
+  * mergeable bit array, and `graft_might_contain` (Spark's
+  * `BloomFilterMightContain`) probes it over a scalar subquery — the same
+  * pair [[graft.plans.BloomJoinInject]] injects. The subquery runs once,
+  * its few-KB result rides to every probe task, and the membership test
+  * is a codegen'd filter AT THE SCAN — so fact rows that cannot join are
+  * dropped before they are shuffled. The exact verify join afterwards
+  * sees only `matches + ε` rows (ε = false positives) instead of the
+  * full fact table.
+  *
+  * Sizing is one number, the expected distinct dim keys: Spark gives the
+  * filter 8 bits per expected item and picks the hash count.
   *
   * Exactness contract: Bloom filters have false positives but NEVER
-  * false negatives, and the operator always re-verifies with a real
-  * left-semi join — the result is bit-identical to the unpruned join
+  * false negatives, and [[prunedSemiJoin]] re-verifies with a real
+  * left-semi join — the result is identical to the unpruned join
   * (OperatorsSpec proves candidates ⊇ matches and result equality).
+  * Keys hash as BIGINT on both sides, so INT and BIGINT keys agree.
   */
 object BloomJoin {
 
-  /** Build the broadcastable one-row filter relation over `dimKey`
-    * (column `bloom_bits`: ARRAY<BIGINT>, `numWords`·64 bits). */
-  def keyFilter(dim: DataFrame, dimKey: Column, numWords: Int,
-      numHashes: Int): DataFrame = {
-    val agg = udaf(new BloomFilterAgg(numWords, numHashes), Encoders.scalaLong)
-    dim.select(dimKey.cast("long").as("k"))
-      .filter(col("k").isNotNull)
-      .agg(agg(col("k")).as("bloom_bits"))
-  }
-
-  /** Membership predicate over a row whose BIGINT key column is
-    * `keyCol` and whose bitmap column is `bitsCol` — pure SQL (xxhash64
-    * + shifts + element_at), stays inside whole-stage codegen. Mirrors
-    * [[BloomFilterAgg.reduce]] bit-for-bit. */
-  def mightContainSql(keyCol: String, bitsCol: String, numWords: Int,
-      numHashes: Int): String = {
-    val m = numWords * 64L
-    val h1 = s"(xxhash64($keyCol) & 4294967295)"
-    val h2 = s"(shiftrightunsigned(xxhash64($keyCol), 32) | CAST(1 AS BIGINT))"
-    (0 until numHashes).map { i =>
-      val p = s"pmod($h1 + $i * $h2, CAST($m AS BIGINT))"
-      s"(element_at($bitsCol, CAST(shiftrightunsigned($p, 6) AS INT) + 1) & " +
-        s"shiftleft(CAST(1 AS BIGINT), CAST($p & 63 AS INT))) != 0"
-    }.mkString("(", " AND ", ")")
-  }
-
-  /** The pruned probe: fact rows surviving the broadcast bloom test.
-    * False positives included — follow with [[prunedSemiJoin]] (or any
-    * exact join) when exact semantics are required. */
+  /** The pruned probe: fact rows surviving the bloom test over `dim`'s
+    * keys. An empty dim yields a NULL filter, which keeps no row. False
+    * positives included — follow with [[prunedSemiJoin]] (or any exact
+    * join) when exact semantics are required. */
   def candidates(fact: DataFrame, factKey: Column, dim: DataFrame,
-      dimKey: Column, numWords: Int = 1024, numHashes: Int = 5): DataFrame =
-    fact.withColumn("graft_bloom_key", factKey.cast("long"))
-      .crossJoin(broadcast(keyFilter(dim, dimKey, numWords, numHashes)))
-      .filter(expr(
-        mightContainSql("graft_bloom_key", "bloom_bits", numWords, numHashes)))
-      .drop("bloom_bits")
+      dimKey: Column, expectedItems: Long = 8192): DataFrame = {
+    val bloom = dim.select(call_function("graft_bloom_filter_agg",
+      xxhash64(dimKey.cast("long")), lit(expectedItems))).scalar()
+    fact.filter(call_function("graft_might_contain", bloom,
+      xxhash64(factKey.cast("long"))))
+  }
 
   /** Exact bloom-pruned left-semi join: fact rows whose `factKey` is in
     * `dim`'s `dimKey` set — the bloom cuts the shuffle, the semi join
     * removes the false positives. */
   def prunedSemiJoin(fact: DataFrame, factKey: Column, dim: DataFrame,
-      dimKey: Column, numWords: Int = 1024, numHashes: Int = 5): DataFrame = {
+      dimKey: Column, expectedItems: Long = 8192): DataFrame = {
     val keys = dim.select(dimKey.cast("long").as("graft_dim_key")).distinct()
-    candidates(fact, factKey, dim, dimKey, numWords, numHashes)
-      .join(keys, col("graft_bloom_key") === col("graft_dim_key"), "left_semi")
-      .drop("graft_bloom_key")
+    candidates(fact, factKey, dim, dimKey, expectedItems)
+      .join(keys, factKey.cast("long") === col("graft_dim_key"), "left_semi")
   }
 }

@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 /** REAL image codecs that need no native library — binary PPM (P6, the
   * Netpbm interchange format: ASCII header `P6 <w> <h> <maxval>` + raw
-  * RGB bytes), PNG (r8 — zlib via JDK-core `java.util.zip` + the five
-  * scanline filters, closing the long-declared codec limitation), and
+  * RGB bytes), PNG (r8 — a JDK-core `java.util.zip` encoder with the
+  * five scanline filters; decode checks the chunk CRCs and profile, then
+  * reads through `javax.imageio`), and
   * JPEG through the JDK-shipped `javax.imageio` reader/writer (lossy —
   * gated by tolerance, see q_multimodal_jpeg_decode). Pure JVM,
   * executor-safe, no shared state — usable straight inside the batched
@@ -78,12 +79,12 @@ object ImageCodec {
   }
 
   // -- PNG (r8) ----------------------------------------------------------
-  // PNG is zlib + per-scanline filters + CRC-framed chunks — all of it
-  // JDK-core (`java.util.zip.{Deflater, Inflater, CRC32}`), so a real
-  // decoder needs no native library. Decoder supports the common
-  // non-interlaced 8-bit profiles: greyscale (0), truecolor (2),
-  // truecolor+alpha (6); encoder writes truecolor with a selectable
-  // uniform filter so round-trip tests exercise all five unfilters.
+  // PNG is zlib + per-scanline filters + CRC-framed chunks. The encoder
+  // is JDK-core (`java.util.zip.{Deflater, CRC32}`) and writes truecolor
+  // with a selectable uniform filter — ImageIO cannot pick one — so
+  // round-trip tests exercise all five unfilters. The decoder supports
+  // the common non-interlaced 8-bit profiles: greyscale (0), truecolor
+  // (2), truecolor+alpha (6).
 
   private val PngSig: Array[Byte] =
     Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
@@ -153,108 +154,45 @@ object ImageCodec {
   }
 
   /** Strict PNG decoder: signature, chunk walk with CRC verification,
-    * IHDR profile check (8-bit, colortype 0/2/6, non-interlaced),
-    * multi-IDAT inflate, per-scanline unfilter (all five filters),
-    * normalize to interleaved RGB (grey replicates, alpha drops). Fails
-    * loud on anything else — a malformed blob must never decode
-    * quietly. */
+    * IHDR profile check (8-bit, colortype 0/2/6, non-interlaced), then
+    * the JDK's `javax.imageio` PNG reader inflates and unfilters. The
+    * walk stays because ImageIO does not verify chunk CRCs. Fails loud
+    * on anything else — a malformed blob must never decode quietly. */
   def decodePng(bytes: Array[Byte]): RawImage = {
     require(bytes.length > 8 && PngSig.indices.forall(i =>
       bytes(i) == PngSig(i)), "not a PNG (signature)")
     var pos = 8
-    var width = 0; var height = 0; var colorType = -1
-    val idat = new java.io.ByteArrayOutputStream()
+    var sawHeader = false
     var ended = false
     while (!ended) {
       require(pos + 8 <= bytes.length, "truncated PNG chunk header")
       val len = readBe32(bytes, pos)
       val typ = new String(bytes, pos + 4, 4, US_ASCII)
-      require(pos + 12 + len <= bytes.length, s"truncated $typ chunk")
+      require(len >= 0 && pos + 12 + len <= bytes.length,
+        s"truncated $typ chunk")
       val crc = new java.util.zip.CRC32()
       crc.update(bytes, pos + 4, 4 + len)
       require(crc.getValue.toInt == readBe32(bytes, pos + 8 + len),
         s"CRC mismatch in $typ chunk")
       typ match {
         case "IHDR" =>
-          width = readBe32(bytes, pos + 8)
-          height = readBe32(bytes, pos + 12)
+          require(len == 13, s"IHDR length $len != 13")
           val depth = bytes(pos + 16)
-          colorType = bytes(pos + 17)
+          val colorType = bytes(pos + 17)
           require(depth == 8, s"only 8-bit PNG supported (depth $depth)")
           require(colorType == 0 || colorType == 2 || colorType == 6,
             s"unsupported PNG color type $colorType")
           require(bytes(pos + 18) == 0 && bytes(pos + 19) == 0,
             "unsupported PNG compression/filter method")
           require(bytes(pos + 20) == 0, "interlaced PNG not supported")
-        case "IDAT" => idat.write(bytes, pos + 8, len)
+          sawHeader = true
         case "IEND" => ended = true
-        case _ => () // ancillary chunks skipped
+        case _ => () // IDAT and ancillary chunks: ImageIO reads them
       }
       pos += 12 + len
     }
-    require(colorType >= 0, "PNG has no IHDR")
-    val channels = colorType match { case 0 => 1; case 2 => 3; case 6 => 4 }
-    val stride = width * channels
-    val raw = new Array[Byte]((stride + 1) * height)
-    val inflater = new java.util.zip.Inflater()
-    inflater.setInput(idat.toByteArray)
-    var off = 0
-    while (off < raw.length && !inflater.finished()) {
-      val n = inflater.inflate(raw, off, raw.length - off)
-      require(n > 0 || inflater.finished(), "truncated PNG pixel stream")
-      off += n
-    }
-    inflater.end()
-    require(off == raw.length,
-      s"PNG pixel stream $off != expected ${raw.length}")
-    // unfilter in place into a channel buffer
-    val px = new Array[Byte](stride * height)
-    var y = 0
-    while (y < height) {
-      val ft = raw(y * (stride + 1)) & 0xff
-      require(ft <= 4, s"unknown PNG filter $ft on row $y")
-      var x = 0
-      while (x < stride) {
-        val v = raw(y * (stride + 1) + 1 + x) & 0xff
-        val left = if (x >= channels) px(y * stride + x - channels) & 0xff else 0
-        val up = if (y > 0) px((y - 1) * stride + x) & 0xff else 0
-        val ul = if (x >= channels && y > 0)
-          px((y - 1) * stride + x - channels) & 0xff else 0
-        val pred = ft match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case 4 => paeth(left, up, ul)
-        }
-        px(y * stride + x) = ((v + pred) & 0xff).toByte
-        x += 1
-      }
-      y += 1
-    }
-    // normalize to RGB
-    val rgb = colorType match {
-      case 2 => px
-      case 0 =>
-        val out = new Array[Byte](width * height * 3)
-        var i = 0
-        while (i < width * height) {
-          out(i * 3) = px(i); out(i * 3 + 1) = px(i); out(i * 3 + 2) = px(i)
-          i += 1
-        }
-        out
-      case 6 =>
-        val out = new Array[Byte](width * height * 3)
-        var i = 0
-        while (i < width * height) {
-          out(i * 3) = px(i * 4)
-          out(i * 3 + 1) = px(i * 4 + 1)
-          out(i * 3 + 2) = px(i * 4 + 2)
-          i += 1
-        }
-        out
-    }
-    RawImage(width, height, rgb)
+    require(sawHeader, "PNG has no IHDR")
+    toRaw(readImage(bytes, "PNG"))
   }
 
   // -- JPEG (r8, JDK javax.imageio) -------------------------------------
@@ -284,25 +222,56 @@ object ImageCodec {
     out.toByteArray
   }
 
-  def decodeJpeg(bytes: Array[Byte]): RawImage = {
-    val bi = javax.imageio.ImageIO.read(
+  def decodeJpeg(bytes: Array[Byte]): RawImage =
+    toRaw(readImage(bytes, "JPEG"))
+
+  /** The JDK's reader providers, looked up once: `ImageIO.read` would
+    * search the registry and probe every format on each call. */
+  private val readerSpis = Seq("PNG", "JPEG").map(f =>
+    f -> javax.imageio.ImageIO.getImageReadersByFormatName(f).next()
+      .getOriginatingProvider).toMap
+
+  /** ImageIO decode from memory. `MemoryCacheImageInputStream` keeps
+    * ImageIO off its default temp-file stream cache, which costs several
+    * times the decode of a small image; the JVM-global
+    * `ImageIO.setUseCache` is left alone. */
+  private def readImage(bytes: Array[Byte],
+      format: String): java.awt.image.BufferedImage = {
+    val reader = readerSpis(format).createReaderInstance()
+    val in = new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(bytes))
-    require(bi != null, "not a decodable JPEG")
-    val out = new Array[Byte](bi.getWidth * bi.getHeight * 3)
-    var y = 0
-    while (y < bi.getHeight) {
-      var x = 0
-      while (x < bi.getWidth) {
-        val rgb = bi.getRGB(x, y)
-        val i = (y * bi.getWidth + x) * 3
-        out(i) = ((rgb >> 16) & 0xff).toByte
-        out(i + 1) = ((rgb >> 8) & 0xff).toByte
-        out(i + 2) = (rgb & 0xff).toByte
-        x += 1
-      }
-      y += 1
+    try {
+      reader.setInput(in, true, true)
+      reader.read(0)
+    } catch {
+      case e: java.io.IOException =>
+        throw new IllegalArgumentException(s"not a decodable $format", e)
+    } finally {
+      reader.dispose()
+      in.close()
     }
-    RawImage(bi.getWidth, bi.getHeight, out)
+  }
+
+  /** Interleaved RGB from the raster's bands: one band (grey) is
+    * replicated, three are copied, a fourth (alpha) is dropped. Raw
+    * samples, not `getRGB`, which would gamma-convert grey. */
+  private def toRaw(bi: java.awt.image.BufferedImage): RawImage = {
+    val raster = bi.getRaster
+    val (w, h, bands) = (bi.getWidth, bi.getHeight, raster.getNumBands)
+    require(bands == 1 || bands == 3 || bands == 4,
+      s"unsupported image with $bands bands")
+    val samples = raster.getPixels(0, 0, w, h, null: Array[Int])
+    val out = new Array[Byte](w * h * 3)
+    var i = 0
+    while (i < w * h) {
+      var c = 0
+      while (c < 3) {
+        out(i * 3 + c) = samples(i * bands + (if (bands == 1) 0 else c)).toByte
+        c += 1
+      }
+      i += 1
+    }
+    RawImage(w, h, out)
   }
 
   /** Exact per-channel sums (unsigned bytes) — the mean-color feature

@@ -7,10 +7,13 @@ import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Automatic bloom-filter runtime-filter injection (VERDICT r6 stretch #8
-  * — the `Rule[LogicalPlan]` form of [[graft.operators.BloomJoin]], the
-  * way [[RadiusJoinRewrite]] is the rule form of the hand-bucketed grid
-  * join). Reference analogue: the `WHERE id IN (SELECT …)` key-membership
+/** Automatic bloom-filter runtime-filter injection (VERDICT r6 stretch #8).
+  * It writes, on its own, the same Spark `BloomFilterAggregate` /
+  * `BloomFilterMightContain` pair that [[graft.operators.BloomJoin]]
+  * builds by hand through `graft_bloom_filter_agg` and
+  * `graft_might_contain`; the explicit operator suits a caller that
+  * knows its dim, this rule a plain join under the conf gate below.
+  * Reference analogue: the `WHERE id IN (SELECT …)` key-membership
   * prefilters the reference's load scripts write by hand; Spark analogue:
   * the sideways-information-passing pattern of Spark's own
   * `InjectRuntimeFilter` (public optimizer source), re-expressed here as

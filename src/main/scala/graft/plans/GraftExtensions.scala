@@ -3,7 +3,8 @@ package graft.plans
 import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.types.DoubleType
 
 /** SparkSessionExtensions entry point (SURVEY §2.12): the native
@@ -56,7 +57,21 @@ object GraftExtensions {
     fn("graft_wkt_bbox", classOf[WktBbox], WktBbox.builder),
     fn("graft_st_buffer", classOf[GeomBuffer], GeomConstruct.bufferBuilder),
     fn("graft_st_buffer_m", classOf[GeomBufferMetres],
-      GeomConstruct.bufferMetresBuilder)) ++
+      GeomConstruct.bufferMetresBuilder),
+    // Spark's runtime bloom filter, which Spark 4.1 plans but does not
+    // register: (xxhash64 key, expected items) builds it, and
+    // (filter, xxhash64 key) probes it. The filter must be a constant
+    // or a scalar subquery.
+    fn("graft_bloom_filter_agg", classOf[BloomFilterAggregate], args => {
+      require(args.length == 2, "graft_bloom_filter_agg takes " +
+        s"(xxhash64 key, expected items); got ${args.length}")
+      new BloomFilterAggregate(args(0), args(1))
+    }),
+    fn("graft_might_contain", classOf[BloomFilterMightContain], args => {
+      require(args.length == 2, "graft_might_contain takes " +
+        s"(filter, xxhash64 key); got ${args.length}")
+      BloomFilterMightContain(args(0), args(1))
+    })) ++
     GeomConstruct.UnaryNames.map { case (name, op) =>
       fn(name, classOf[GeomConstruct], GeomConstruct.unaryBuilder(name, op))
     } ++

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -12,6 +12,19 @@ import graft.functions.GraftFunctions._
   * (etl_qrt.py:261-267), categorical counts (etl-notes.md:370-379).
   */
 object AggregationQueries extends QueryCatalog {
+
+  /** Exact distinct-`user_id` partials on Spark's bitmap aggregates: per
+    * (`keys`, `bucket`), the bitmap `bm` (bitmap_construct_agg over
+    * bitmap_bit_position) plus any `extra` aggregates. One bitmap covers
+    * one bitmap_bucket_number bucket of ids; the buckets split the whole
+    * BIGINT range, zero and negative ids included, so per-bucket
+    * bitmap_counts sum to the exact distinct count. */
+  private def bitmapPartials(events: DataFrame, keys: Column*)(
+      extra: Column*): DataFrame =
+    events
+      .groupBy(keys :+ bitmap_bucket_number(col("user_id")).as("bucket"): _*)
+      .agg(bitmap_construct_agg(bitmap_bit_position(col("user_id"))).as("bm"),
+        extra: _*)
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A3/A4 + P2 + money math: the TPC-H-Q1-shaped pricing summary.
@@ -826,29 +839,29 @@ object AggregationQueries extends QueryCatalog {
     }),
 
     // Two-level EXACT distinct rollup via re-aggregable bitmap partials
-    // (functions/BitmapSketchAgg + BitmapOrCountAgg): per-(type, day)
-    // bitmaps materialize once, the period answer is an OR-merge +
-    // popcount over them — never a rescan of the stream. The naive
-    // `Σ daily distinct` rides alongside to show WHY this exists
-    // (distinct doesn't sum: the overcount is visible in the gated
-    // row), and the oracle checks the merged count for strict EQUALITY
-    // against COUNT(DISTINCT) — no tolerance, because bitmaps are
-    // exact. The HLL twin of this pattern is q_agg_hll_sliding; this is
-    // the bounded-domain exact variant.
+    // (Spark's bitmap_construct_agg / bitmap_or_agg, see bitmapPartials):
+    // per-(type, day, bucket) bitmaps materialize once, the period
+    // answer is an OR-merge + popcount per bucket summed over buckets —
+    // never a rescan of the stream. The naive `Σ daily distinct` rides
+    // alongside to show WHY this exists (distinct doesn't sum: the
+    // overcount is visible in the gated row), and the oracle checks the
+    // merged count for strict EQUALITY against COUNT(DISTINCT) — no
+    // tolerance, because bitmaps are exact. A day can span buckets, so
+    // each bucket's day set is unioned per type before it is counted.
+    // The HLL twin of this pattern is q_agg_hll_sliding; this is the
+    // exact variant.
     "q_agg_bitmap_rollup" -> ((s, dir) => {
-      import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-      val sk = udaf(graft.functions.BitmapSketchAgg,
-        ExpressionEncoder[Long]())
-      val mg = udaf(graft.functions.BitmapOrCountAgg,
-        ExpressionEncoder[Array[Byte]]())
-      Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(sk(col("user_id")).as("bm"),
-          countDistinct(col("user_id")).as("d"))
+      bitmapPartials(Tables.events(s, dir),
+        col("event_type"), to_date(col("ts")).as("day"))()
+        .groupBy(col("event_type"), col("bucket"))
+        .agg(bitmap_count(bitmap_or_agg(col("bm"))).as("n"),
+          sum(bitmap_count(col("bm"))).as("d"),
+          collect_set(col("day")).as("days"))
         .groupBy(col("event_type"))
-        .agg(mg(col("bm")).as("distinct_period"),
+        .agg(sum(col("n")).as("distinct_period"),
           sum(col("d")).as("sum_daily"),
-          count(lit(1)).as("n_days"))
+          size(array_distinct(flatten(collect_list(col("days")))))
+            .cast("long").as("n_days"))
         .orderBy(col("event_type"))
     }),
 
@@ -904,30 +917,25 @@ object AggregationQueries extends QueryCatalog {
     }),
 
     // EXACT trailing-7-day distinct users + DAU/WAU stickiness — the
-    // bitmap twin of q_agg_hll_sliding: daily bitmap partials OR-merge
-    // across the ≤7-day window (functions/BitmapOrCountAgg), so the
+    // bitmap twin of q_agg_hll_sliding: daily per-bucket bitmap partials
+    // (see bitmapPartials) OR-merge across the ≤7-day window, so the
     // sliding exact-distinct never rescans events and the oracle checks
     // EQUALITY, not a tolerance. The day×day band join broadcasts the
     // daily relation (a calendar never outgrows a broadcast); the
     // stickiness ratio (DAU/WAU, Facebook's engagement metric) rides
     // out of the same row.
     "q_agg_bitmap_sliding" -> ((s, dir) => {
-      import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-      val sk = udaf(graft.functions.BitmapSketchAgg,
-        ExpressionEncoder[Long]())
-      val mg = udaf(graft.functions.BitmapOrCountAgg,
-        ExpressionEncoder[Array[Byte]]())
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(sk(col("user_id")).as("bm"),
-          countDistinct(col("user_id")).as("dau"))
-      val anchors = daily.select(col("day").as("anchor"),
-        col("dau").as("dau_a"))
+      val daily = bitmapPartials(Tables.events(s, dir),
+        to_date(col("ts")).as("day"))()
+      val anchors = daily.groupBy(col("day").as("anchor"))
+        .agg(sum(bitmap_count(col("bm"))).as("dau_a"))
       anchors
         .join(broadcast(daily),
           datediff(col("anchor"), col("day")).between(0, 6))
+        .groupBy(col("anchor"), col("dau_a"), col("bucket"))
+        .agg(bitmap_count(bitmap_or_agg(col("bm"))).as("n"))
         .groupBy(col("anchor"), col("dau_a"))
-        .agg(mg(col("bm")).as("wau7"))
+        .agg(sum(col("n")).as("wau7"))
         .select(date_format(col("anchor"), "yyyy-MM-dd").as("day"),
           col("dau_a").as("dau"), col("wau7"),
           round(col("dau_a").cast("double") / col("wau7"), 6)
@@ -976,21 +984,21 @@ object AggregationQueries extends QueryCatalog {
     // exactly what this pattern deletes. Day×day and event×day range
     // joins broadcast the day-cardinality side — a calendar dim never
     // outgrows a broadcast.
-    // EXACT mergeable distinct via bitmap partials
-    // (functions/BitmapDistinctAgg): when the key domain is bounded, a
-    // fixed 8 KB bitmap per group replaces both the exact
-    // shuffle-every-key countDistinct AND the approximate HLL — partials
-    // OR-merge map-side like any sketch, but the answer is exact, so the
-    // oracle checks EQUALITY against COUNT(DISTINCT), no tolerance
-    // booleans. The countDistinct column alongside is the in-query
-    // self-check (and what the 100 TB plan deletes).
+    // EXACT mergeable distinct via bitmap partials (Spark's
+    // bitmap_construct_agg, see bitmapPartials): a 4 KB bitmap per
+    // (group, key bucket) replaces both the exact shuffle-every-key
+    // countDistinct AND the approximate HLL — partials OR-merge map-side
+    // like any sketch, but the answer is exact, so the oracle checks
+    // EQUALITY against COUNT(DISTINCT), no tolerance booleans. The
+    // per-bucket distinct-set sizes summed alongside are the in-query
+    // self-check (and what the 100 TB plan deletes); a set, unlike
+    // countDistinct, adds no shuffle to the bitmap aggregate's plan.
     "q_agg_bitmap_distinct" -> ((s, dir) => {
-      val bm = udaf(graft.functions.BitmapDistinctAgg,
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Long]())
-      Tables.events(s, dir)
+      bitmapPartials(Tables.events(s, dir), col("event_type"))(
+        size(collect_set(col("user_id"))).as("d"))
         .groupBy(col("event_type"))
-        .agg(bm(col("user_id")).as("distinct_users"),
-          countDistinct(col("user_id")).as("check_exact"))
+        .agg(sum(bitmap_count(col("bm"))).as("distinct_users"),
+          sum(col("d")).as("check_exact"))
         .select(col("event_type"), col("distinct_users"),
           (col("distinct_users") === col("check_exact")).as("bitmap_exact"))
         .orderBy(col("event_type"))

@@ -238,11 +238,12 @@ object JoinQueries extends QueryCatalog {
 
     // Bloom-pruned semi join — the runtime-filter pattern as an explicit
     // operator ([[graft.operators.BloomJoin]]): the NATION_7 suppliers'
-    // key set collapses to a 1 KB broadcast bitmap whose membership test
-    // runs in the scan stage (pure codegen xxhash64 + bit probes), so
-    // non-joining fact rows never reach the verify join's shuffle; the
-    // exact semi join then removes bloom false positives, making the
-    // result bit-identical to the plain semi join the oracle runs.
+    // key set collapses to a 1 KB Spark bloom filter (1,024 expected
+    // keys), computed once as a scalar subquery, whose `might_contain`
+    // test runs in the lineitem scan's Filter — so non-joining fact rows
+    // never reach the verify join's shuffle; the exact semi join then
+    // removes bloom false positives, making the result bit-identical to
+    // the plain semi join the oracle runs.
     "q_join_bloom_prune" -> ((s, dir) => {
       val dim = Tables.supplier(s, dir)
         .join(broadcast(Tables.nation(s, dir)
@@ -251,7 +252,7 @@ object JoinQueries extends QueryCatalog {
         .select(col("s_suppkey"))
       graft.operators.BloomJoin
         .prunedSemiJoin(Tables.lineitem(s, dir), col("l_suppkey"),
-          dim, col("s_suppkey"), numWords = 128, numHashes = 5)
+          dim, col("s_suppkey"), expectedItems = 1024)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_rows"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double")

@@ -68,14 +68,15 @@ object MultimodalQueries extends QueryCatalog {
         .orderBy(col("vec_id"))
     }),
 
-    // REAL PNG decode (r8 — operators/ImageCodec.decodePng, pure JVM:
-    // JDK-core zlib + the five scanline filters + CRC chunk walk). Same
-    // oracle discipline as the PPM tier: pixels come from a
-    // deterministic formula, encode to REAL PNG bytes — each row
-    // encoded with filter type vec_id % 5, so ALL FIVE unfilter paths
-    // (None/Sub/Up/Average/Paeth) run through the gate — and the
-    // pipeline decodes the bytes back and computes exact channel +
-    // thumbnail sums. The oracle recomputes every number from the
+    // REAL PNG decode (r8 — operators/ImageCodec, pure JVM: a JDK-core
+    // zlib encoder with the five scanline filters; decodePng checks the
+    // chunk CRCs and the IHDR profile, then reads through the JDK's
+    // javax.imageio PNG reader). Same oracle discipline as the PPM
+    // tier: pixels come from a deterministic formula, encode to REAL
+    // PNG bytes — each row encoded with filter type vec_id % 5, so ALL
+    // FIVE unfilter paths (None/Sub/Up/Average/Paeth) run through the
+    // gate — and the pipeline decodes the bytes back and computes exact
+    // channel + thumbnail sums. The oracle recomputes every number from the
     // formula alone; any zlib/filter/CRC corruption hash-fails. This
     // closes the long-declared PNG limitation; JPEG below gates by
     // tolerance (lossy).

@@ -109,35 +109,31 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("BitmapDistinctAgg: OR-merge partials equal one fold; overflow fails loud") {
-    import graft.functions.BitmapDistinctAgg
-    val keys = Seq.tabulate(3000)(i => (i * 37 % 500).toLong)
-    val whole = keys.foldLeft(BitmapDistinctAgg.zero)(BitmapDistinctAgg.reduce)
-    val (a, b) = keys.splitAt(777)
-    val merged = BitmapDistinctAgg.merge(
-      a.foldLeft(BitmapDistinctAgg.zero)(BitmapDistinctAgg.reduce),
-      b.foldLeft(BitmapDistinctAgg.zero)(BitmapDistinctAgg.reduce))
-    assert(BitmapDistinctAgg.finish(whole) == keys.distinct.size.toLong)
-    assert(whole.toSeq == merged.toSeq)
-    val over = BitmapDistinctAgg.reduce(BitmapDistinctAgg.zero,
-      BitmapDistinctAgg.MaxId.toLong)
-    assertThrows[IllegalArgumentException](BitmapDistinctAgg.finish(over))
-  }
-
-  test("Bitmap sketch → OR-count rollup equals direct distinct") {
-    import graft.functions.{BitmapOrCountAgg, BitmapSketchAgg}
-    // three "daily" groups with overlapping keys: the rollup of the three
-    // serialized sketches must equal the distinct count of the union,
-    // NOT the sum of the per-group distincts.
-    val days = Seq(
-      Seq(1L, 2L, 3L, 100L),
-      Seq(2L, 3L, 4L),
-      Seq(100L, 101L, 1L))
-    val sketches = days.map(d =>
-      BitmapSketchAgg.finish(d.foldLeft(BitmapSketchAgg.zero)(BitmapSketchAgg.reduce)))
-    val rolled = BitmapOrCountAgg.finish(
-      sketches.foldLeft(BitmapOrCountAgg.zero)(BitmapOrCountAgg.reduce))
-    assert(rolled == days.flatten.distinct.size.toLong)
-    assert(rolled < days.map(_.distinct.size).sum) // why the op exists
+  test("bitmap_* built-ins: bucketed counts equal countDistinct, any key") {
+    import spark.implicits._
+    // Keys in many 32,768-id buckets: zero, negatives, ids >= 2^16, a
+    // huge one, and duplicates (key 0 in two groups); three groups stand
+    // in for the days of a rollup.
+    val rnd = new scala.util.Random(7)
+    val keys = Seq(0L, 0L, -1L, -32767L, -32768L, -32769L, 32767L, 32768L,
+      32769L, 65535L, 65536L, 1L << 40) ++
+      Seq.fill(3000)(rnd.nextInt(1 << 18).toLong - (1L << 17))
+    val df = keys.zipWithIndex.map { case (k, i) => (i % 3, k) }.toDF("g", "k")
+    val parts = df
+      .groupBy(col("g"), bitmap_bucket_number(col("k")).as("b"))
+      .agg(bitmap_construct_agg(bitmap_bit_position(col("k"))).as("bm"))
+    assert(parts.select(col("b")).distinct().count() > 8)
+    val perGroup = parts
+      .groupBy(col("g")).agg(sum(bitmap_count(col("bm"))).as("n"))
+      .orderBy(col("g")).collect().toSeq
+    val exact = df.groupBy(col("g")).agg(countDistinct(col("k")).as("n"))
+      .orderBy(col("g")).collect().toSeq
+    assert(perGroup == exact)
+    // the rollup: OR-merge the group bitmaps per bucket, then sum
+    val rolled = parts.groupBy(col("b"))
+      .agg(bitmap_count(bitmap_or_agg(col("bm"))).as("n"))
+      .agg(sum(col("n"))).head().getLong(0)
+    assert(rolled == keys.distinct.size.toLong)
+    assert(rolled < perGroup.map(_.getLong(1)).sum) // distinct doesn't sum
   }
 }

@@ -785,8 +785,8 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     }
     // greyscale (colorType 0) replicates to RGB — hand-built image:
     // 2x2 grey values with filter 0
-    def handPng(colorType: Int, channels: Int,
-        pix: Array[Byte]): Array[Byte] = {
+    def handPng(colorType: Int, channels: Int, pix: Array[Byte],
+        depth: Int = 8): Array[Byte] = {
       val w = 2; val h = 2
       val stride = w * channels
       val raw = new Array[Byte]((stride + 1) * h)
@@ -808,7 +808,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       }
       Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte) ++
         chunk("IHDR", be32(w) ++ be32(h) ++
-          Array[Byte](8, colorType.toByte, 0, 0, 0)) ++
+          Array[Byte](depth.toByte, colorType.toByte, 0, 0, 0)) ++
         chunk("IDAT", out.toByteArray) ++ chunk("IEND", Array.empty[Byte])
     }
     val grey = ImageCodec.decodePng(
@@ -825,6 +825,16 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val bad = good.clone()
     bad(20) = (bad(20) ^ 0x01).toByte // inside IHDR payload
     intercept[IllegalArgumentException] { ImageCodec.decodePng(bad) }
+    // a flipped bit in the IHDR CRC field itself: ImageIO alone decodes
+    // this image, so the chunk walk must catch it
+    val badCrc = good.clone()
+    badCrc(29) = (badCrc(29) ^ 0x01).toByte // IHDR CRC, bytes 29-32
+    intercept[IllegalArgumentException] { ImageCodec.decodePng(badCrc) }
+    // a well-formed 16-bit greyscale image is outside the 8-bit profile
+    intercept[IllegalArgumentException] {
+      ImageCodec.decodePng(handPng(0, 2, Array.tabulate[Byte](8)(_.toByte),
+        depth = 16))
+    }
     intercept[IllegalArgumentException] {
       ImageCodec.decodePng("nope".getBytes("US-ASCII"))
     }
@@ -894,25 +904,30 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val fact = Tables.lineitem(spark, sf).select(col("l_suppkey"))
     val dim = Tables.supplier(spark, sf)
       .filter(col("s_suppkey") % 3 === 0).select(col("s_suppkey"))
-    val exact = fact.join(dim.distinct(),
+    // 286 keys in a 64-bit filter (8 expected items) saturate it — a
+    // visible false-positive regime: candidates must still be a
+    // superset of the true matches…
+    val many = spark.range(0, 2000).filter(col("id") % 7 === 0)
+      .select(col("id").as("s_suppkey"))
+    def exact(d: org.apache.spark.sql.DataFrame) = fact.join(d.distinct(),
       col("l_suppkey") === col("s_suppkey"), "left_semi")
-    // Tiny filter (64 words) to force a visible false-positive regime:
-    // candidates must still be a superset of the true matches…
-    val cand = BloomJoin.candidates(fact, col("l_suppkey"), dim,
-      col("s_suppkey"), numWords = 64, numHashes = 5)
-    assert(cand.count() >= exact.count(),
+    val cand = BloomJoin.candidates(fact, col("l_suppkey"), many,
+      col("s_suppkey"), expectedItems = 8)
+    assert(exact(many).except(cand).count() == 0,
       "bloom prefilter dropped true matches (false negative!)")
+    assert(cand.count() > exact(many).count(), "filter not saturated")
     // …and the verified join must be bit-identical to the plain semi join
     // at ANY filter size, saturated or roomy.
-    for (words <- Seq(1, 64, 1024)) {
-      val pruned = BloomJoin.prunedSemiJoin(fact, col("l_suppkey"), dim,
-        col("s_suppkey"), numWords = words, numHashes = 5)
+    for (d <- Seq(dim, many); items <- Seq(1L, 512L, 8192L)) {
+      val pruned = BloomJoin.prunedSemiJoin(fact, col("l_suppkey"), d,
+        col("s_suppkey"), expectedItems = items)
         .select(col("l_suppkey"))
-      assert(pruned.count() == exact.count(), s"numWords=$words count")
-      assert(pruned.except(exact).count() == 0 &&
-        exact.except(pruned).count() == 0, s"numWords=$words contents")
+      val want = exact(d)
+      assert(pruned.count() == want.count(), s"expectedItems=$items count")
+      assert(pruned.except(want).count() == 0 &&
+        want.except(pruned).count() == 0, s"expectedItems=$items contents")
     }
-    // Empty dim ⇒ all-zero bitmap ⇒ zero candidates, no error.
+    // Empty dim ⇒ NULL filter ⇒ zero candidates, no error.
     val none = BloomJoin.prunedSemiJoin(fact, col("l_suppkey"),
       dim.filter(lit(false)), col("s_suppkey"))
     assert(none.count() == 0L)

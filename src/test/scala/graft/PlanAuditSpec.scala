@@ -686,8 +686,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // Both typed sketch Aggregators (CMS counters, HLL buffers) must
     // partial-aggregate map-side — the property that makes a 100 TB key
     // stream fold into KB-sized buffers before the shuffle.
-    for (q <- Seq("q_agg_countmin", "q_agg_sketch_hll",
-        "q_agg_bitmap_distinct")) {
+    for (q <- Seq("q_agg_countmin", "q_agg_sketch_hll")) {
       val plan = SparkEntry.queries(q)(spark, sf)
         .queryExecution.executedPlan.toString
       assert(plan.contains("ObjectHashAggregate"),
@@ -811,12 +810,43 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
         plan.take(1500))
   }
 
-  test("bitmap rollup folds through ObjectHashAggregate partials") {
-    val plan = SparkEntry.queries("q_agg_bitmap_rollup")(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"),
-      "bitmap Aggregators should plan as ObjectHashAggregate " +
-        "(map-side partials):\n" + plan.take(1500))
+  test("bitmap distinct and rollup fold through map-side bitmap partials") {
+    // Spark's bitmap_construct_agg has no fixed-width buffer, so it plans
+    // as a SortAggregate; the partial stage below the shuffle is what
+    // folds each partition's keys into 4 KB bitmaps.
+    for (q <- Seq("q_agg_bitmap_distinct", "q_agg_bitmap_rollup")) {
+      val plan = SparkEntry.queries(q)(spark, sf)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("partial_bitmap_construct_agg"),
+        s"$q: bitmap partials lost their map-side stage:\n" +
+          plan.take(1500))
+    }
+  }
+
+  test("q_join_bloom_prune filters the lineitem scan with might_contain") {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val plan = SparkEntry.queries("q_join_bloom_prune")(spark, sf)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    val text = plan.toString
+    assert(!text.contains("BroadcastNestedLoopJoin") &&
+      !text.contains("CartesianProduct"),
+      "the bloom filter must not ride a nested-loop join:\n" + text)
+    val probe = plan.collect {
+      case f: FilterExec
+          if f.condition.exists(_.isInstanceOf[BloomFilterMightContain]) &&
+            (f.collectLeaves() match {
+              case Seq(scan: FileSourceScanExec) =>
+                scan.output.exists(_.name == "l_suppkey")
+              case _ => false
+            }) => f
+    }
+    assert(probe.nonEmpty,
+      "no might_contain Filter directly over the lineitem scan:\n" + text)
   }
 
   test("attribution and as-of plans stay key-partitioned — no cartesian") {
