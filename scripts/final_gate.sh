@@ -59,6 +59,15 @@ copies=$(grep -rlwE 'BloomFilterAgg|BitmapDistinctAgg|BitmapSketchAgg|BitmapOrCo
 [ -z "$copies" ] ||
   fail "hand-written bloom/bitmap aggregator in src/: $copies"
 
+# A served request is one Spark execution: results documents render on
+# the driver from the collected page, and the server never counts first.
+if grep -qwE 'collect_list|row_number' src/main/scala/graft/rdf/SparqlResults.scala; then
+  fail "Spark-side results rendering (collect_list/row_number) in SparqlResults.scala"
+fi
+if grep -qF '.count()' src/main/scala/graft/rdf/SparqlServer.scala; then
+  fail ".count() in SparqlServer.scala: collect the capped page once instead"
+fi
+
 sbt -batch compile >/tmp/final_gate_compile.log 2>&1 ||
   { tail -20 /tmp/final_gate_compile.log >&2; fail "sbt compile failed"; }
 

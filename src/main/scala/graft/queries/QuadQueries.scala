@@ -3094,9 +3094,10 @@ object QuadQueries extends QueryCatalog {
 
     // SPARQL results JSON document (r8, W3C sparql-results+json — what
     // the reference's sparqlwrapper client actually parses,
-    // cam/graphdb.py:34-58): head/vars + sorted bindings as ONE row,
-    // hash-pinned byte-for-byte against an independently nested
-    // string_agg oracle.
+    // cam/graphdb.py:34-58): head/vars + bindings in solution order as
+    // ONE row, hash-pinned byte-for-byte against an independently nested
+    // string_agg oracle (its order by serialized binding is ?addr's
+    // order: the `"` after each distinct IRI sorts before any digit).
     "q_sparql_results_json" -> ((s, dir) => {
       val sol = graft.rdf.SparqlParser.execute(fullQuads(s, dir),
         s"""PREFIX sdo: <https://schema.org/>
@@ -3150,10 +3151,12 @@ object QuadQueries extends QueryCatalog {
 
     // W3C SPARQL XML results document (r9): the third standard results
     // serialization (the format SPARQLWrapper's XML mode consumes) —
-    // same page query as the JSON gate, same distribution shape (escape
-    // + concat per row, one sorted global aggregation); the oracle
-    // rebuilds the whole document with an independent string_agg and
-    // its own XML entity escapes.
+    // same page query as the JSON gate, rendered on the driver in row
+    // order; the oracle rebuilds the whole document with an independent
+    // string_agg and its own XML entity escapes. Its string_agg lists
+    // results in the byte order of their `<result>` elements, so the
+    // page is re-sorted that way: by the distinct IRI followed by the
+    // `<` that closes `<uri>` (digits sort before it).
     "q_sparql_results_xml" -> ((s, dir) => {
       val sol = graft.rdf.SparqlParser.execute(fullQuads(s, dir),
         s"""PREFIX sdo: <https://schema.org/>
@@ -3162,8 +3165,8 @@ object QuadQueries extends QueryCatalog {
            |  ?b sdo:additionalType <$PartNationT> .
            |  ?b sdo:value ?nation
            |} ORDER BY ?addr LIMIT 400""".stripMargin)
-      graft.rdf.SparqlResults
-        .xml(sol, Map("addr" -> "uri", "nation" -> "literal"))
+      graft.rdf.SparqlResults.xml(sol.orderBy(concat(col("addr"), lit("<"))),
+        Map("addr" -> "uri", "nation" -> "literal"))
     }),
 
     // SPARQL UPDATE graph management (r8): COPY / ADD / MOVE / DROP

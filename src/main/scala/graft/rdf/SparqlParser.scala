@@ -1334,12 +1334,31 @@ object SparqlParser {
     out.result()
   }
 
-  def parse(q: String): Query = {
+  def parse(q: String): Query = parsing {
     val p = new P(applyPrefixes(tokenize(q)))
     val parsed = parseQuery(p)
     require(p.ts.isEmpty, s"trailing tokens: ${p.ts.mkString(" ")}")
     parsed
   }
+
+  /** A malformed query or update text. Every failure inside a parse
+    * step surfaces as this one type — SPARQL 1.1 Protocol §2.1.4's 400 —
+    * while failures after parsing (an unregistered SERVICE, a failed
+    * job) keep their own types. */
+  final class ParseError(message: String, cause: Throwable)
+      extends IllegalArgumentException(message, cause)
+
+  /** Run a parse step, re-raising its failures as [[ParseError]]. The
+    * recursive-descent grammar nests one call per `(` or `{`, so a deep
+    * enough text overflows the stack; that is a malformed query too. */
+  private[rdf] def parsing[T](step: => T): T =
+    try step catch {
+      case e: ParseError => throw e
+      case e: StackOverflowError =>
+        throw new ParseError("query nests too deeply to parse", e)
+      case scala.util.control.NonFatal(e) =>
+        throw new ParseError(Option(e.getMessage).getOrElse(e.toString), e)
+    }
 
   /** Precedence-correct arithmetic over set functions, projected
     * aliases and numbers (r11): `term = AGG([DISTINCT] ?v|*) | ?alias

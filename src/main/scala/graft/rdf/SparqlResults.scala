@@ -1,7 +1,9 @@
 package graft.rdf
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SPARQL query-results wire formats — the serialization half of the
   * serving protocol. The reference's serving stack speaks these on the
@@ -10,187 +12,168 @@ import org.apache.spark.sql.functions._
   * default response format is the W3C JSON results document), so an
   * engine replacing that store must produce the same documents.
   *
-  *  - [[csv]] — W3C "SPARQL 1.1 Query Results CSV Format": header of
-  *    variable names, one RFC 4180 row per solution. The CSV format is
-  *    deliberately UNTYPED by spec (plain lexical values, no term
+  *  - [[csvLines]] — W3C "SPARQL 1.1 Query Results CSV Format": header
+  *    of variable names, one RFC 4180 row per solution. The CSV format
+  *    is deliberately UNTYPED by spec (plain lexical values, no term
   *    syntax) — exactly the information a solution relation carries,
   *    so the mapping is lossless per spec.
-  *  - [[tsv]] — the TSV variant: full term syntax (`<iri>`, quoted
+  *  - [[tsvLines]] — the TSV variant: full term syntax (`<iri>`, quoted
   *    literals), so term kinds must be supplied per variable.
-  *  - [[json]] — "SPARQL 1.1 Query Results JSON Format":
-  *    `{"head":{"vars":[…]},"results":{"bindings":[…]}}` as ONE row.
-  *    Binding type (`uri` vs `literal`) likewise comes from the
-  *    caller's per-variable kind map — a solution relation is untyped,
-  *    and guessing types from value shapes would be silently wrong.
+  *  - [[jsonDoc]] / [[xmlDoc]] — "SPARQL 1.1 Query Results JSON Format"
+  *    and the XML format. Binding type (`uri` vs `literal`) likewise
+  *    comes from the caller's per-variable kind map — a solution
+  *    relation is untyped, and guessing types from value shapes would
+  *    be silently wrong.
+  *  - [[askJsonDoc]] / [[askXmlDoc]] — the boolean documents of ASK.
   *
-  * Everything renders distributively (an escape + concat projection per
-  * row; the JSON document adds one sorted global aggregation, the
-  * small-result serving contract — result sets are LIMIT-bounded pages,
-  * not corpora). Unbound (null) bindings follow each spec: empty CSV
-  * field, omitted JSON binding entry.
+  * Results documents are LIMIT-bounded pages, so they render on the
+  * driver from a collected page: the variable names and each
+  * solution's values as strings ([[strings]] — Spark's own casts, so
+  * lexical forms match a Spark-side render byte for byte), in solution
+  * order, which is the document order the W3C formats require of an
+  * ORDER BY query. Unbound (null) bindings follow each spec: empty
+  * CSV/TSV field, omitted JSON/XML binding. The DataFrame forms collect
+  * the whole relation and render the same way; the catalog gates and
+  * in-process callers use them.
   */
 object SparqlResults {
 
+  /** The solution relation with every column cast to string — the page
+    * a server collects and these renderers read. */
+  def strings(solutions: DataFrame): DataFrame =
+    solutions.select(solutions.columns.toSeq
+      .map(n => col(n).cast("string").as(n)): _*)
+
+  private def kindOf(kinds: Map[String, String], n: String): String =
+    kinds.getOrElse(n, "literal")
+
+  /** The N-Triples literal escape `graft_nt_escape` runs. */
+  private def ntEsc(v: String): String =
+    graft.plans.NtEscape.compute(UTF8String.fromString(v)).toString
+
   /** RFC 4180 field: quote when the value contains a comma, quote, CR
     * or LF; double interior quotes; unbound renders empty. */
-  private def csvField(c: Column): Column = {
-    val v = coalesce(c.cast("string"), lit(""))
-    when(v.rlike("[\",\r\n]"),
-      concat(lit("\""), regexp_replace(v, "\"", "\"\""), lit("\"")))
-      .otherwise(v)
-  }
+  private def csvField(v: String): String =
+    if (v == null) ""
+    else if (v.exists(c => c == '"' || c == ',' || c == '\r' || c == '\n'))
+      "\"" + v.replace("\"", "\"\"") + "\""
+    else v
 
-  /** Data-row `ord`: a real per-solution sequence number when the
-    * caller supplies the query's ORDER BY keys (an ordered/paged query's
-    * solution sequence is part of the results document per the W3C
-    * formats — shuffles would otherwise discard it), constant 1
-    * otherwise (unordered query: any row order is a valid document).
-    * The sequence is a single-partition window — fine by the serving
-    * contract (result sets are LIMIT-bounded pages, not corpora). */
-  private def dataOrd(orderBy: Seq[Column]): Column =
-    if (orderBy.isEmpty) lit(1)
-    else row_number().over(org.apache.spark.sql.expressions.Window
-      .orderBy(orderBy: _*))
-
-  /** The results as CSV lines: `(ord, value)` with the header at
-    * ord 0, data rows following — write `orderBy(ord).select(value)`
-    * for the document, or compare the relation directly. Pass the
-    * query's ORDER BY keys as `orderBy` to preserve solution sequence
-    * (see [[dataOrd]]). */
-  def csv(solutions: DataFrame, orderBy: Seq[Column] = Nil): DataFrame = {
-    val cols = solutions.columns.toSeq
-    val header = solutions.sparkSession.range(1)
-      .select(lit(0).as("ord"), lit(cols.mkString(",")).as("value"))
-    header.unionByName(
-      solutions.select(dataOrd(orderBy).as("ord"),
-        concat_ws(",", cols.map(n => csvField(col(n))): _*).as("value")))
-  }
+  /** CSV lines: the header of variable names, then one line per row. */
+  def csvLines(vars: Seq[String], rows: Seq[Row]): Seq[String] =
+    vars.mkString(",") +: rows.map(r =>
+      vars.indices.map(i => csvField(r.getString(i))).mkString(","))
 
   /** TSV lines with full term syntax: `kinds` maps a variable to
     * `uri` | `literal` (default literal). Tabs/newlines in literals are
     * escaped N-Triples-style, as the TSV spec requires. */
-  def tsv(solutions: DataFrame,
-      kinds: Map[String, String] = Map.empty,
-      orderBy: Seq[Column] = Nil): DataFrame = {
-    val cols = solutions.columns.toSeq
-    def term(n: String): Column = {
-      val v = col(n).cast("string")
-      val rendered = kinds.getOrElse(n, "literal") match {
-        case "uri" => concat(lit("<"), v, lit(">"))
-        case _ => concat(lit("\""),
-          call_function("graft_nt_escape", v), lit("\""))
-      }
-      coalesce(rendered, lit("")) // unbound: empty field
-    }
-    val header = solutions.sparkSession.range(1)
-      .select(lit(0).as("ord"),
-        lit(cols.map("?" + _).mkString("\t")).as("value"))
-    header.unionByName(
-      solutions.select(dataOrd(orderBy).as("ord"),
-        concat_ws("\t", cols.map(term): _*).as("value")))
-  }
+  def tsvLines(vars: Seq[String], rows: Seq[Row],
+      kinds: Map[String, String] = Map.empty): Seq[String] =
+    vars.map("?" + _).mkString("\t") +: rows.map(r =>
+      vars.indices.map { i =>
+        val v = r.getString(i)
+        if (v == null) "" // unbound: empty field
+        else if (kindOf(kinds, vars(i)) == "uri") "<" + v + ">"
+        else "\"" + ntEsc(v) + "\""
+      }.mkString("\t"))
 
-  /** The W3C JSON results document for an ASK query:
-    * `{"head":{},"boolean":b}` — `ask` is the 1-row boolean relation
-    * the parser's ASK verb returns. */
-  def askJson(ask: DataFrame): DataFrame =
-    ask.select(concat(lit("{\"head\":{},\"boolean\":"),
-      col("ask").cast("string"), lit("}")).as("value"))
-
-  /** The XML results document for an ASK query:
-    * `<sparql…><head/><boolean>b</boolean></sparql>`. */
-  def askXml(ask: DataFrame): DataFrame =
-    ask.select(concat(
-      lit("<?xml version=\"1.0\"?>" +
-        "<sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">" +
-        "<head/><boolean>"),
-      col("ask").cast("string"),
-      lit("</boolean></sparql>")).as("value"))
+  /** The W3C JSON results document:
+    * `{"head":{"vars":[…]},"results":{"bindings":[…]}}`. `kinds` maps
+    * variables to the binding `type` (default `literal`). */
+  def jsonDoc(vars: Seq[String], rows: Seq[Row],
+      kinds: Map[String, String] = Map.empty): String =
+    rows.map { r =>
+      vars.indices.filter(r.getString(_) != null).map { i =>
+        "\"" + vars(i) + "\":{\"type\":\"" + kindOf(kinds, vars(i)) +
+          "\",\"value\":\"" + ntEsc(r.getString(i)) + "\"}"
+      }.mkString("{", ",", "}")
+    }.mkString(
+      "{\"head\":{\"vars\":[" + vars.map("\"" + _ + "\"").mkString(",") +
+        "]},\"results\":{\"bindings\":[", ",", "]}}")
 
   /** XML content escape — the five predefined entities' three that
     * matter in content position (& first, then < and >). */
-  private def xmlEsc(c: Column): Column =
-    regexp_replace(regexp_replace(regexp_replace(c.cast("string"),
-      "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
+  private def xmlEsc(v: String): String =
+    v.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
-  /** The W3C "SPARQL Query Results XML Format" document as one row:
-    * `<sparql><head><variable name=…/></head><results><result>
-    * <binding name=…><uri|literal>…` — the third standard results
-    * serialization next to [[csv]]/[[tsv]]/[[json]] (the format
-    * SPARQLWrapper's XML mode consumes). `kinds` maps variables to
-    * `uri` | `literal` (default literal); unbound bindings are omitted
-    * from their result element per spec. Same distribution shape as
-    * [[json]]: an escape + concat projection per row, then one sorted
-    * global aggregation (results documents are LIMIT-bounded pages). */
-  def xml(solutions: DataFrame,
-      kinds: Map[String, String] = Map.empty,
-      orderBy: Seq[Column] = Nil): DataFrame = {
-    val cols = solutions.columns.toSeq
-    val head = cols.map(v => s"""<variable name="$v"/>""").mkString
-    val entries = cols.map { n =>
-      val t = kinds.getOrElse(n, "literal") match {
-        case "uri" => "uri"
-        case _ => "literal"
-      }
-      when(col(n).isNotNull,
-        concat(lit(s"""<binding name="$n"><$t>"""),
-          xmlEsc(col(n)), lit(s"</$t></binding>")))
-    }
-    val result = concat(lit("<result>"), concat_ws("", entries: _*),
-      lit("</result>"))
-    val sorted =
-      if (orderBy.isEmpty)
-        solutions.select(result.as("b"))
-          .agg(sort_array(collect_list(col("b"))).as("bs"))
-      else
-        solutions
-          .select(struct(orderBy :+ result.as("_b"): _*).as("kb"))
-          .agg(sort_array(collect_list(col("kb"))).as("kbs"))
-          .select(transform(col("kbs"), x => x.getField("_b")).as("bs"))
-    sorted.select(concat(
-      lit("<?xml version=\"1.0\"?>" +
-        "<sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">" +
-        s"<head>$head</head><results>"),
-      array_join(col("bs"), ""),
-      lit("</results></sparql>")).as("value"))
-  }
+  private val XmlOpen = "<?xml version=\"1.0\"?>" +
+    "<sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">"
 
-  /** The W3C JSON results document as one row. `kinds` maps variables
-    * to `uri` | `literal` (default literal). With `orderBy` keys the
-    * bindings array preserves the query's solution sequence (the W3C
-    * results document for an ORDER BY/LIMIT-paged query must — the
-    * collected structs sort by the keys, then project back to the
-    * serialized binding); without, bindings sort by their serialized
-    * form so the document is at least deterministic. */
+  /** The W3C "SPARQL Query Results XML Format" document (the format
+    * SPARQLWrapper's XML mode consumes): `kinds` maps variables to
+    * `uri` | `literal` (default literal). */
+  def xmlDoc(vars: Seq[String], rows: Seq[Row],
+      kinds: Map[String, String] = Map.empty): String =
+    rows.map { r =>
+      vars.indices.filter(r.getString(_) != null).map { i =>
+        val t = if (kindOf(kinds, vars(i)) == "uri") "uri" else "literal"
+        s"""<binding name="${vars(i)}"><$t>""" + xmlEsc(r.getString(i)) +
+          s"</$t></binding>"
+      }.mkString("<result>", "", "</result>")
+    }.mkString(
+      XmlOpen + vars.map(v => s"""<variable name="$v"/>""")
+        .mkString("<head>", "", "</head>") + "<results>",
+      "", "</results></sparql>")
+
+  /** The JSON results document for an ASK query:
+    * `{"head":{},"boolean":b}`. */
+  def askJsonDoc(b: Boolean): String = s"""{"head":{},"boolean":$b}"""
+
+  /** The XML results document for an ASK query:
+    * `<sparql…><head/><boolean>b</boolean></sparql>`. */
+  def askXmlDoc(b: Boolean): String =
+    XmlOpen + s"<head/><boolean>$b</boolean></sparql>"
+
+  // -- DataFrame forms: collect, render on the driver, return the rows --
+
+  private val ValueSchema = StructType(Seq(
+    StructField("value", StringType, nullable = false)))
+  private val OrdSchema = StructType(
+    StructField("ord", IntegerType, nullable = false) +: ValueSchema)
+
+  private def frame(like: DataFrame, schema: StructType,
+      rows: Seq[Row]): DataFrame =
+    like.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema)
+
+  private def collected(solutions: DataFrame): Seq[Row] =
+    strings(solutions).collect().toSeq
+
+  /** `(ord, value)` lines: the header at ord 0, every data line at 1. */
+  private def ordLines(like: DataFrame, lines: Seq[String]): DataFrame =
+    frame(like, OrdSchema, lines.zipWithIndex.map { case (l, i) =>
+      Row(if (i == 0) 0 else 1, l) })
+
+  /** [[csvLines]] of the whole relation as `(ord, value)` rows. */
+  def csv(solutions: DataFrame): DataFrame =
+    ordLines(solutions,
+      csvLines(solutions.columns.toSeq, collected(solutions)))
+
+  /** [[tsvLines]] of the whole relation as `(ord, value)` rows. */
+  def tsv(solutions: DataFrame,
+      kinds: Map[String, String] = Map.empty): DataFrame =
+    ordLines(solutions,
+      tsvLines(solutions.columns.toSeq, collected(solutions), kinds))
+
+  /** [[jsonDoc]] of the whole relation as one `value` row. */
   def json(solutions: DataFrame,
-      kinds: Map[String, String] = Map.empty,
-      orderBy: Seq[Column] = Nil): DataFrame = {
-    def esc(c: Column) = call_function("graft_nt_escape", c)
-    val cols = solutions.columns.toSeq
-    val headVars = cols.map(v => "\"" + v + "\"").mkString(",")
-    // concat_ws skips null entries — an unbound variable's binding is
-    // omitted from the solution object, per spec
-    val entries = cols.map { n =>
-      val t = kinds.getOrElse(n, "literal")
-      when(col(n).isNotNull,
-        concat(lit("\"" + n + "\":{\"type\":\"" + t + "\",\"value\":\""),
-          esc(col(n).cast("string")), lit("\"}")))
-    }
-    val binding = concat(lit("{"), concat_ws(",", entries: _*), lit("}"))
-    val sortedBindings =
-      if (orderBy.isEmpty)
-        solutions.select(binding.as("b"))
-          .agg(sort_array(collect_list(col("b"))).as("bs"))
-      else
-        solutions
-          .select(struct(orderBy :+ binding.as("_b"): _*).as("kb"))
-          .agg(sort_array(collect_list(col("kb"))).as("kbs"))
-          .select(transform(col("kbs"), x => x.getField("_b")).as("bs"))
-    sortedBindings
-      .select(concat(
-        lit("{\"head\":{\"vars\":[" + headVars + "]},"),
-        lit("\"results\":{\"bindings\":["),
-        array_join(col("bs"), ","),
-        lit("]}}")).as("value"))
-  }
+      kinds: Map[String, String] = Map.empty): DataFrame =
+    frame(solutions, ValueSchema, Seq(Row(
+      jsonDoc(solutions.columns.toSeq, collected(solutions), kinds))))
+
+  /** [[xmlDoc]] of the whole relation as one `value` row. */
+  def xml(solutions: DataFrame,
+      kinds: Map[String, String] = Map.empty): DataFrame =
+    frame(solutions, ValueSchema, Seq(Row(
+      xmlDoc(solutions.columns.toSeq, collected(solutions), kinds))))
+
+  /** [[askJsonDoc]] per row of the parser's one-row `ask` relation. */
+  def askJson(ask: DataFrame): DataFrame =
+    frame(ask, ValueSchema, collected(ask.select("ask")).map(r =>
+      Row(askJsonDoc(r.getString(0).toBoolean))))
+
+  /** [[askXmlDoc]] per row of the parser's one-row `ask` relation. */
+  def askXml(ask: DataFrame): DataFrame =
+    frame(ask, ValueSchema, collected(ask.select("ask")).map(r =>
+      Row(askXmlDoc(r.getString(0).toBoolean))))
 }

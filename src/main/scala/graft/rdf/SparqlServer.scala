@@ -1,5 +1,8 @@
 package graft.rdf
 
+import java.nio.charset.StandardCharsets
+
+import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.DataFrame
 
 /** SPARQL 1.1 Protocol SERVER — the reference's entire serving tier is
@@ -24,18 +27,24 @@ import org.apache.spark.sql.DataFrame
   *    the reference's store-write endpoint (`cam/graphdb.py:52-58`)
   *
   * SELECT answers with the W3C results document the Accept header asks
-  * for — JSON (default), XML, CSV or TSV ([[SparqlResults]]; see
-  * [[negotiate]]) — ASK with the boolean document (JSON or XML),
-  * CONSTRUCT / DESCRIBE with `application/n-quads` text. Missing query
-  * → 400; execution failure → 500 with the message (the client
-  * surfaces the reference's non-200 RuntimeError).
+  * for — JSON (default), XML, CSV or TSV (see [[negotiate]]) — ASK with
+  * the boolean document (JSON or XML), CONSTRUCT / DESCRIBE with
+  * `application/n-quads` text.
   *
-  * Scale shape: the HTTP layer is driver-side by design — the serving
-  * contract is LIMIT-bounded result pages over a store the cluster
-  * scans, never the corpus over the wire. Each request runs one Spark
-  * query; the handler pool bounds concurrent requests, Spark's
-  * scheduler shares the cluster between them (FAIR pools apply
-  * unchanged). The store relation is lineage-cut once at construction
+  * One Spark execution per request: the handler collects at most
+  * `maxResultRows + 1` rows of the page — the solutions with every
+  * column cast to string, or the N-Quads lines of a CONSTRUCT — and
+  * [[SparqlResults]] renders the document on the driver from those
+  * rows, in solution order. The serving contract is LIMIT-bounded
+  * result pages over a store the cluster scans, never the corpus over
+  * the wire. Status codes: 400 for a missing or malformed query
+  * ([[SparqlParser.ParseError]]), 413 for a result over the row cap or
+  * a query body over 1 MiB, 500 with the message for a failure after
+  * parsing (the client surfaces the reference's non-200 RuntimeError).
+  *
+  * The handler pool bounds concurrent requests, Spark's scheduler
+  * shares the cluster between them (FAIR pools apply unchanged). The
+  * store relation is lineage-cut once at construction
   * ([[SparqlParser.execute]] does this), so every request reuses the
   * same materialized scan root.
   */
@@ -73,72 +82,52 @@ object SparqlServer {
     // (readers see either the old or the new relation, never a mix)
     val current =
       new java.util.concurrent.atomic.AtomicReference[DataFrame](quads)
-    def handle(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-      // one cheap probe job: count at most cap+1 rows, never the corpus
-      // (a cap at Int.MaxValue or above disables the check)
-      def overCap(df: DataFrame): Boolean = {
-        val probe = math.min(maxResultRows, Int.MaxValue - 2L).toInt + 1
-        df.limit(probe).count() > maxResultRows
-      }
-      def respond(code: Int, ct: String, body: String): Unit = {
-        val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", ct)
-        ex.sendResponseHeaders(code, bytes.length)
-        ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-      try {
-        queryOf(ex) match {
-          case None => respond(400, "text/plain",
-            "missing 'query' parameter (SPARQL 1.1 Protocol)")
-          case Some(text) =>
-            val fmt = negotiate(Option(
-              ex.getRequestHeaders.getFirst("Accept")).getOrElse(""))
-            val result = SparqlParser.execute(current.get(), text,
-              functions = functions, services = services)
-            val cols = result.columns.toSeq
-            if (cols == Seq("ask")) {
-              // ASK: only the JSON and XML documents define a boolean
-              // form — CSV/TSV accepts fall back to JSON
-              if (fmt == Xml)
-                respond(200, Xml,
-                  SparqlResults.askXml(result).collect().head.getString(0))
-              else
-                respond(200, Json,
-                  SparqlResults.askJson(result).collect().head.getString(0))
-            }
-            else if (overCap(result))
-              respond(413, "text/plain",
-                s"result exceeds $maxResultRows rows — page with " +
-                  "LIMIT/OFFSET (SPARQL 1.1 §15.5)")
-            else if (cols.contains("subject") &&
-                cols.contains("predicate") && cols.contains("objectValue")) {
-              // CONSTRUCT/DESCRIBE: a quad relation → N-Quads text
-              // (CONSTRUCT emits graph-less triples — pad the column;
-              // renderNQuads renders a null graph as a triple line)
-              val quaded =
-                if (cols.contains("graph")) result
-                else result.withColumn("graph",
-                  org.apache.spark.sql.functions.lit(null).cast("string"))
-              respond(200, "application/n-quads",
-                QuadEmitter.renderNQuads(quaded).collect()
-                  .map(_.getString(0)).sorted.mkString("", "\n", "\n"))
-            }
-            else fmt match {
-              // line formats: (ord, value) rows — ord 0 is the header
-              case Csv => respond(200, Csv, lines(
-                SparqlResults.csv(result), "\r\n"))
-              case Tsv => respond(200, Tsv, lines(
-                SparqlResults.tsv(result), "\n"))
-              case Xml => respond(200, Xml,
-                SparqlResults.xml(result).collect().head.getString(0))
-              case _ => respond(200, Json,
-                SparqlResults.json(result).collect().head.getString(0))
-            }
-        }
-      } catch {
-        case e: Throwable => respond(500, "text/plain",
-          Option(e.getMessage).getOrElse(e.getClass.getName))
+    // at most cap+1 rows reach the driver (a cap at Int.MaxValue or
+    // above disables the check)
+    val pageRows = math.min(maxResultRows, Int.MaxValue - 2L).toInt + 1
+    def handle(ex: HttpExchange): Unit = guarded(ex) {
+      queryOf(ex) match {
+        case Left((code, why)) => respond(ex, code, "text/plain", why)
+        case Right(text) =>
+          val fmt = negotiate(Option(
+            ex.getRequestHeaders.getFirst("Accept")).getOrElse(""))
+          val result = SparqlParser.execute(current.get(), text,
+            functions = functions, services = services)
+          val cols = result.columns.toSeq
+          val isQuads = cols.contains("subject") &&
+            cols.contains("predicate") && cols.contains("objectValue")
+          // CONSTRUCT/DESCRIBE: a quad relation → N-Quads lines
+          // (CONSTRUCT emits graph-less triples — pad the column;
+          // renderNQuads renders a null graph as a triple line)
+          val page =
+            if (!isQuads) SparqlResults.strings(result)
+            else QuadEmitter.renderNQuads(
+              if (cols.contains("graph")) result
+              else result.withColumn("graph",
+                org.apache.spark.sql.functions.lit(null).cast("string")))
+          val rows = page.limit(pageRows).collect().toSeq
+          def ok(ct: String, body: String): Unit = respond(ex, 200, ct, body)
+          if (rows.length > maxResultRows)
+            respond(ex, 413, "text/plain",
+              s"result exceeds $maxResultRows rows — page with " +
+                "LIMIT/OFFSET (SPARQL 1.1 §15.5)")
+          else if (isQuads) ok("application/n-quads",
+            rows.map(_.getString(0)).sorted.mkString("", "\n", "\n"))
+          else if (cols == Seq("ask")) {
+            // only the JSON and XML documents define a boolean form —
+            // CSV/TSV accepts fall back to JSON
+            val b = rows.head.getString(0).toBoolean
+            if (fmt == Xml) ok(Xml, SparqlResults.askXmlDoc(b))
+            else ok(Json, SparqlResults.askJsonDoc(b))
+          }
+          else fmt match {
+            case Csv => ok(Csv, SparqlResults.csvLines(cols, rows)
+              .mkString("", "\r\n", "\r\n")) // RFC 4180 CRLF rows
+            case Tsv => ok(Tsv,
+              SparqlResults.tsvLines(cols, rows).mkString("", "\n", "\n"))
+            case Xml => ok(Xml, SparqlResults.xmlDoc(cols, rows))
+            case _ => ok(Json, SparqlResults.jsonDoc(cols, rows))
+          }
       }
     }
 
@@ -148,32 +137,19 @@ object SparqlServer {
     // direct application/sparql-update body); one writer at a time
     // (synchronized), the swapped-in relation is lineage-cut so
     // compounding updates never deepen the serving plan. 204 on
-    // success, 400 on a missing update, 500 on failure.
+    // success, 400 on a missing or malformed update, 500 on failure.
     val updateLock = new Object
-    def handleUpdate(ex: com.sun.net.httpserver.HttpExchange): Unit = {
-      def respond(code: Int, body: String): Unit = {
-        val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "text/plain")
-        // 204 must not carry a body per HTTP — length -1 sends none
-        ex.sendResponseHeaders(code, if (code == 204) -1 else bytes.length)
-        if (code != 204) ex.getResponseBody.write(bytes)
-        ex.close()
-      }
-      try {
-        updateOf(ex) match {
-          case None => respond(400,
-            "missing 'update' parameter (SPARQL 1.1 Protocol §2.2; " +
-              "POST with update= form data or application/sparql-update)")
-          case Some(text) => updateLock.synchronized {
-            import graft.operators.Checkpoints.CutOps
-            current.set(
-              SparqlUpdate.execute(current.get(), text).cutLineage())
-            respond(204, "")
-          }
+    def handleUpdate(ex: HttpExchange): Unit = guarded(ex) {
+      updateOf(ex) match {
+        case None => respond(ex, 400, "text/plain",
+          "missing 'update' parameter (SPARQL 1.1 Protocol §2.2; " +
+            "POST with update= form data or application/sparql-update)")
+        case Some(text) => updateLock.synchronized {
+          import graft.operators.Checkpoints.CutOps
+          current.set(
+            SparqlUpdate.execute(current.get(), text).cutLineage())
+          respond(ex, 204, "text/plain", "")
         }
-      } catch {
-        case e: Throwable => respond(500,
-          Option(e.getMessage).getOrElse(e.getClass.getName))
       }
     }
 
@@ -181,10 +157,8 @@ object SparqlServer {
       new java.net.InetSocketAddress("127.0.0.1", port), 0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
     server.setExecutor(pool)
-    server.createContext("/sparql",
-      (ex: com.sun.net.httpserver.HttpExchange) => handle(ex))
-    server.createContext("/update",
-      (ex: com.sun.net.httpserver.HttpExchange) => handleUpdate(ex))
+    server.createContext("/sparql", (ex: HttpExchange) => handle(ex))
+    server.createContext("/update", (ex: HttpExchange) => handleUpdate(ex))
     server.start()
     new Handle(server, pool, current)
   }
@@ -211,48 +185,66 @@ object SparqlServer {
       .getOrElse(Json)
   }
 
-  /** Render an `(ord, value)` line relation (CSV/TSV builders) to the
-    * wire document: header (ord 0) first, then data rows in sequence.
-    * CSV rows join with CRLF (RFC 4180); TSV with LF. */
-  private def lines(doc: DataFrame, eol: String): String =
-    doc.orderBy(org.apache.spark.sql.functions.col("ord"))
-      .select("value").collect()
-      .map(_.getString(0)).mkString("", eol, eol)
+  private def respond(ex: HttpExchange, code: Int, ct: String,
+      body: String): Unit = {
+    val bytes = body.getBytes(StandardCharsets.UTF_8)
+    ex.getResponseHeaders.set("Content-Type", ct)
+    // 204 must not carry a body per HTTP — length -1 sends none
+    ex.sendResponseHeaders(code, if (code == 204) -1 else bytes.length)
+    if (code != 204) ex.getResponseBody.write(bytes)
+    ex.close()
+  }
+
+  /** Run a handler: a malformed query or update
+    * ([[SparqlParser.ParseError]]) answers 400, any other failure 500
+    * with its message. */
+  private def guarded(ex: HttpExchange)(handler: => Unit): Unit =
+    try handler catch {
+      case e: SparqlParser.ParseError =>
+        respond(ex, 400, "text/plain", e.getMessage)
+      case e: Throwable => respond(ex, 500, "text/plain",
+        Option(e.getMessage).getOrElse(e.getClass.getName))
+    }
+
+  /** The URL-decoded value of form parameter `name`, if present. */
+  private def formParam(form: String, name: String): Option[String] =
+    form.split('&').iterator.map(_.split("=", 2))
+      .collectFirst { case Array(`name`, v) =>
+        java.net.URLDecoder.decode(v, "UTF-8") }
+
+  private def contentType(ex: HttpExchange): String =
+    Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
+
+  /** Largest `/sparql` POST body read, in bytes; a longer one is 413. */
+  private val MaxQueryBytes = 1 << 20
 
   /** Extract the query text per Protocol §2.1: GET query-string param,
-    * POSTed form param, or a direct `application/sparql-query` body. */
-  private def queryOf(
-      ex: com.sun.net.httpserver.HttpExchange): Option[String] = {
-    def fromForm(s: String): Option[String] =
-      s.split('&').iterator.map(_.split("=", 2))
-        .collectFirst { case Array("query", v) =>
-          java.net.URLDecoder.decode(v, "UTF-8") }
+    * POSTed form param, or a direct `application/sparql-query` body.
+    * Left is the status and message of a request with no usable query. */
+  private def queryOf(ex: HttpExchange): Either[(Int, String), String] = {
+    val missing = (400, "missing 'query' parameter (SPARQL 1.1 Protocol)")
     ex.getRequestMethod match {
-      case "GET" =>
-        Option(ex.getRequestURI.getRawQuery).flatMap(fromForm)
+      case "GET" => Option(ex.getRequestURI.getRawQuery)
+        .flatMap(formParam(_, "query")).toRight(missing)
       case "POST" =>
-        val body = new String(ex.getRequestBody.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val ct = Option(ex.getRequestHeaders.getFirst("Content-Type"))
-          .getOrElse("")
-        if (ct.startsWith("application/sparql-query")) Some(body)
-        else fromForm(body)
-      case _ => None
+        val raw = ex.getRequestBody.readNBytes(MaxQueryBytes + 1)
+        val body = new String(raw, StandardCharsets.UTF_8)
+        if (raw.length > MaxQueryBytes)
+          Left((413, s"query body exceeds $MaxQueryBytes bytes"))
+        else if (contentType(ex).startsWith("application/sparql-query"))
+          Right(body)
+        else formParam(body, "query").toRight(missing)
+      case _ => Left(missing)
     }
   }
 
   /** Extract the update text per Protocol §2.2: POST only — `update=`
     * form param or a direct `application/sparql-update` body. */
-  private def updateOf(
-      ex: com.sun.net.httpserver.HttpExchange): Option[String] = {
+  private def updateOf(ex: HttpExchange): Option[String] = {
     if (ex.getRequestMethod != "POST") return None
     val body = new String(ex.getRequestBody.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val ct = Option(ex.getRequestHeaders.getFirst("Content-Type"))
-      .getOrElse("")
-    if (ct.startsWith("application/sparql-update")) Some(body)
-    else body.split('&').iterator.map(_.split("=", 2))
-      .collectFirst { case Array("update", v) =>
-        java.net.URLDecoder.decode(v, "UTF-8") }
+      StandardCharsets.UTF_8)
+    if (contentType(ex).startsWith("application/sparql-update")) Some(body)
+    else formParam(body, "update")
   }
 }

@@ -115,7 +115,7 @@ object SparqlUpdate {
   private case class GraphOp(verb: String, // copy | move | add
       from: GraphRef, to: GraphRef) extends Op
 
-  private def parse(update: String): Seq[Op] = {
+  private def parse(update: String): Seq[Op] = SparqlParser.parsing {
     var ts = SparqlParser.applyPrefixes(SparqlParser.tokenize(update))
     def eat(): String = {
       val h = ts.headOption.getOrElse(

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.rdf.{HttpVocab, SparqlParser, SparqlServer}
+import graft.rdf.{HttpVocab, QuadEmitter, SparqlParser, SparqlResults,
+  SparqlServer}
 
 /** The serving loop with CLIENT AND SERVER both this engine (VERDICT
   * r13 next-#3): [[SparqlServer]] wraps `SparqlParser.execute` over a
@@ -95,15 +96,19 @@ class SparqlServerSpec extends AnyFunSuite with SparkTestBase {
       assert(ct.startsWith("application/n-quads"))
       assert(nq.linesIterator.size == 3 &&
         nq.contains("<urn:a> <urn:p:named> \"Alpha\""))
-      // missing query → 400; malformed → 500 (the client raises the
-      // reference's non-200 RuntimeError on both)
+      // missing query → 400; malformed → 400 (Protocol §2.1.4); a
+      // failure after parsing → 500 (the client raises the reference's
+      // non-200 RuntimeError on all three)
       def codeOf(url: String): Int = {
         val c = new java.net.URL(url).openConnection()
           .asInstanceOf[java.net.HttpURLConnection]
         try c.getResponseCode finally c.disconnect()
       }
       assert(codeOf(h.endpoint) == 400)
-      assert(codeOf(s"${h.endpoint}?query=NOT%20SPARQL") == 500)
+      assert(codeOf(s"${h.endpoint}?query=NOT%20SPARQL") == 400)
+      val unregistered = java.net.URLEncoder.encode(
+        "SELECT ?s WHERE { SERVICE <urn:nope> { ?s ?p ?o } }", "UTF-8")
+      assert(codeOf(s"${h.endpoint}?query=$unregistered") == 500)
       intercept[RuntimeException] {
         HttpVocab.selectRemote(spark, h.endpoint, "NOT SPARQL")
       }
@@ -219,9 +224,9 @@ class SparqlServerSpec extends AnyFunSuite with SparkTestBase {
         "application/x-www-form-urlencoded") == 204)
       assert(h.relation.filter(col("objectValue") === "Delta").count()
         == 0)
-      // missing update → 400; malformed → 500; GET → 400
+      // missing update → 400; malformed → 400; GET → 400
       assert(post("nope=1", "application/x-www-form-urlencoded") == 400)
-      assert(post("NOT AN UPDATE", "application/sparql-update") == 500)
+      assert(post("NOT AN UPDATE", "application/sparql-update") == 400)
       val getConn = new java.net.URL(h.updateEndpoint).openConnection()
         .asInstanceOf[java.net.HttpURLConnection]
       try assert(getConn.getResponseCode == 400)
@@ -293,6 +298,123 @@ class SparqlServerSpec extends AnyFunSuite with SparkTestBase {
           .collect().map(r => (r.getString(0), r.getString(1))).toSeq
         assert(filtered == Seq(("urn:c", "a \"quoted\" name")))
       } finally spark.conf.unset(SparqlParser.RemoteEnabledKey)
+    } finally h.stop()
+  }
+
+  private val Formats = Seq("application/sparql-results+json",
+    "application/sparql-results+xml", "text/csv",
+    "text/tab-separated-values")
+
+  /** POST `body` to `url`; the status and the response (or error) body. */
+  private def post(url: String, body: String,
+      accept: String = Formats.head,
+      ct: String = "application/sparql-query"): (Int, String) = {
+    val conn = new java.net.URL(url).openConnection()
+      .asInstanceOf[java.net.HttpURLConnection]
+    conn.setRequestMethod("POST"); conn.setDoOutput(true)
+    conn.setRequestProperty("Content-Type", ct)
+    conn.setRequestProperty("Accept", accept)
+    conn.setReadTimeout(120000)
+    try {
+      val os = conn.getOutputStream
+      os.write(body.getBytes("UTF-8")); os.close()
+      val code = conn.getResponseCode
+      val in = if (code < 400) conn.getInputStream else conn.getErrorStream
+      (code, if (in == null) "" else new String(in.readAllBytes(), "UTF-8"))
+    } finally conn.disconnect()
+  }
+
+  test("SparqlServer: every results document of an ORDER BY query lists " +
+      "the solutions in solution order") {
+    val h = SparqlServer.serve(quadDf)
+    try {
+      val q = "SELECT ?s ?n WHERE { ?s <https://schema.org/name> ?n } " +
+        "ORDER BY DESC(?s)"
+      val docs = Formats.map { accept =>
+        val (code, doc) = post(h.endpoint, q, accept)
+        assert(code == 200, doc)
+        val at = Seq("urn:c", "urn:b", "urn:a").map(doc.indexOf)
+        assert(at.forall(_ >= 0) && at == at.sorted, s"$accept: $doc")
+        doc
+      }
+      assert(docs(2) == "s,n\r\nurn:c,\"a \"\"quoted\"\" name\"\r\n" +
+        "urn:b,Beta\r\nurn:a,Alpha\r\n")
+      assert(docs(3) == "?s\t?n\n\"urn:c\"\t\"a \\\"quoted\\\" name\"\n" +
+        "\"urn:b\"\t\"Beta\"\n\"urn:a\"\t\"Alpha\"\n")
+    } finally h.stop()
+  }
+
+  test("SparqlServer: a served request runs the jobs of one in-process " +
+      "collect of its page — SELECT in every format, ASK, DESCRIBE") {
+    val sc = spark.sparkContext
+    def jobs(run: => Any): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+      sc.addSparkListener(l)
+      try {
+        run
+        org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+        n.get()
+      } finally sc.removeSparkListener(l)
+    }
+    val cap = 100000L
+    val h = SparqlServer.serve(quadDf, maxResultRows = cap)
+    try {
+      def served(q: String, accept: String = Formats.head): Int = jobs {
+        val (code, body) = post(h.endpoint, q, accept)
+        assert(code == 200, body)
+      }
+      def page(df: org.apache.spark.sql.DataFrame): Int =
+        jobs(df.limit(cap.toInt + 1).collect())
+      val select = "SELECT ?s ?n WHERE { ?s <https://schema.org/name> ?n } " +
+        "ORDER BY ?s"
+      served(select) // warm: plan caches and the relation's cut
+      val inProcess = page(SparqlParser.execute(h.relation, select))
+      assert(inProcess > 0)
+      for (accept <- Formats)
+        assert(served(select, accept) == inProcess, accept)
+      val ask = "ASK { ?s <urn:p:score> ?v }"
+      assert(served(ask) ==
+        page(SparqlResults.strings(SparqlParser.execute(h.relation, ask))))
+      val describe = "DESCRIBE <urn:a>"
+      assert(served(describe) == page(QuadEmitter.renderNQuads(
+        SparqlParser.execute(h.relation, describe))))
+    } finally h.stop()
+  }
+
+  test("SparqlServer: malformed queries and updates answer 400, and the " +
+      "endpoint keeps serving after a parser stack overflow") {
+    val h = SparqlServer.serve(quadDf)
+    try {
+      val limitAbc = "SELECT ?s WHERE { ?s ?p ?o } LIMIT abc"
+      intercept[SparqlParser.ParseError](SparqlParser.parse(limitAbc))
+      for (q <- Seq("NOT SPARQL", limitAbc,
+          // 40 KB of nesting overflows the recursive-descent stack
+          "SELECT ?s WHERE { ?s ?p ?o FILTER(" + "(" * 20000 + " }")) {
+        val (code, why) = post(h.endpoint, q)
+        assert(code == 400, s"$code $why")
+      }
+      val (code, body) =
+        post(h.endpoint, "SELECT ?v WHERE { ?s <urn:p:score> ?v }")
+      assert(code == 200 && body.contains("\"3\""), body)
+      assert(post(h.updateEndpoint, "INSERT DATA { <urn:x> ",
+        ct = "application/sparql-update")._1 == 400)
+    } finally h.stop()
+  }
+
+  test("SparqlServer: a /sparql POST body over 1 MiB answers 413") {
+    val h = SparqlServer.serve(quadDf)
+    try {
+      val q = "SELECT ?v WHERE { ?s <urn:p:score> ?v }"
+      val atBound = q + " " * ((1 << 20) - q.length)
+      assert(post(h.endpoint, atBound)._1 == 200)
+      val (code, why) = post(h.endpoint, atBound + " ")
+      assert(code == 413, why)
     } finally h.stop()
   }
 }
