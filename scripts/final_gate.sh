@@ -68,6 +68,17 @@ if grep -qF '.count()' src/main/scala/graft/rdf/SparqlServer.scala; then
   fail ".count() in SparqlServer.scala: collect the capped page once instead"
 fi
 
+# A write never changes the session's conf: dynamic partition overwrite
+# is a writer option. The store's predicate statistics have one
+# aggregation, QuadStats.compute.
+if grep -rqF 'spark.sql.sources.partitionOverwriteMode' src/main; then
+  fail "spark.sql.sources.partitionOverwriteMode in src/main: pass partitionOverwriteMode as a writer option"
+fi
+stats=$(grep -rlF 'countDistinct(col("subject"), col("objectValue"))' src/main |
+  grep -vx 'src/main/scala/graft/rdf/QuadStats.scala' | tr '\n' ' ')
+[ -z "$stats" ] ||
+  fail "predicate statistics aggregation outside QuadStats.compute: $stats"
+
 sbt -batch compile >/tmp/final_gate_compile.log 2>&1 ||
   { tail -20 /tmp/final_gate_compile.log >&2; fail "sbt compile failed"; }
 

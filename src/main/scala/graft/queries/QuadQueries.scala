@@ -1231,10 +1231,10 @@ object QuadQueries extends QueryCatalog {
     // "synced via the message oriented middleware", etl-notes.md:9):
     // bulk-load once, then apply a subject-level upsert batch (updates
     // replace each touched subject's FULL quad set, deletes remove
-    // subjects; a subject in both is replaced). Cost ∝ affected graph
-    // partitions via dynamic partition overwrite, stats sidecar
-    // adjusted arithmetically; replay-idempotent (the exactly-once
-    // argument for the streaming foreachBatch path, QuadStore.upsertBatch).
+    // subjects; a subject in both is replaced). Dynamic partition
+    // overwrite rewrites every affected graph, so cost follows the store,
+    // not the delta; replay-idempotent (the exactly-once argument for
+    // the streaming foreachBatch path, QuadStore.upsertBatch).
     // Oracle replays the final state with CASE logic.
     "q_quads_store_upsert" -> ((s, dir) => {
       import graft.model.TermKind

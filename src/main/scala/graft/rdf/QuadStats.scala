@@ -6,13 +6,12 @@ import org.apache.spark.sql.DataFrame
   * step every RDF store runs at load time (GraphDB and TDB2 both
   * collect predicate histograms during their bulk import; the
   * reference preloads exactly such a store, README "importrdf
-  * preload"). Collected ONCE per quad relation — one per-predicate
-  * `count` + `countDistinct(subject, objectValue)` aggregation, whose
-  * distinct is a shuffle over the whole relation ([[QuadStore.write]]
-  * runs it at bulk load and persists the result in the store's
-  * sidecar). Driver state is one small map (one entry per distinct
-  * predicate; RDF corpora have tens of predicates regardless of row
-  * count, so this is O(schema), not O(data), at 100 TB too).
+  * preload"). Collected ONCE per quad relation ([[compute]], whose
+  * distinct is a shuffle over the whole relation; [[QuadStore.write]]
+  * runs it over the files it wrote and persists the result in the
+  * store's sidecar). Driver state is one small map (one entry per
+  * distinct predicate; RDF corpora have tens of predicates regardless
+  * of row count, so this is O(schema), not O(data), at 100 TB too).
   *
   * Two statistics per predicate:
   *
@@ -49,22 +48,25 @@ object QuadStats {
     * weak keys die with the relation. */
   private val cache = new java.util.WeakHashMap[DataFrame, Stats]()
 
-  /** Collect predicate statistics for `quads` (idempotent; one
-    * count/count-distinct aggregation on first call) and return the
-    * same relation. */
+  /** The statistics of `quads`, predicates in the aggregate's row order
+    * (a null predicate is not counted). */
+  def compute(quads: DataFrame): Stats = {
+    import org.apache.spark.sql.functions._
+    val rows = quads.groupBy("predicate").agg(count(lit(1)),
+      countDistinct(col("subject"), col("objectValue")))
+      .collect().filter(!_.isNullAt(0))
+    Stats(rows.map(r => r.getString(0) -> r.getLong(1))
+      .to(scala.collection.immutable.VectorMap),
+      rows.collect { case r if r.getLong(1) == r.getLong(2) =>
+        r.getString(0) }.toSet)
+  }
+
+  /** Collect predicate statistics for `quads` (idempotent; [[compute]]
+    * on first call) and return the same relation. */
   def register(quads: DataFrame): DataFrame = {
-    val have = cache.synchronized(cache.containsKey(quads))
-    if (!have) {
-      import org.apache.spark.sql.functions._
-      val rows = quads.groupBy("predicate")
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("subject"), col("objectValue")).as("d"))
-        .collect()
-      val counts = rows.flatMap(r =>
-        Option(r.getString(0)).map(_ -> r.getLong(1))).toMap
-      val uniq = rows.flatMap(r => Option(r.getString(0))
-        .filter(_ => r.getLong(1) == r.getLong(2))).toSet
-      cache.synchronized(cache.put(quads, Stats(counts, uniq)))
+    if (!cache.synchronized(cache.containsKey(quads))) {
+      val st = compute(quads)
+      cache.synchronized(cache.put(quads, st))
     }
     quads
   }

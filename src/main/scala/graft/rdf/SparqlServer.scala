@@ -86,7 +86,7 @@ object SparqlServer {
     // above disables the check)
     val pageRows = math.min(maxResultRows, Int.MaxValue - 2L).toInt + 1
     def handle(ex: HttpExchange): Unit = guarded(ex) {
-      queryOf(ex) match {
+      textOf(ex, "query", "application/sparql-query", get = true) match {
         case Left((code, why)) => respond(ex, code, "text/plain", why)
         case Right(text) =>
           val fmt = negotiate(Option(
@@ -137,14 +137,13 @@ object SparqlServer {
     // direct application/sparql-update body); one writer at a time
     // (synchronized), the swapped-in relation is lineage-cut so
     // compounding updates never deepen the serving plan. 204 on
-    // success, 400 on a missing or malformed update, 500 on failure.
+    // success, 400 on a missing or malformed update, 413 on a body over
+    // MaxQueryBytes, 500 on failure.
     val updateLock = new Object
     def handleUpdate(ex: HttpExchange): Unit = guarded(ex) {
-      updateOf(ex) match {
-        case None => respond(ex, 400, "text/plain",
-          "missing 'update' parameter (SPARQL 1.1 Protocol §2.2; " +
-            "POST with update= form data or application/sparql-update)")
-        case Some(text) => updateLock.synchronized {
+      textOf(ex, "update", "application/sparql-update", get = false) match {
+        case Left((code, why)) => respond(ex, code, "text/plain", why)
+        case Right(text) => updateLock.synchronized {
           import graft.operators.Checkpoints.CutOps
           current.set(
             SparqlUpdate.execute(current.get(), text).cutLineage())
@@ -215,36 +214,28 @@ object SparqlServer {
   private def contentType(ex: HttpExchange): String =
     Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
 
-  /** Largest `/sparql` POST body read, in bytes; a longer one is 413. */
+  /** Largest `/sparql` or `/update` POST body read, in bytes; a longer
+    * one is 413. */
   private val MaxQueryBytes = 1 << 20
 
-  /** Extract the query text per Protocol §2.1: GET query-string param,
-    * POSTed form param, or a direct `application/sparql-query` body.
-    * Left is the status and message of a request with no usable query. */
-  private def queryOf(ex: HttpExchange): Either[(Int, String), String] = {
-    val missing = (400, "missing 'query' parameter (SPARQL 1.1 Protocol)")
+  /** Extract the query or update text per Protocol §2.1/§2.2: form
+    * parameter `name` of a GET query string (when `get`) or of a POSTed
+    * form, or a direct POST body of media type `direct`. Left is the
+    * status and message of a request with no usable text. */
+  private def textOf(ex: HttpExchange, name: String, direct: String,
+      get: Boolean): Either[(Int, String), String] = {
+    val missing = (400, s"missing '$name' parameter (SPARQL 1.1 Protocol)")
     ex.getRequestMethod match {
-      case "GET" => Option(ex.getRequestURI.getRawQuery)
-        .flatMap(formParam(_, "query")).toRight(missing)
+      case "GET" if get => Option(ex.getRequestURI.getRawQuery)
+        .flatMap(formParam(_, name)).toRight(missing)
       case "POST" =>
         val raw = ex.getRequestBody.readNBytes(MaxQueryBytes + 1)
         val body = new String(raw, StandardCharsets.UTF_8)
         if (raw.length > MaxQueryBytes)
-          Left((413, s"query body exceeds $MaxQueryBytes bytes"))
-        else if (contentType(ex).startsWith("application/sparql-query"))
-          Right(body)
-        else formParam(body, "query").toRight(missing)
+          Left((413, s"request body exceeds $MaxQueryBytes bytes"))
+        else if (contentType(ex).startsWith(direct)) Right(body)
+        else formParam(body, name).toRight(missing)
       case _ => Left(missing)
     }
-  }
-
-  /** Extract the update text per Protocol §2.2: POST only — `update=`
-    * form param or a direct `application/sparql-update` body. */
-  private def updateOf(ex: HttpExchange): Option[String] = {
-    if (ex.getRequestMethod != "POST") return None
-    val body = new String(ex.getRequestBody.readAllBytes(),
-      StandardCharsets.UTF_8)
-    if (contentType(ex).startsWith("application/sparql-update")) Some(body)
-    else formParam(body, "update")
   }
 }

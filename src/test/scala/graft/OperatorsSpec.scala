@@ -2843,6 +2843,104 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(stats.size() == 1 && stats.get(0) == "2\td\turn:p", stats)
   }
 
+  test("QuadStore.write and upsert evaluate their input once") {
+    import spark.implicits._
+    val store =
+      s"${System.getProperty("java.io.tmpdir")}/graft_io/upsert_once"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
+    // every evaluation of a source row adds 1; the `distinct` makes the
+    // source a derivation, not a store-like scan that is read in place
+    val evals = spark.sparkContext.longAccumulator("quad source rows")
+    val subjectOf = udf { (id: Long) => evals.add(1); s"urn:s$id" }
+    def quads(ids: Seq[Long], tag: String) = ids.toDF("id").distinct().select(
+      subjectOf(col("id")).as("subject"), lit("iri").as("subjectKind"),
+      concat(lit("urn:p"), (col("id") % 3).cast("string")).as("predicate"),
+      concat(lit(tag), col("id").cast("string")).as("objectValue"),
+      lit("literal").as("objectKind"),
+      lit(null).cast("string").as("datatype"),
+      lit(null).cast("string").as("lang"),
+      concat(lit("urn:g"), (col("id") % 2).cast("string")).as("graph"))
+    graft.rdf.QuadStore.write(quads(0L until 60L, "v"), store)
+    assert(evals.value == 60L, "write evaluated its source more than once")
+    evals.reset()
+    graft.rdf.QuadStore.upsert(spark, store, quads(50L until 70L, "w"))
+    assert(evals.value == 20L, "upsert evaluated its delta more than once")
+    val back = graft.rdf.QuadStore.open(spark, store)
+      .select(col("subject"), col("objectValue"))
+      .as[(String, String)].collect().toSet
+    assert(back == ((0 until 50).map(i => (s"urn:s$i", s"v$i")) ++
+      (50 until 70).map(i => (s"urn:s$i", s"w$i"))).toSet)
+  }
+
+  test("QuadStore.upsert: after each upsert of a seeded sequence the " +
+      "sidecar equals a per-predicate recount, and u stays exactly on " +
+      "untouched predicates") {
+    import spark.implicits._
+    val store =
+      s"${System.getProperty("java.io.tmpdir")}/graft_io/upsert_recount"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
+    def quads(rows: Seq[(String, String, String, String)]) =
+      rows.toDF("s", "p", "v", "g").select(
+        col("s").as("subject"), lit("iri").as("subjectKind"),
+        col("p").as("predicate"), col("v").as("objectValue"),
+        lit("literal").as("objectKind"),
+        lit(null).cast("string").as("datatype"),
+        lit(null).cast("string").as("lang"), col("g").as("graph"))
+    def keys(rows: Seq[(String, String)]) =
+      rows.toDF("s", "g").select(col("g").as("graph"), col("s").as("subject"))
+    // urn:g1 holds s0..s7 (urn:p0, urn:p1; s0 alone has urn:p3, s7 a
+    // duplicate (subject, objectValue) pair under urn:p4) and s12
+    // (urn:p5, never touched); urn:g2 holds s8..s11 (urn:p0, urn:p2)
+    val g1 = (0 to 7).flatMap(i => Seq((s"s$i", "urn:p0", s"a$i", "urn:g1"),
+      (s"s$i", "urn:p1", s"b$i", "urn:g1"))) ++ Seq(
+      ("s0", "urn:p3", "c0", "urn:g1"), ("s7", "urn:p4", "d", "urn:g1"),
+      ("s7", "urn:p4", "d", "urn:g1"), ("s12", "urn:p5", "e", "urn:g1"))
+    val g2 = (8 to 11).flatMap(i => Seq((s"s$i", "urn:p0", s"a$i", "urn:g2"),
+      (s"s$i", "urn:p2", s"f$i", "urn:g2")))
+    graft.rdf.QuadStore.write(quads(g1 ++ g2), store)
+    def sidecar(): (Map[String, Long], Set[String]) = {
+      import scala.jdk.CollectionConverters._
+      val lines = java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(store, "_quadstats.tsv")).asScala.toSeq
+        .map(_.split('\t'))
+      (lines.map(l => l(2) -> l(0).toLong).toMap,
+        lines.collect { case Array(_, "u", p) => p }.toSet)
+    }
+    def stored() = spark.read.parquet(store)
+    def recount() = stored().groupBy("predicate").count()
+      .as[(String, Long)].collect().toMap
+    assert(sidecar() == (recount(),
+      Set("urn:p0", "urn:p1", "urn:p2", "urn:p3", "urn:p5")))
+    val unique = sidecar()._2
+    val rng = new scala.util.Random(7)
+    var touched = Set.empty[String]
+    var step = 0
+    // step 2 deletes every subject of urn:g2 (the graph ends up empty
+    // and urn:p2 loses all its quads); step 3 deletes s0, the only
+    // urn:p3 subject; every step replaces two random urn:g1 subjects
+    for (dels <- Seq(Seq.empty, (8 to 11).map(i => (s"s$i", "urn:g2")),
+        Seq(("s0", "urn:g1")), Seq.empty)) {
+      step += 1
+      val replaced = rng.shuffle((1 to 7).toList).take(2).map(i => s"s$i")
+      val delta = replaced.flatMap(s => Seq((s, "urn:p0", s"x$step", "urn:g1"),
+        (s, "urn:p6", s"y$step", "urn:g1")))
+      val hit = (replaced.map(s => (s, "urn:g1")) ++ dels)
+        .toDF("subject", "graph")
+      touched ++= stored().join(hit, Seq("subject", "graph"))
+        .select("predicate").as[String].collect() ++ delta.map(_._2)
+      graft.rdf.QuadStore.upsert(spark, store, quads(delta),
+        if (dels.isEmpty) None else Some(keys(dels)))
+      val (counts, uniq) = sidecar()
+      assert(counts == recount(), s"step $step")
+      assert(uniq == unique -- touched, s"step $step")
+    }
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(store, "graph=urn%3Ag2")))
+    val (counts, uniq) = sidecar()
+    assert(!counts.contains("urn:p2") && !counts.contains("urn:p3"))
+    assert(uniq == Set("urn:p5"))
+  }
+
   test("SparqlParser r12: nested GRAPH blocks re-scope the active " +
       "graph; a variable inner term binds and joins") {
     import spark.implicits._

@@ -185,6 +185,38 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     assert(got == want)
   }
 
+  test("persisted quad store: one write and one upsert run a pinned " +
+      "number of jobs") {
+    import org.apache.spark.sql.functions.{col, lit, concat}
+    def quads(from: Long, until: Long, tag: String) =
+      spark.range(from, until).select(
+        concat(lit("urn:s"), col("id")).as("subject"),
+        lit("iri").as("subjectKind"),
+        concat(lit("urn:p"), (col("id") % 3).cast("string")).as("predicate"),
+        concat(lit(tag), col("id")).as("objectValue"),
+        lit("literal").as("objectKind"),
+        lit(null).cast("string").as("datatype"),
+        lit(null).cast("string").as("lang"),
+        concat(lit("urn:g"), (col("id") % 4).cast("string")).as("graph"))
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_quadstore_jobs").toString
+    // the write: the layout job, then the statistics aggregation over
+    // the written files (read with the written schema: no inference job)
+    val (writeJobs, writeBroadcasts) =
+      countJobs(graft.rdf.QuadStore.write(quads(1, 200, "v"), path))
+    // the upsert of a materialized delta and deletes (a sync batch's
+    // shape): the affected-graph collect, the staging cut, the tally
+    // and the commit
+    val delta = quads(150, 220, "w").localCheckpoint()
+    val deletes = quads(1, 20, "v").select("graph", "subject")
+      .localCheckpoint()
+    val (upsertJobs, upsertBroadcasts) = countJobs(
+      graft.rdf.QuadStore.upsert(spark, path, delta, Some(deletes)))
+    assert((writeJobs, writeBroadcasts) == (2, 0))
+    // the touched keys are broadcast to the left join of the stored rows
+    assert((upsertJobs, upsertBroadcasts) == (4, 1))
+  }
+
   test("sketch expressions are not duplicated into pushed-down filters") {
     // Join-inferred isnotnull(key) constraints must fold away (the keys
     // are coalesce-wrapped): if they push below the exchange they inline
@@ -1371,8 +1403,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     * build job. They are still returned: a run that broadcasts must see
     * at least one, so a renamed Spark tag fails instead of silently
     * counting broadcast builds as actions. */
-  private def countJobs(build: => org.apache.spark.sql.DataFrame)
-      : (Int, Int) = {
+  private def countJobs(build: => Any): (Int, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val broadcastJobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {

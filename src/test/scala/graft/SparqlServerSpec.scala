@@ -417,4 +417,21 @@ class SparqlServerSpec extends AnyFunSuite with SparkTestBase {
       assert(code == 413, why)
     } finally h.stop()
   }
+
+  test("SparqlServer: an /update POST body over 1 MiB answers 413 and " +
+      "is not applied") {
+    val h = SparqlServer.serve(quadDf)
+    try {
+      def update(u: String, pad: Int) = post(h.updateEndpoint,
+        u + " " * ((1 << 20) - u.length + pad),
+        ct = "application/sparql-update")._1
+      def scores(s: String) = post(h.endpoint,
+        s"SELECT ?v WHERE { <$s> <urn:p:score> ?v }")._2
+      assert(update("INSERT DATA { <urn:at> <urn:p:score> \"8\" }", 0) == 204)
+      assert(scores("urn:at").contains("\"8\""))
+      assert(update("INSERT DATA { <urn:over> <urn:p:score> \"9\" }", 1) ==
+        413)
+      assert(!scores("urn:over").contains("\"9\""))
+    } finally h.stop()
+  }
 }
