@@ -79,6 +79,15 @@ stats=$(grep -rlF 'countDistinct(col("subject"), col("objectValue"))' src/main |
 [ -z "$stats" ] ||
   fail "predicate statistics aggregation outside QuadStats.compute: $stats"
 
+# A graft_* function that is one kernel call is a StaticInvoke
+# (GraftExtensions.kernel); hand-written codegen stays only in the
+# expressions that hold per-plan state.
+gen=$(grep -rl 'doGenCode' src/main/scala/graft/plans |
+  grep -vxE 'src/main/scala/graft/plans/(SfRelate|GeomConstruct)Expression\.scala' |
+  tr '\n' ' ')
+[ -z "$gen" ] ||
+  fail "hand-written doGenCode in src/main/scala/graft/plans: $gen"
+
 sbt -batch compile >/tmp/final_gate_compile.log 2>&1 ||
   { tail -20 /tmp/final_gate_compile.log >&2; fail "sbt compile failed"; }
 

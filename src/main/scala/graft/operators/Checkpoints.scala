@@ -39,8 +39,10 @@ object Checkpoints {
     * plan one WANTS (pushed filters + pruned columns reach the source),
     * and a further cut would only copy blocks while destroying pushdown.
     * Anything with joins/generates/aggregates in the lineage is NOT
-    * store-like: each rescan would recompute the derivation. Class-name
-    * match keeps this independent of Spark's private planner API. */
+    * store-like: each rescan would recompute the derivation. Neither is
+    * a shell that calls a user-defined function: each consumer would run
+    * the UDF again. Class-name match keeps this independent of Spark's
+    * private planner API. */
   def isMaterialized(df: DataFrame): Boolean = {
     val scanLike = Set("LogicalRDD", "InMemoryRelation",
       "DataSourceV2Relation", "DataSourceV2ScanRelation", "LogicalRelation",
@@ -51,7 +53,10 @@ object Checkpoints {
         : Boolean = {
       val n = p.getClass.getSimpleName
       if (scanLike.contains(n)) true
-      else if (shell.contains(n)) p.children.forall(cheap)
+      else if (shell.contains(n))
+        p.children.forall(cheap) && !p.expressions.exists(_.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions
+            .UserDefinedExpression]))
       else false
     }
     cheap(df.queryExecution.analyzed)

@@ -9,15 +9,14 @@ import org.apache.spark.sql.functions._
   * watch item — LSH bits, vector dim, hyperplane seed are parameters
   * here, pinned by the catalog for its oracles).
   *
-  * All dot products go through the native codegen expression
-  * [[graft.plans.DotProduct]] (`graft_dot`) — one static-call primitive
+  * All dot products go through `graft_dot`, one call of the kernel
+  * [[graft.plans.DotProduct]] — one static-call primitive
   * loop per row, bit-identical to the HOF `aggregate(zip_with(...))`
   * chain and to the DuckDB oracle's list comprehension.
   */
 object VectorSearch {
 
-  /** `graft_dot(a, b)` as SQL — register via [[withNorm]] or
-    * [[graft.plans.DotProduct.register]] first on plain sessions. */
+  /** `graft_dot(a, b)` as SQL. */
   def dotSql(a: String, b: String): String = s"graft_dot($a, $b)"
 
   /** Vectors with the L2 norm precomputed ONCE per vector — cosine per

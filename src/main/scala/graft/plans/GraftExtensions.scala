@@ -3,9 +3,10 @@ package graft.plans
 import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo, InheritAnalysisRules, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
 
 /** SparkSessionExtensions entry point (SURVEY §2.12): the native
   * function surface plus the radius-join, relate-join and runtime-bloom
@@ -39,22 +40,61 @@ object GraftExtensions {
       builder: FunctionBuilder): (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
     (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
 
+  /** `kernel.compute(args)` as a Catalyst expression: one static call
+    * that whole-stage codegen inlines, null in ⇒ null out.
+    * `nullResult` says whether `compute` may return null for non-null
+    * input. `kernel` is a Scala object. */
+  def invoke(kernel: AnyRef, dataType: DataType, nullResult: Boolean,
+      args: Seq[Expression]): Expression =
+    StaticInvoke(kernel.getClass, dataType, "compute", args,
+      returnNullable = nullResult)
+
+  /** The SQL function `name` over [[invoke]]: `accepts` checks the
+    * resolved argument types, arity included (a bare `StaticInvoke`
+    * would cast them implicitly), and `args` maps the arguments to
+    * `compute`'s parameters. */
+  private def kernel(name: String, signature: String, obj: AnyRef,
+      dataType: DataType, nullResult: Boolean)(
+      accepts: Seq[DataType] => Boolean,
+      args: Seq[Expression] => Seq[Expression] = identity) =
+    fn(name, classOf[KernelCall], params => {
+      require(accepts(params.map(_.dataType)), s"$name takes $signature; " +
+        s"got ${params.map(_.dataType.simpleString).mkString("(", ", ", ")")}")
+      KernelCall(name, params, invoke(obj, dataType, nullResult, args(params)))
+    })
+
+  private def strings(n: Int): Seq[DataType] => Boolean =
+    _ == Seq.fill(n)(StringType)
+
   /** Every native SQL function the extension injects. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
-    fn("graft_haversine_km", classOf[HaversineKm], args => {
-      require(args.length == 4,
-        s"graft_haversine_km takes (lon1, lat1, lon2, lat2); got ${args.length}")
-      val d = args.map(a => Cast(a, DoubleType): Expression)
-      HaversineKm(d(0), d(1), d(2), d(3))
-    }),
-    fn("graft_dot", classOf[DotProduct], DotProduct.builder),
-    fn("graft_nt_unescape", classOf[NtUnescape], NtUnescape.builder),
-    fn("graft_nq_terms", classOf[NqTerms], NqTerms.builder),
-    fn("graft_nt_escape", classOf[NtEscape], NtEscape.builder),
-    fn("graft_jaro_winkler", classOf[JaroWinkler], JaroWinkler.builder),
+    kernel("graft_haversine_km", "(lon1, lat1, lon2, lat2)", HaversineKm,
+        DoubleType, nullResult = false)(
+      _.length == 4, _.map(a => Cast(a, DoubleType))),
+    // the element-type flags are fixed per plan, so an array<float> is
+    // read as floats in place, never cast to array<double> per row
+    kernel("graft_dot", "(array<float|double>, array<float|double>)",
+        DotProduct, DoubleType, nullResult = true)(
+      {
+        case Seq(ArrayType(a, _), ArrayType(b, _)) =>
+          Seq(a, b).forall(t => t == FloatType || t == DoubleType)
+        case _ => false
+      },
+      args => args ++ args.map(a => Literal(
+        a.dataType.asInstanceOf[ArrayType].elementType == FloatType))),
+    kernel("graft_nt_unescape", "(string)", NtUnescape, StringType,
+      nullResult = false)(strings(1)),
+    kernel("graft_nq_quad", "(string)", NqQuad, NqQuad.schema,
+      nullResult = true)(strings(1)),
+    kernel("graft_nt_escape", "(string)", NtEscape, StringType,
+      nullResult = false)(strings(1)),
+    kernel("graft_jaro_winkler", "(string, string)", JaroWinkler, DoubleType,
+      nullResult = false)(strings(2)),
+    kernel("graft_nfc", "(string)", NfcNormalize, StringType,
+      nullResult = false)(strings(1)),
+    kernel("graft_wkt_bbox", "(wkt string)", WktBbox, WktBbox.schema,
+      nullResult = true)(strings(1)),
     fn("graft_sf_relate", classOf[SfRelate], SfRelate.builder),
-    fn("graft_nfc", classOf[NfcNormalize], NfcNormalize.builder),
-    fn("graft_wkt_bbox", classOf[WktBbox], WktBbox.builder),
     fn("graft_st_buffer", classOf[GeomBuffer], GeomConstruct.bufferBuilder),
     fn("graft_st_buffer_m", classOf[GeomBufferMetres],
       GeomConstruct.bufferMetresBuilder),
@@ -81,4 +121,18 @@ object GraftExtensions {
     GeomConstruct.MeasureNames.map { case (name, op) =>
       fn(name, classOf[GeomMeasure], GeomConstruct.measureBuilder(name, op))
     }
+}
+
+/** A SQL function that is one [[GraftExtensions.invoke]] call — the
+  * shape Spark gives its own `url_encode`. It keeps the function's name
+  * in column names and plan strings through analysis; the optimizer's
+  * first batch replaces it with the bare `StaticInvoke`. */
+case class KernelCall(name: String, parameters: Seq[Expression],
+    replacement: Expression)
+  extends RuntimeReplaceable with InheritAnalysisRules {
+
+  override def prettyName: String = name
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(replacement = newChild)
 }

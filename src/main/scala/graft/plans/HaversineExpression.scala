@@ -1,44 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
-
-/** Native Catalyst expression for great-circle distance (SURVEY §2.12a,
-  * F13) — the codegen'd promotion of
+/** Great-circle distance, the kernel of `graft_haversine_km` (SURVEY
+  * §2.12a, F13) — the codegen'd promotion of
   * [[graft.functions.GraftFunctions.haversineKm]]: one JVM static call
   * per row inside whole-stage codegen instead of a 12-node expression
-  * tree, registered for the SQL surface as `graft_haversine_km` by
-  * [[GraftExtensions]].
+  * tree, registered for SQL by [[GraftExtensions]].
   */
-case class HaversineKm(lon1: Expression, lat1: Expression,
-    lon2: Expression, lat2: Expression)
-  extends QuaternaryExpression {
-
-  override def first: Expression = lon1
-  override def second: Expression = lat1
-  override def third: Expression = lon2
-  override def fourth: Expression = lat2
-
-  // Inputs are pre-cast to double by the function builder
-  // (GraftExtensions), so no ExpectsInputTypes contract is needed here.
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_haversine_km"
-
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    HaversineKm.compute(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x1, y1, x2, y2) =>
-      s"graft.plans.HaversineKm.compute($x1, $y1, $x2, $y2)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): Expression =
-    copy(lon1 = newFirst, lat1 = newSecond, lon2 = newThird, lat2 = newFourth)
-}
-
 object HaversineKm {
   private val R = 6371.0088
 

@@ -1,16 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for Jaro-Winkler string similarity
+/** Jaro-Winkler string similarity, the kernel of `graft_jaro_winkler`
   * (SURVEY §2.12a tier) — the approximate-match scorer behind
   * name/address linkage (reference analogue: the fuzzy road-name match in
-  * `cam/address.py`'s normalization joins). Registered for SQL as
-  * `graft_jaro_winkler` by [[GraftExtensions]].
+  * `cam/address.py`'s normalization joins). Registered for SQL by
+  * [[GraftExtensions]].
   *
   * Standard definition (Winkler 1990): Jaro similarity from the matched
   * character count m inside a ⌊max(|a|,|b|)/2⌋−1 window and half-counted
@@ -27,36 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * name-length strings this targets (blocking keeps candidate pairs, not
   * string length, as the scale dimension).
   */
-case class JaroWinkler(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_jaro_winkler"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, string); got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    JaroWinkler.compute(a.asInstanceOf[UTF8String].toString,
-      b.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) =>
-      s"graft.plans.JaroWinkler.compute($x.toString(), $y.toString())")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object JaroWinkler {
   private val PrefixScale = 0.1
   private val BoostThreshold = 0.7
   private val MaxPrefix = 4
+
+  /** The SQL function's entry point. */
+  def compute(a: UTF8String, b: UTF8String): Double =
+    compute(a.toString, b.toString)
 
   /** Standard Jaro-Winkler over Java chars (inputs here are ASCII part /
     * name strings; supplementary-plane text would need codepoint
@@ -104,11 +78,5 @@ object JaroWinkler {
     val maxL = math.min(MaxPrefix, math.min(la, lb))
     while (l < maxL && a.charAt(l) == b.charAt(l)) l += 1
     jaro + l * PrefixScale * (1.0 - jaro)
-  }
-
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 2,
-      s"graft_jaro_winkler takes (string, string); got ${args.length}")
-    JaroWinkler(args(0), args(1))
   }
 }

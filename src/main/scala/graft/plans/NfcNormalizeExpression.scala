@@ -2,48 +2,24 @@ package graft.plans
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode NFC normalization as a native codegen expression (SURVEY
-  * §2.12a tier) — the canonical-composition pass a multi-source text
+/** Unicode NFC normalization, the kernel of `graft_nfc` (SURVEY §2.12a
+  * tier) — the canonical-composition pass a multi-source text
   * pipeline runs before ANY exact-match dedup or token counting:
   * "café" with a combining acute (U+0065 U+0301) and precomposed "café"
   * (U+00E9) are byte-different but canonically equal, so un-normalized
   * corpora leak duplicates straight past hash-based dedup
   * (reference analogue: the NUL/whitespace cleanup scalars in
   * `cam/clean.py` — same normalize-before-compare contract, lifted to
-  * Unicode canon). Registered for SQL as `graft_nfc` by
-  * [[GraftExtensions]]; the correctness oracle is DuckDB's independent
+  * Unicode canon). Registered for SQL by [[GraftExtensions]]; the
+  * correctness oracle is DuckDB's independent
   * utf8proc-backed `nfc_normalize` (both implement Unicode TR#15 NFC).
   *
   * One `java.text.Normalizer` static call per row inside whole-stage
   * codegen. The quick-check fast path inside the JDK makes already-NFC
   * ASCII effectively free, so at 100 TB this is a pure scan op.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nfc"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string input; got ${child.dataType.simpleString}")
-
-  override protected def nullSafeEval(s: Any): Any =
-    NfcNormalize.compute(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NfcNormalize.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NfcNormalize {
   def compute(s: UTF8String): UTF8String = {
     val str = s.toString
@@ -51,11 +27,5 @@ object NfcNormalize {
     // the common already-composed case without allocating.
     if (Normalizer.isNormalized(str, Normalizer.Form.NFC)) s
     else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFC))
-  }
-
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1,
-      s"graft_nfc takes (string); got ${args.length}")
-    NfcNormalize(args.head)
   }
 }

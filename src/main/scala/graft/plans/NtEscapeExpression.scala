@@ -1,9 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** N-Triples literal escape (`graft_nt_escape`) — the OUTBOUND twin of
@@ -24,26 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * asserts equality against the chain on adversarial strings, and
   * `NtUnescape(NtEscape(x)) == x` closes the loop.
   */
-case class NtEscape(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nt_escape"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName takes a string argument, got ${child.dataType}")
-
-  override protected def nullSafeEval(v: Any): Any =
-    NtEscape.compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NtEscape.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NtEscape {
 
   private def needsEscape(c: Char): Boolean =
@@ -71,11 +47,5 @@ object NtEscape {
       i += 1
     }
     UTF8String.fromString(sb.toString)
-  }
-
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1,
-      s"graft_nt_escape takes (string); got ${args.length}")
-    NtEscape(args.head)
   }
 }

@@ -1,9 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** N-Triples string unescape (`graft_nt_unescape`) — the exact inverse of
@@ -28,26 +24,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * ingest on one bad escape helps nobody — rejects are surfaced
   * relationally by [[graft.rdf.QuadParser.rejects]] instead.
   */
-case class NtUnescape(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nt_unescape"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName takes a string argument, got ${child.dataType}")
-
-  override protected def nullSafeEval(v: Any): Any =
-    NtUnescape.compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NtUnescape.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NtUnescape {
 
   private def hexVal(c: Char): Int =
@@ -104,11 +80,5 @@ object NtUnescape {
       } else { sb.append(c); i += 1 }
     }
     UTF8String.fromString(sb.toString)
-  }
-
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1,
-      s"graft_nt_unescape takes (string); got ${args.length}")
-    NtUnescape(args.head)
   }
 }

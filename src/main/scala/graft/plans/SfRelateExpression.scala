@@ -191,43 +191,12 @@ object SfRelate {
   }
 }
 
-/** `graft_wkt_bbox(wkt)` → `struct<minx,miny,maxx,maxy:double>` — the
-  * bounding box of any WKT geometry's coordinates; null for
-  * unparseable/empty input. The grid-cover key extractor behind
-  * [[SpatialRelateJoinRewrite]]: a geometry's cell cover is the cross
-  * product of the floored bbox ranges. */
-case class WktBbox(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = WktBbox.schema
-  override def prettyName: String = "graft_wkt_bbox"
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName takes a string WKT argument, got ${child.dataType}")
-
-  override protected def nullSafeEval(wkt: Any): Any =
-    WktBbox.compute(wkt.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, w => {
-      val tmp = ctx.freshName("graftBbox")
-      s"""
-         |InternalRow $tmp = graft.plans.WktBbox.compute($w.toString());
-         |if ($tmp == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $tmp;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** The kernel of `graft_wkt_bbox(wkt)` →
+  * `struct<minx,miny,maxx,maxy:double>` — the bounding box of any WKT
+  * geometry's coordinates; null for unparseable/empty input. The
+  * grid-cover key extractor behind [[SpatialRelateJoinRewrite]]: a
+  * geometry's cell cover is the cross product of the floored bbox
+  * ranges. */
 object WktBbox {
   import org.apache.spark.sql.types.StructType
   import org.apache.spark.sql.types.StructField
@@ -238,17 +207,11 @@ object WktBbox {
     StructField("maxx", DoubleType, nullable = false),
     StructField("maxy", DoubleType, nullable = false)))
 
-  def compute(wkt: String): org.apache.spark.sql.catalyst.InternalRow = {
-    val g = GeomConstruct.parse(wkt)
+  def compute(wkt: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+    val g = GeomConstruct.parse(wkt.toString)
     if (g == null || g.isEmpty) return null
     val e = g.getEnvelopeInternal
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
-  }
-
-  val builder: Seq[Expression] => Expression = { args =>
-    require(args.length == 1,
-      s"graft_wkt_bbox takes (wkt); got ${args.length}")
-    WktBbox(args(0))
   }
 }

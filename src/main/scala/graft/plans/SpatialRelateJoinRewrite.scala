@@ -72,7 +72,9 @@ object SpatialRelateJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * plan and the (cellX, cellY) attributes. */
   private def coverSide(side: LogicalPlan, wkt: Expression, cell: Double,
       tag: String): (LogicalPlan, Attribute, Attribute, Attribute) = {
-    val bbox = Alias(WktBbox(wkt), s"__graft_bbox_$tag")()
+    // runtime-replaceable functions are gone by now: the bare call
+    val bbox = Alias(GraftExtensions.invoke(WktBbox, WktBbox.schema,
+      nullResult = true, Seq(wkt)), s"__graft_bbox_$tag")()
     val projBbox = Project(side.output :+ bbox, side)
     val b = bbox.toAttribute
     def f(field: String, ord: Int) =

@@ -39,12 +39,6 @@ object DedupQueries extends QueryCatalog {
   // wrapped keys) are documented there and in PERF.md #2/#8.
   import graft.operators.TextDedup
 
-  /** Per-session sink root (applicationId-scoped like every sink path in
-    * this repo — concurrent runs must not share the band index). */
-  private def tmp(s: SparkSession, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
-      s"${s.sparkContext.applicationId}/$name"
-
   /** doc_id + distinct word-3-gram shingle set. */
   private def shingled(s: SparkSession, dir: String): DataFrame =
     TextDedup.wordShingles(Tables.documents(s, dir),

@@ -325,7 +325,7 @@ object MiningQueries extends QueryCatalog {
     // Jaro-Winkler fuzzy self-match — the edit-distance join's scorer
     // twin for NAME data, where transposition tolerance and the Winkler
     // common-prefix boost fit typos better than raw Levenshtein. The
-    // scorer is the native codegen expression plans/JaroWinkler (one
+    // scorer is graft_jaro_winkler, the kernel plans/JaroWinkler (one
     // static JVM call per candidate pair); candidates come from the same
     // first-token blocking discipline as q_join_fuzzy_levenshtein —
     // blocking bounds pairs, string length never becomes the scale axis.

@@ -18,13 +18,6 @@ import graft.rdf.{Emit, EmitQ, QuadEmitter}
   */
 object QuadQueries extends QueryCatalog {
 
-  /** Per-session sink root (ADVICE r3): the Spark applicationId scopes
-    * the path so two concurrent harness runs on one machine can't clobber
-    * each other's output between a query's write and its read-back. */
-  private def tmp(s: SparkSession, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
-      s"${s.sparkContext.applicationId}/$name"
-
   /** The full-fidelity corpus rendered to N-Quads text ONCE per
     * (JVM, dir) — shared setup for the parse-side roundtrip gates
     * (`q_nquads_parse_roundtrip`, `q_nquads_dsv2_pushdown`), whose

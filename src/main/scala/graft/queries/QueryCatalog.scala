@@ -21,4 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 trait QueryCatalog {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracleSql: Map[String, String]
+
+  /** Per-session scratch path for `name`: the Spark applicationId scopes
+    * it, so two concurrent runs on one machine can't clobber each other's
+    * files between a query's write and its read-back. */
+  protected def tmp(s: SparkSession, name: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
+      s"${s.sparkContext.applicationId}/$name"
 }

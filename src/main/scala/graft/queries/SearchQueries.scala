@@ -58,9 +58,7 @@ object SearchQueries extends QueryCatalog {
     // the corpus. Same oracle as q_search_prefix by construction;
     // PlanAuditSpec pins the PartitionFilters pruning.
     "q_search_prefix_indexed" -> ((s, dir) => {
-      val path = graft.operators.BuildOnce.scoped(
-        s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
-          s"${s.sparkContext.applicationId}/prefix_index", dir)
+      val path = graft.operators.BuildOnce.scoped(tmp(s, "prefix_index"), dir)
       graft.operators.BuildOnce(path) {
         graft.operators.PrefixIndex.build(tokens(s, dir), path)
       }
@@ -78,9 +76,7 @@ object SearchQueries extends QueryCatalog {
     // over the full dictionary (independent formulation: exhaustive
     // scan vs indexed neighborhood).
     "q_search_typo" -> ((s, dir) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
-        s"${s.sparkContext.applicationId}/typo_index_" +
-        f"${dir.hashCode & 0x7fffffff}%08x"
+      val path = tmp(s, f"typo_index_${dir.hashCode & 0x7fffffff}%08x")
       if (!java.nio.file.Files.exists(
           java.nio.file.Paths.get(path, "_SUCCESS")))
         graft.operators.PrefixIndex.buildTypo(tokens(s, dir), path)

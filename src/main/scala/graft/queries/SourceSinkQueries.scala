@@ -23,13 +23,6 @@ import graft.sources.Sources
   */
 object SourceSinkQueries extends QueryCatalog {
 
-  /** Per-session sink root (ADVICE r3): the Spark applicationId scopes the
-    * path so concurrent harness runs can't clobber each other's files
-    * between a round-trip's write and its read-back. */
-  private def tmp(s: SparkSession, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
-      s"${s.sparkContext.applicationId}/$name"
-
   private val DerbyUrl = "jdbc:derby:memory:graftdb;create=true"
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

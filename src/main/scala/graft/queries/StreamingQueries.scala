@@ -16,12 +16,6 @@ import graft.operators.Checkpoints.CutOps
   */
 object StreamingQueries extends QueryCatalog {
 
-  /** Per-session ledger root (applicationId-scoped like every sink path
-    * in this repo — concurrent runs must not share state). */
-  private def tmp(s: SparkSession, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_io/" +
-      s"${s.sparkContext.applicationId}/$name"
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Resumable incremental batch (VERDICT r2 "Next round" #5) — the
     // batch twin of the reference's tri-state `qrt_found` resume pattern

@@ -472,7 +472,7 @@ object TextAnalysisQueries extends QueryCatalog {
     // corpora mix precomposed (U+00E9) and decomposed (e + U+0301)
     // encodings of the same text, which are byte-different and so leak
     // straight past every hash-keyed dedup in this catalog. The scan-time
-    // fix is the native codegen expression plans/NfcNormalize
+    // fix is graft_nfc, one static call of the kernel plans/NfcNormalize
     // (java.text.Normalizer, quick-check fast path for already-NFC
     // ASCII). The testdata is ASCII, so the query PLANTS the hazard:
     // each doc prefix is emitted once precomposed and once decomposed —

@@ -151,7 +151,7 @@ object QuadEmitter {
     * (full-fidelity path); relations without the column are all-IRI. */
   private def lineExpr(quads: DataFrame): Column = {
     val v = col("objectValue")
-    // native single-pass escape (plans/NtEscape) — bit-identical to the
+    // single-pass escape kernel (plans/NtEscape) — bit-identical to the
     // old five-regexp_replace chain the DuckDB oracles still replay
     // (ExtensionsSpec asserts parity); one string walk instead of five
     // regex passes per literal on the serialize hot path

@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   * source-side (VERDICT r4 "Missing" #2; the reference parses vocab files
   * into graphs at load time, `cam/etl/__init__.py:55-62`).
   *
-  * Spark-first shape: the whole parse is COLUMN EXPRESSIONS over a text
-  * scan — a line-anchored master regex splits the four terms, `when`
-  * chains on the term's lead characters classify IRI / bnode / literal,
-  * and literal bodies unescape through the native codegen
-  * [[graft.plans.NtUnescape]]. No UDF, no per-row driver logic: at 100 TB
+  * Spark-first shape: the whole parse is ONE native function over a text
+  * scan — a line-anchored master regex splits the terms, their lead
+  * characters classify IRI / bnode / literal, and literal bodies unescape
+  * through [[graft.plans.NtUnescape]], all inside the kernel
+  * [[graft.plans.NqQuad]]. No UDF, no per-row driver logic: at 100 TB
   * this is an embarrassingly parallel scan that whole-stage-codegens, and
   * text-file splits distribute it for free (N-Quads is line-delimited, so
   * a split boundary is always a record boundary).
@@ -32,12 +32,13 @@ object QuadParser {
     * IRI, object (IRI | bnode | literal with optional `@lang` / `^^<dt>`),
     * optional graph (IRI | bnode), terminating dot, optional comment.
     * Group 1 = subject term, 2 = predicate IRI, 3 = object term,
-    * 4 = graph term (absent — the N-Triples case). Matched natively by
-    * [[graft.plans.NqTerms]]. */
+    * 4 = literal body (absent unless the object is a literal), 5 = its
+    * language tag, 6 = its datatype IRI, 7 = graph term (absent — the
+    * N-Triples case). Matched natively by [[graft.plans.NqQuad]]. */
   val LineRegex: String =
     "^[ \\t]*(<[^>]*>|_:[^ \\t]+)[ \\t]+<([^>]*)>[ \\t]+" +
-      "(<[^>]*>|_:[^ \\t]+|\"(?:[^\"\\\\]|\\\\.)*\"" +
-      "(?:@[A-Za-z][A-Za-z0-9]*(?:-[A-Za-z0-9]+)*|\\^\\^<[^>]*>)?)" +
+      "(<[^>]*>|_:[^ \\t]+|\"((?:[^\"\\\\]|\\\\.)*)\"" +
+      "(?:@([A-Za-z][A-Za-z0-9]*(?:-[A-Za-z0-9]+)*)|\\^\\^<([^>]*)>)?)" +
       "(?:[ \\t]+(<[^>]*>|_:[^ \\t]+))?[ \\t]*\\.[ \\t]*(?:#.*)?$"
 
   private def isBlankOrComment(line: Column): Column = {
@@ -45,61 +46,25 @@ object QuadParser {
     (t === "") || t.startsWith("#")
   }
 
-  /** `<iri>` / `_:label` body strips are fixed-offset substrings — never
-    * a second regex over the term. */
-  private def iriBody(term: Column): Column =
-    term.substr(lit(2), length(term) - 2)
-  private def bnodeBody(term: Column): Column =
-    term.substr(lit(3), length(term) - 2)
-
   /** Parse a `value: string` relation of N-Quads/N-Triples lines into the
     * engine quad shape: `subject, subjectKind, predicate, objectValue,
     * objectKind, datatype, lang, graph` (graph null on triple lines).
     * Malformed lines are dropped — audit them via [[rejects]].
     *
-    * The statement split is ONE native regex pass per line
-    * ([[graft.plans.NqTerms]] — `isnotnull` of its struct result is the
+    * The whole parse is ONE native regex pass per line
+    * ([[graft.plans.NqQuad]] — `isnotnull` of its struct result is the
     * grammar gate, so blanks/comments/malformed all fall out of the same
-    * match); term classification and body strips are plain string
-    * expressions. */
-  def parse(lines: DataFrame): DataFrame = {
-    import graft.model.TermKind
-    lines
-      .select(call_function("graft_nq_terms", col("value")).as("t"))
-      .filter(col("t").isNotNull)
-      .select(col("t.s_term").as("s_term"),
-        col("t.predicate").as("predicate"),
-        col("t.o_term").as("o_term"),
-        coalesce(col("t.g_term"), lit("")).as("g_term"))
-      .select(
-        when(col("s_term").startsWith("_:"), bnodeBody(col("s_term")))
-          .otherwise(iriBody(col("s_term"))).as("subject"),
-        when(col("s_term").startsWith("_:"), TermKind.BNode)
-          .otherwise(TermKind.Iri).as("subjectKind"),
-        col("predicate"),
-        when(col("o_term").startsWith("<"), iriBody(col("o_term")))
-          .when(col("o_term").startsWith("_:"), bnodeBody(col("o_term")))
-          .otherwise(call_function("graft_nt_unescape",
-            regexp_extract(col("o_term"),
-              "^\"((?:[^\"\\\\]|\\\\.)*)\"", 1))).as("objectValue"),
-        when(col("o_term").startsWith("<"), TermKind.Iri)
-          .when(col("o_term").startsWith("_:"), TermKind.BNode)
-          .otherwise(TermKind.Literal).as("objectKind"),
-        nullif(regexp_extract(col("o_term"), "\"\\^\\^<([^>]*)>$", 1),
-          lit("")).as("datatype"),
-        nullif(regexp_extract(col("o_term"),
-            "\"@([A-Za-z][A-Za-z0-9]*(?:-[A-Za-z0-9]+)*)$", 1),
-          lit("")).as("lang"),
-        when(col("g_term") === "", lit(null).cast("string"))
-          .when(col("g_term").startsWith("_:"), bnodeBody(col("g_term")))
-          .otherwise(iriBody(col("g_term"))).as("graph"))
-  }
+    * match). */
+  def parse(lines: DataFrame): DataFrame =
+    lines.select(call_function("graft_nq_quad", col("value")).as("q"))
+      .filter(col("q").isNotNull)
+      .select("q.*")
 
   /** Data lines that fail the statement grammar (blank/comment lines are
     * legal, never rejects). Empty ⇔ [[parse]] was lossless on this input. */
   def rejects(lines: DataFrame): DataFrame = {
     lines.filter(!isBlankOrComment(col("value")) &&
-      call_function("graft_nq_terms", col("value")).isNull)
+      call_function("graft_nq_quad", col("value")).isNull)
   }
 
   /** File source: read a text dir/glob as N-Quads (or N-Triples — the

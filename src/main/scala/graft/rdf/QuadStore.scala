@@ -2,6 +2,7 @@ package graft.rdf
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import scala.collection.immutable.VectorMap
 
@@ -36,6 +37,12 @@ object QuadStore {
     * last from a parquet read; serving code expects this order). */
   val QuadCols: Seq[String] = Seq("subject", "subjectKind", "predicate",
     "objectValue", "objectKind", "datatype", "lang", "graph")
+
+  /** The stored schema: reading the store with it runs no
+    * schema-inference job, and `graph` stays a string whatever its
+    * directory names look like. */
+  val QuadSchema: StructType =
+    StructType(QuadCols.map(StructField(_, StringType)))
 
   // Sidecar I/O goes through Hadoop's FileSystem — the SAME resolver
   // the parquet write/read paths use implicitly — so a store on a
@@ -142,9 +149,8 @@ object QuadStore {
     val s = quads.sparkSession
     val rows = quads.select(QuadCols.map(col): _*)
     commit(laidOut(rows), path, "static")
-    // the written schema: reading back runs no schema-inference job
     writeText(s, statsFile(path), statsText(QuadStats.compute(
-      s.read.schema(rows.schema).parquet(path)
+      s.read.schema(QuadSchema).parquet(path)
         .select("predicate", "subject", "objectValue"))))
     fp.foreach(v => writeText(s, fpFile(path), v))
   }
@@ -209,7 +215,7 @@ object QuadStore {
     val affected = touched.select(col("graph")).distinct()
       .collect().map(_.getString(0)).toSeq
     val staged = Checkpoints.cut(laidOut(
-      s.read.schema(deltaQ.schema).parquet(path)
+      s.read.schema(QuadSchema).parquet(path)
         .filter(col("graph").isin(affected: _*))
         .join(touched.withColumn("hit", lit(true)),
           Seq("graph", "subject"), "left")
@@ -268,7 +274,8 @@ object QuadStore {
     * the sidecar — opening costs one small file read, not a corpus
     * pass. */
   def open(s: SparkSession, path: String): DataFrame = {
-    val df = s.read.parquet(path).select(QuadCols.map(col): _*)
+    val df = s.read.schema(QuadSchema).parquet(path)
+      .select(QuadCols.map(col): _*)
     readTextIfExists(s, statsFile(path)) match {
       case Some(text) => QuadStats.registerPrecomputed(df, parseStats(text))
       case None => df

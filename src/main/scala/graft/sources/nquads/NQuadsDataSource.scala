@@ -1,7 +1,5 @@
 package graft.sources.nquads
 
-import java.util.regex.Pattern
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
@@ -24,8 +22,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.TermKind
-import graft.plans.NtUnescape
-import graft.rdf.QuadParser
+import graft.plans.NqQuad
 
 /** DataSource V2 N-Quads/N-Triples reader — `spark.read.format("nquads")
   * .load(dir)` — the connector-tier twin of [[graft.rdf.QuadParser]]
@@ -52,10 +49,10 @@ import graft.rdf.QuadParser
   *  - '''column pruning''' (`SupportsPushDownRequiredColumns`): a
   *    projection of two term columns materializes two, not eight.
   *
-  * Parse semantics are IDENTICAL to [[QuadParser.parse]] — same line
-  * grammar ([[QuadParser.LineRegex]]), same term classification, same
-  * escape decoding ([[NtUnescape.compute]]), same drop-malformed
-  * tolerance — asserted equal on real dumps by NQuadsSourceSpec.
+  * Parse semantics are IDENTICAL to [[graft.rdf.QuadParser.parse]]: both
+  * call the same kernel ([[NqQuad.parse]]) — one line grammar, one set
+  * of term rules, the same drop-malformed tolerance — asserted equal on
+  * real dumps by NQuadsSourceSpec.
   */
 class NQuadsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "nquads"
@@ -69,16 +66,8 @@ class NQuadsDataSource extends TableProvider with DataSourceRegister {
 }
 
 object NQuadsTable {
-  /** Full-fidelity quad shape, = [[QuadParser.parse]] output. */
-  val Schema: StructType = StructType(Seq(
-    StructField("subject", StringType, nullable = false),
-    StructField("subjectKind", StringType, nullable = false),
-    StructField("predicate", StringType, nullable = false),
-    StructField("objectValue", StringType, nullable = false),
-    StructField("objectKind", StringType, nullable = false),
-    StructField("datatype", StringType, nullable = true),
-    StructField("lang", StringType, nullable = true),
-    StructField("graph", StringType, nullable = true)))
+  /** Full-fidelity quad shape, = [[graft.rdf.QuadParser.parse]] output. */
+  val Schema: StructType = NqQuad.schema
 }
 
 class NQuadsTable(path: String) extends Table
@@ -205,8 +194,8 @@ class NQuadsReaderFactory(columns: Array[String],
 }
 
 /** Per-split reader: Hadoop line reader (split-boundary safe) → substring
-  * prefilter from the pushed equalities → one compiled-regex statement
-  * parse → exact filter re-check → pruned `InternalRow`. */
+  * prefilter from the pushed equalities → one statement parse
+  * ([[NqQuad.parse]]) → exact filter re-check → pruned `InternalRow`. */
 class NQuadsPartitionReader(part: NQuadsPartition, columns: Array[String],
     eqFilters: Array[(String, String)], conf: Configuration)
     extends PartitionReader[InternalRow] {
@@ -216,7 +205,6 @@ class NQuadsPartitionReader(part: NQuadsPartition, columns: Array[String],
       Array.empty[String]))
   private val key = new LongWritable()
   private val value = new Text()
-  private val line = Pattern.compile(QuadParser.LineRegex)
 
   /** A line whose parsed field can equal `v` must contain the rendered
     * term — `<v>` (IRI) or `_:v` (bnode; predicates are always IRIs).
@@ -238,65 +226,21 @@ class NQuadsPartitionReader(part: NQuadsPartition, columns: Array[String],
 
   private var current: InternalRow = _
 
-  private def term(t: String): (String, String) =
-    if (t.startsWith("_:")) (t.substring(2), TermKind.BNode)
-    else (t.substring(1, t.length - 1), TermKind.Iri)
-
-  private val LitBody = Pattern.compile("^\"((?:[^\"\\\\]|\\\\.)*)\"")
-  private val LitDt = Pattern.compile("\"\\^\\^<([^>]*)>$")
-  private val LitLang =
-    Pattern.compile("\"@([A-Za-z][A-Za-z0-9]*(?:-[A-Za-z0-9]+)*)$")
-
-  /** Parse one candidate line to the full 8-field quad, null if the line
-    * is not a statement. Mirrors [[QuadParser.parse]] exactly. */
-  private def parseLine(s: String): Array[String] = {
-    val m = line.matcher(s)
-    if (!m.matches()) return null
-    val (subj, subjKind) = term(m.group(1))
-    val pred = m.group(2)
-    val oTerm = m.group(3)
-    val (obj, objKind, dt, lang) =
-      if (oTerm.startsWith("<") || oTerm.startsWith("_:")) {
-        val (v, k) = term(oTerm)
-        (v, k, null, null)
-      } else {
-        val bm = LitBody.matcher(oTerm)
-        bm.find()
-        val body = NtUnescape.compute(
-          UTF8String.fromString(bm.group(1))).toString
-        val dm = LitDt.matcher(oTerm)
-        val lm = LitLang.matcher(oTerm)
-        (body, TermKind.Literal,
-          if (dm.find()) dm.group(1) else null,
-          if (lm.find()) lm.group(1) else null)
-      }
-    val graph =
-      if (m.group(4) == null) null
-      else term(m.group(4))._1
-    Array(subj, subjKind, pred, obj, objKind, dt, lang, graph)
+  private val exactFilters: Array[(Int, UTF8String)] = eqFilters.map {
+    case (a, v) =>
+      (NQuadsTable.Schema.fieldNames.indexOf(a), UTF8String.fromString(v))
   }
 
-  private val exactFilters: Array[(Int, String)] = eqFilters.map {
-    case (a, v) => (NQuadsTable.Schema.fieldNames.indexOf(a), v)
-  }
-
-  private def passesExact(q: Array[String]): Boolean =
-    exactFilters.forall { case (idx, v) => q(idx) != null && q(idx) == v }
+  private def passesExact(q: Array[Any]): Boolean =
+    exactFilters.forall { case (idx, v) => v == q(idx) }
 
   override def next(): Boolean = {
     while (reader.next(key, value)) {
       val s = value.toString
       if (prefilters.forall(_(s))) {
-        val q = parseLine(s)
+        val q = NqQuad.parse(s)
         if (q != null && passesExact(q)) {
-          val out = new Array[Any](fieldIdx.length)
-          var i = 0
-          while (i < fieldIdx.length) {
-            val v = q(fieldIdx(i))
-            out(i) = if (v == null) null else UTF8String.fromString(v)
-            i += 1
-          }
-          current = new GenericInternalRow(out)
+          current = new GenericInternalRow(fieldIdx.map(q(_)))
           return true
         }
       }

@@ -31,6 +31,22 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
       "radius join was not rewritten:\n" + plan)
   }
 
+  /** Runs `body` compiled (whole-stage codegen, no interpreted
+    * fallback) and interpreted, passing the mode's name. Neither mode
+    * folds a projection of a local relation on the driver, so the
+    * functions run on the executors in the mode named. */
+  private def inEachMode(body: String => Unit): Unit = Seq(
+    "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+  ).foreach { case (mode, confs) =>
+    val all = confs :+ ("spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    all.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body(mode) finally all.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("a newSession() child gets every function and rule with no " +
       "registration call") {
     val child = spark.newSession()
@@ -39,6 +55,54 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
       assert(registry.functionExists(id), s"$id missing in the child session")
     }
     assertNoNestedLoop(radiusJoin(child)._3)
+  }
+
+  test("every kernel function keeps its SQL name, rejects a wrong arity " +
+      "or argument type, and returns the same rows compiled and " +
+      "interpreted") {
+    import spark.implicits._
+    val in = Seq(
+      (Some("tab\there \"q\" back\\slash"), Some("cafe\u0301"),
+        Some("<urn:s> <urn:p> \"v\\n\"@en <urn:g> ."),
+        Some("POLYGON((0 0, 2 0, 2 1, 0 0))"), Some(151.2), Some(-33.9),
+        Array(1.0f, 2.5f), Array(0.5, -1.0)),
+      (Some(""), Some("martha"), Some("_:b <urn:p> \"x\"^^<> ."),
+        Some("not wkt"), Some(0.0), Some(0.0),
+        Array(1.0f), Array(1.0, 2.0)), // unequal lengths: null dot
+      (None, None, None, None, None, None, null, null))
+      .toDF("s", "t", "line", "wkt", "x", "y", "f", "d")
+    // (call, wrong arity, wrong argument type)
+    val cases = Seq(
+      ("graft_nt_escape(s)", "graft_nt_escape(s, s)", "graft_nt_escape(x)"),
+      ("graft_nt_unescape(s)", "graft_nt_unescape()", "graft_nt_unescape(f)"),
+      ("graft_nfc(t)", "graft_nfc(t, t)", "graft_nfc(x)"),
+      ("graft_jaro_winkler(s, t)", "graft_jaro_winkler(s)",
+        "graft_jaro_winkler(s, x)"),
+      ("graft_haversine_km(x, y, y, x)", "graft_haversine_km(x, y, y)",
+        "graft_haversine_km(x, y, y, f)"),
+      ("graft_dot(f, d)", "graft_dot(f)", "graft_dot(f, s)"),
+      ("graft_nq_quad(line)", "graft_nq_quad(line, line)",
+        "graft_nq_quad(x)"),
+      ("graft_wkt_bbox(wkt)", "graft_wkt_bbox()", "graft_wkt_bbox(y)"))
+    cases.foreach { case (call, arity, argType) =>
+      assert(in.selectExpr(call).columns.toSeq == Seq(call))
+      Seq(arity, argType).foreach { bad =>
+        intercept[Exception](in.selectExpr(bad))
+      }
+    }
+    val calls = cases.map(_._1)
+    val byMode = scala.collection.mutable.Map.empty[String, Seq[Seq[Any]]]
+    inEachMode { mode =>
+      byMode(mode) = in.selectExpr(calls: _*).collect().toSeq.map(_.toSeq)
+    }
+    assert(byMode("codegen") == byMode("interpreted"))
+    val Seq(full, edge, nulls) = byMode("codegen")
+    assert(full.forall(_ != null), full)
+    assert(nulls.forall(_ == null), "null in must give null out: " + nulls)
+    // graft_dot of unequal lengths and the bbox of unparseable WKT are
+    // null; the quad keeps the empty datatype
+    assert(edge(5) == null && edge(7) == null, edge)
+    assert(edge(6).asInstanceOf[org.apache.spark.sql.Row].getString(5) == "")
   }
 
   test("graft_haversine_km SQL function matches the Column composition") {
@@ -66,27 +130,29 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
       """aggregate(zip_with(a, b, (x, y) ->
         |  cast(x as double) * cast(y as double)),
         |cast(0 as double), (acc, v) -> acc + v)""".stripMargin
-    val both = rows
-      .select(expr("graft_dot(a, b)").as("native"), expr(hof).as("hof"))
-      .collect()
-    both.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
-    // unequal lengths: both formulations yield null
-    val odd = Seq((Array(1.0f, 2.0f), Array(1.0f))).toDF("a", "b")
-    val r = odd.select(expr("graft_dot(a, b)").as("native"), expr(hof).as("hof"))
-      .collect()(0)
-    assert(r.isNullAt(0) && r.isNullAt(1))
-    // null ELEMENT (parquet embeddings read as array<float> with
-    // containsNull=true): null * y poisons the HOF sum → NULL, and the
-    // native expression must agree rather than reading the slot as 0.0
-    // (ADVICE r4). Covers both interpreted eval and whole-stage codegen.
-    val withNullElem = spark.sql(
-      """SELECT array(cast(1.0 as float), cast(null as float)) AS a,
-        |       array(cast(2.0 as float), cast(3.0 as float)) AS b""".stripMargin)
-    val nr = withNullElem
-      .select(expr("graft_dot(a, b)").as("native"), expr(hof).as("hof"))
-      .collect()(0)
-    assert(nr.isNullAt(0) && nr.isNullAt(1),
-      s"null element must yield NULL on both paths, got $nr")
+    inEachMode { mode =>
+      val both = rows
+        .select(expr("graft_dot(a, b)").as("native"), expr(hof).as("hof"))
+        .collect()
+      both.foreach(r => assert(r.getDouble(0) == r.getDouble(1), mode))
+      // unequal lengths: both formulations yield null
+      val odd = Seq((Array(1.0f, 2.0f), Array(1.0f))).toDF("a", "b")
+      val r = odd.select(expr("graft_dot(a, b)").as("native"),
+        expr(hof).as("hof")).collect()(0)
+      assert(r.isNullAt(0) && r.isNullAt(1), mode)
+      // null ELEMENT (parquet embeddings read as array<float> with
+      // containsNull=true): null * y poisons the HOF sum → NULL, and the
+      // native function must agree rather than reading the slot as 0.0
+      // (ADVICE r4).
+      val withNullElem = spark.sql(
+        """SELECT array(cast(1.0 as float), cast(null as float)) AS a,
+          |       array(cast(2.0 as float), cast(3.0 as float)) AS b""".stripMargin)
+      val nr = withNullElem
+        .select(expr("graft_dot(a, b)").as("native"), expr(hof).as("hof"))
+        .collect()(0)
+      assert(nr.isNullAt(0) && nr.isNullAt(1),
+        s"null element must yield NULL on both paths ($mode), got $nr")
+    }
     val nrInterp = graft.plans.DotProduct.compute(
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
         Array[Any](1.0f, null)),
@@ -114,13 +180,17 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
     val chain = regexp_replace(regexp_replace(regexp_replace(regexp_replace(
       regexp_replace(col("v"), "\\\\", "\\\\\\\\"),
       "\"", "\\\\\""), "\n", "\\\\n"), "\r", "\\\\r"), "\t", "\\\\t")
-    val got = rows.select(expr("graft_nt_escape(v)").as("native"),
-      chain.as("chain"), expr("graft_nt_unescape(graft_nt_escape(v))").as("rt"),
-      col("v")).collect()
-    got.foreach { r =>
-      assert(r.getString(0) == r.getString(1),
-        s"escape diverged on ${r.getString(3)}")
-      assert(r.getString(2) == r.getString(3), "unescape ∘ escape ≠ identity")
+    inEachMode { mode =>
+      val got = rows.select(expr("graft_nt_escape(v)").as("native"),
+        chain.as("chain"),
+        expr("graft_nt_unescape(graft_nt_escape(v))").as("rt"),
+        col("v")).collect()
+      got.foreach { r =>
+        assert(r.getString(0) == r.getString(1),
+          s"escape diverged ($mode) on ${r.getString(3)}")
+        assert(r.getString(2) == r.getString(3),
+          s"unescape ∘ escape ≠ identity ($mode)")
+      }
     }
   }
 
@@ -151,11 +221,13 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
       // symmetric by definition
       assert(graft.plans.JaroWinkler.compute(b, a) === w)
     }
-    // SQL surface goes through codegen; must agree with the static call
-    val viaSql = golden.toDF("a", "b", "w")
-      .withColumn("jw", expr("graft_jaro_winkler(a, b)"))
-      .collect()
-    viaSql.foreach(r => assert(r.getDouble(3) === r.getDouble(2)))
+    // the SQL surface must agree with the static call
+    inEachMode { mode =>
+      val viaSql = golden.toDF("a", "b", "w")
+        .withColumn("jw", expr("graft_jaro_winkler(a, b)"))
+        .collect()
+      viaSql.foreach(r => assert(r.getDouble(3) === r.getDouble(2), mode))
+    }
   }
 
   test("graft_nfc composes decomposed input and is identity on NFC text") {
@@ -166,9 +238,11 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
       ("A\u030a n\u0303", "\u00c5 \u00f1"), // ring + tilde compose
       ("plain ascii 123", "plain ascii 123"),
       ("", "")).toDF("v", "expected")
-    val got = rows.select(expr("graft_nfc(v)").as("n"), col("expected"))
-      .collect()
-    got.foreach(r => assert(r.getString(0) == r.getString(1)))
+    inEachMode { mode =>
+      val got = rows.select(expr("graft_nfc(v)").as("n"), col("expected"))
+        .collect()
+      got.foreach(r => assert(r.getString(0) == r.getString(1), mode))
+    }
     // raw forms really were byte-different before normalization
     assert("cafe\u0301" != "caf\u00e9")
   }

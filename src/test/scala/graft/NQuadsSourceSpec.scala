@@ -24,7 +24,11 @@ class NQuadsSourceSpec extends AnyFunSuite with SparkTestBase {
       "# a comment",
       "",
       "not a statement at all",
-      "<urn:s4> <urn:p> \"last\" <urn:g1> .")
+      "<urn:s4> <urn:p> \"last\" <urn:g1> .",
+      // an empty datatype IRI stays "", and an IRI object carries no
+      // datatype even when its text ends like one
+      "<urn:s5> <urn:p> \"x\"^^<> <urn:g2> .",
+      "<urn:s6> <urn:p> <urn:o\"^^<x> <urn:g2> .")
     Files.writeString(Paths.get(d, "part-0.nq"), lines.mkString("\n"))
     d
   }
@@ -33,7 +37,7 @@ class NQuadsSourceSpec extends AnyFunSuite with SparkTestBase {
     val dsv2 = spark.read.format("nquads").load(dir).collect().toSet
     val expr = QuadParser.readNQuads(spark, dir).collect().toSet
     assert(dsv2 == expr)
-    assert(dsv2.size == 6, "5 statements + 1 NT line; junk dropped")
+    assert(dsv2.size == 8, "7 statements + 1 NT line; junk dropped")
   }
 
   test("graph equality pushes to the scan and prunes foreign-graph rows") {

@@ -2848,11 +2848,11 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val store =
       s"${System.getProperty("java.io.tmpdir")}/graft_io/upsert_once"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(store))
-    // every evaluation of a source row adds 1; the `distinct` makes the
-    // source a derivation, not a store-like scan that is read in place
+    // every evaluation of a source row adds 1; a UDF projection of a
+    // local relation is a derivation, not a store-like relation
     val evals = spark.sparkContext.longAccumulator("quad source rows")
     val subjectOf = udf { (id: Long) => evals.add(1); s"urn:s$id" }
-    def quads(ids: Seq[Long], tag: String) = ids.toDF("id").distinct().select(
+    def quads(ids: Seq[Long], tag: String) = ids.toDF("id").select(
       subjectOf(col("id")).as("subject"), lit("iri").as("subjectKind"),
       concat(lit("urn:p"), (col("id") % 3).cast("string")).as("predicate"),
       concat(lit(tag), col("id").cast("string")).as("objectValue"),

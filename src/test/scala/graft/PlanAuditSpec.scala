@@ -212,9 +212,13 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       .localCheckpoint()
     val (upsertJobs, upsertBroadcasts) = countJobs(
       graft.rdf.QuadStore.upsert(spark, path, delta, Some(deletes)))
+    // opening reads the store with its fixed schema: no inference job
+    val (openJobs, openBroadcasts) =
+      countJobs(graft.rdf.QuadStore.open(spark, path))
     assert((writeJobs, writeBroadcasts) == (2, 0))
     // the touched keys are broadcast to the left join of the stored rows
     assert((upsertJobs, upsertBroadcasts) == (4, 1))
+    assert((openJobs, openBroadcasts) == (0, 0))
   }
 
   test("sketch expressions are not duplicated into pushed-down filters") {
@@ -459,7 +463,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // regexp_extract fan-out (one compiled-regex pass per line)
     val optimized = parsed.queryExecution.optimizedPlan.toString
     assert(!optimized.contains("regexp_extract(value"), optimized)
-    assert(optimized.contains("graft_nq_terms"), optimized)
+    assert(optimized.contains("NqQuad.compute"), optimized)
     assert(parsed.filter(parsed("lang") === lit("en")).count() == 1000)
   }
 
@@ -1022,7 +1026,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(plan.contains("graft_jaro_winkler"),
+    assert(plan.contains("JaroWinkler.compute"),
       "native scorer missing from the physical plan:\n" + plan)
   }
 
