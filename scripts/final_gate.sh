@@ -88,6 +88,13 @@ gen=$(grep -rl 'doGenCode' src/main/scala/graft/plans |
 [ -z "$gen" ] ||
   fail "hand-written doGenCode in src/main/scala/graft/plans: $gen"
 
+# A SPARQL FILTER clause has one representation: Query.filters holds
+# each clause as a DNF of FilterAtoms, and HAVING has one list.
+dup=$(grep -owE 'varFilters|inFilters|boundFilters|filterFns|exprFilters|boolFilters|termFilters|orFilters|havingComputed' \
+  src/main/scala/graft/rdf/SparqlParser.scala | sort -u | tr '\n' ' ')
+[ -z "$dup" ] ||
+  fail "per-kind filter fields in SparqlParser.scala (use Query.filters): $dup"
+
 sbt -batch compile >/tmp/final_gate_compile.log 2>&1 ||
   { tail -20 /tmp/final_gate_compile.log >&2; fail "sbt compile failed"; }
 

@@ -551,7 +551,8 @@ object GeomConstruct {
   }
 
   /** Metres per degree of great-circle arc under the SAME spherical
-    * model the haversine expression uses (R = 6371.0088 km) — the one
+    * model [[graft.functions.GraftFunctions.haversineKm]] uses
+    * (R = 6371.0088 km) — the one
     * conversion constant shared by [[computeBufferMetres]] and its
     * oracles. */
   val MetresPerDegree: Double = Math.PI * 6371.0088 * 1000.0 / 180.0

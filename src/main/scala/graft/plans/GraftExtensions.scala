@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast, Expression, ExpressionInfo, InheritAnalysisRules, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, InheritAnalysisRules, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
@@ -68,9 +68,6 @@ object GraftExtensions {
 
   /** Every native SQL function the extension injects. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
-    kernel("graft_haversine_km", "(lon1, lat1, lon2, lat2)", HaversineKm,
-        DoubleType, nullResult = false)(
-      _.length == 4, _.map(a => Cast(a, DoubleType))),
     // the element-type flags are fixed per plan, so an array<float> is
     // read as floats in place, never cast to array<double> per row
     kernel("graft_dot", "(array<float|double>, array<float|double>)",
@@ -84,8 +81,8 @@ object GraftExtensions {
         a.dataType.asInstanceOf[ArrayType].elementType == FloatType))),
     kernel("graft_nt_unescape", "(string)", NtUnescape, StringType,
       nullResult = false)(strings(1)),
-    kernel("graft_nq_quad", "(string)", NqQuad, NqQuad.schema,
-      nullResult = true)(strings(1)),
+    kernel("graft_nq_quad", "(string)", NqQuad, NqQuad.dataType,
+      nullResult = false)(strings(1)),
     kernel("graft_nt_escape", "(string)", NtEscape, StringType,
       nullResult = false)(strings(1)),
     kernel("graft_jaro_winkler", "(string, string)", JaroWinkler, DoubleType,

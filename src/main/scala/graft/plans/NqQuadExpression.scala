@@ -1,17 +1,18 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.TermKind
 
 /** N-Quads statement parser, the kernel of `graft_nq_quad`: one anchored
-  * regex match per line returning the full quad — null when the line is
-  * not a statement (blank, comment, malformed). Both N-Quads readers call
-  * it: [[graft.rdf.QuadParser.parse]] through the SQL function and the
-  * DSv2 `nquads` source per line, so the term rules are written once.
+  * regex match per line returning the line's quads — one, or none when
+  * the line is not a statement (blank, comment, malformed). Both N-Quads
+  * readers call it: [[graft.rdf.QuadParser.parse]] through the SQL
+  * function and the DSv2 `nquads` source per line, so the term rules are
+  * written once.
   *
   * Why native: built-in `regexp_extract` returns ONE group per call, so
   * extracting the terms and the literal's body, tag and datatype costs a
@@ -21,10 +22,13 @@ import graft.model.TermKind
   * its inner loop, same tier as [[DotProduct]]. One `Matcher` pass,
   * groups read out of the match state.
   *
-  * Null semantics double as the grammar gate: `isnotnull(result)` IS the
-  * valid-statement filter, so [[graft.rdf.QuadParser]] needs no separate
-  * `rlike`. Datatype and language tag are null unless the object is a
-  * literal that carries one; `"x"^^<>` keeps its empty datatype.
+  * The array doubles as the grammar gate: `inline` of it drops every
+  * non-statement line in the same pass that extracts the terms, so
+  * [[graft.rdf.QuadParser]] needs no separate `rlike` or filter (a
+  * filter on a projected struct would be pushed below the projection and
+  * run the match twice). Datatype and language tag are null unless the
+  * object is a literal that carries one; `"x"^^<>` keeps its empty
+  * datatype.
   */
 object NqQuad {
 
@@ -38,6 +42,11 @@ object NqQuad {
     StructField("datatype", StringType, nullable = true),
     StructField("lang", StringType, nullable = true),
     StructField("graph", StringType, nullable = true)))
+
+  /** `graft_nq_quad`'s result type: the quads of one line. */
+  val dataType: ArrayType = ArrayType(schema, containsNull = false)
+
+  private val none: ArrayData = new GenericArrayData(Array.empty[Any])
 
   /** Compiled once per JVM; the pattern itself lives with the grammar in
     * [[graft.rdf.QuadParser.LineRegex]]. Matcher state is per-call (a
@@ -61,9 +70,10 @@ object NqQuad {
   private def kind(term: String): UTF8String =
     if (term.startsWith("_:")) BNode else Iri
 
-  def compute(line: UTF8String): InternalRow = {
+  def compute(line: UTF8String): ArrayData = {
     val q = parse(line.toString)
-    if (q == null) null else new GenericInternalRow(q)
+    if (q == null) none
+    else new GenericArrayData(Array[Any](new GenericInternalRow(q)))
   }
 
   /** One regex pass: the quad's fields in [[schema]] order, as

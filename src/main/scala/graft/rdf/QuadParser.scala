@@ -52,19 +52,17 @@ object QuadParser {
     * Malformed lines are dropped — audit them via [[rejects]].
     *
     * The whole parse is ONE native regex pass per line
-    * ([[graft.plans.NqQuad]] — `isnotnull` of its struct result is the
-    * grammar gate, so blanks/comments/malformed all fall out of the same
-    * match). */
+    * ([[graft.plans.NqQuad]] returns a line's zero or one quads, and
+    * `inline` expands them — blanks/comments/malformed all fall out of
+    * the same match). */
   def parse(lines: DataFrame): DataFrame =
-    lines.select(call_function("graft_nq_quad", col("value")).as("q"))
-      .filter(col("q").isNotNull)
-      .select("q.*")
+    lines.select(inline(call_function("graft_nq_quad", col("value"))))
 
   /** Data lines that fail the statement grammar (blank/comment lines are
     * legal, never rejects). Empty ⇔ [[parse]] was lossless on this input. */
   def rejects(lines: DataFrame): DataFrame = {
     lines.filter(!isBlankOrComment(col("value")) &&
-      call_function("graft_nq_quad", col("value")).isNull)
+      size(call_function("graft_nq_quad", col("value"))) === 0)
   }
 
   /** File source: read a text dir/glob as N-Quads (or N-Triples — the

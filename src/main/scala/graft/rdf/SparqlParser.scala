@@ -45,7 +45,9 @@ import org.apache.spark.sql.functions._
   *                                            FLOOR/ROUND/MD5/SHA1/
   *                                            SHA256/geof:distance,
   *                                            + - * / on ?v/ints)
-  *   [OPTIONAL { triples [OPTIONAL { … }] [FILTER(expr op expr)] }]
+  *   [OPTIONAL { triples [OPTIONAL { … }] [FILTER(…)] }] (any FILTER
+  *                                            clause below except LANG/
+  *                                            DATATYPE/is* tests)
   *   [MINUS { triples }]
   *   [FILTER(?v op "lit"|<iri>|number|?w [&&|'||' …])]  (op on two vars
   *                                                     = lexical compare;
@@ -65,12 +67,15 @@ import org.apache.spark.sql.functions._
  *   [FILTER [NOT] EXISTS { triples }]
   *   [VALUES ?v { "lit" <iri> … }]
   * }
-  * [GROUP BY ?v …] [HAVING(AGG(?v|*) op n | ?alias op n [&& …])]
+  * [GROUP BY ?v …] [HAVING(expr op expr [&& …])] (arithmetic over
+  *                                            AGG(?v|*), ?alias, numbers)
   * [ORDER BY [DESC(]?v[)] …] [LIMIT n] [OFFSET n]
   * }}}
   *
-  * FILTER compares a variable against a literal (`= != < > <= >=`,
-  * numeric when the literal is an integer), conjoined with `&&`.
+  * Every FILTER clause parses to one list entry in disjunctive normal
+  * form: a disjunction of `&&` groups of [[FilterAtom]]s. Each clause
+  * compiles to one row filter over the solution relation, except the
+  * term tests (LANG/DATATYPE/is*), which run as pattern-scan predicates.
   * Parsing is recursive descent over a token list — deliberately no
   * dependency, no reflection, loud errors with the offending token.
   * The compiled plan is exactly what hand-built [[Bgp]] calls produce:
@@ -122,7 +127,8 @@ object SparqlParser {
       patterns: Seq[Bgp.Pattern],
       optionals: Seq[OptGroup],
       minuses: Seq[Seq[Bgp.Pattern]],
-      filters: Seq[(String, String, String, Boolean)], // var, op, lit, numeric
+      filters: Seq[Seq[Seq[FilterAtom]]],
+      // one entry per FILTER clause, in DNF: a disjunction of && groups
       orderBy: Seq[(String, Boolean)], // var, descending
       limit: Option[Int],
       verb: String = "select", // select | construct | ask | describe
@@ -138,31 +144,16 @@ object SparqlParser {
       describeVar: Option[String] = None, // DESCRIBE ?v WHERE { … }
       selectOrder: Seq[String] = Nil, // SELECT-list column order
       offset: Option[Int] = None,
-      having: Seq[(Option[String], String, String, Double)] = Nil,
-      // (aggFunc?, var-or-alias, op, threshold): HAVING clauses
-      havingComputed: Seq[(HExpr, String, HExpr)] = Nil,
-      // HAVING over arithmetic of aggregates (r11 — §11.1)
+      having: Seq[(HExpr, String, HExpr)] = Nil,
+      // HAVING clauses: arithmetic of aggregates (§11.1)
       aggExprs: Seq[(String, HExpr)] = Nil,
       // SELECT (arith-of-aggregates AS ?alias) — §11.1 projection
       // expressions (r11); leaves share the single aggregation pass
-      filterFns: Seq[(String, String, String, String)] = Nil,
-      // (func, var, arg, flags): REGEX | STRSTARTS | CONTAINS
-      varFilters: Seq[(String, String, String)] = Nil, // ?a op ?b
-      inFilters: Seq[(String, Boolean, Seq[String])] = Nil, // v, NOT?, list
-      boundFilters: Seq[(String, Boolean)] = Nil, // v, negated (!BOUND)
       existsFilters: Seq[(Boolean, Seq[Bgp.Pattern])] = Nil,
       // (negated, group): FILTER [NOT] EXISTS { … }
-      orFilters: Seq[Seq[Seq[FilterAtom]]] = Nil,
-      // each entry: one FILTER in DNF — a disjunction of && groups
       exprBinds: Seq[(String, BindExpr)] = Nil, // BIND(expr AS ?v)
-      exprFilters: Seq[(BindExpr, String, BindExpr)] = Nil,
-      // FILTER(expr op expr)
-      termFilters: Seq[TermTest] = Nil,
-      // LANG/LANGMATCHES/DATATYPE/isIRI/isLiteral/isBlank
       valuesMulti: Seq[(Seq[String], Seq[Seq[Option[String]]])] = Nil,
       // VALUES (?a ?b) { (x y) (x UNDEF) … }: vars + rows, None = UNDEF
-      boolFilters: Seq[BindExpr] = Nil,
-      // FILTER(boolFn(args)) — bare boolean calls (geof:sfWithin …)
       fromGraphs: Seq[String] = Nil, // FROM <g> — default-graph union
       fromNamed: Seq[String] = Nil, // FROM NAMED <g> — GRAPH-visible set
       serviceGroups: Seq[(String, Boolean, Query)] = Nil,
@@ -185,11 +176,11 @@ object SparqlParser {
       minusQueries: Seq[Query] = Nil,
       // full-grammar MINUS bodies (r11): anti-join on shared vars
       existsQueries: Seq[(Boolean, Query)] = Nil,
+      // full-grammar FILTER [NOT] EXISTS bodies (r11): (anti-)semi-join
       orderExprBinds: Seq[(String, BindExpr)] = Nil)
       // ORDER BY [DESC](expr) sort keys that are EXPRESSIONS (r14):
       // each computes as a hidden column named in orderBy, applied
       // before the final projection and dropped after the sort
-      // full-grammar FILTER [NOT] EXISTS bodies (r11): (anti-)semi-join
 
   /** One OPTIONAL group: its patterns, the FILTERs scoped INSIDE the
     * group (they constrain the group's MATCH — unmatched rows keep
@@ -199,7 +190,7 @@ object SparqlParser {
     * evaluates as LeftJoin(A, LeftJoin(B, C)) per SPARQL §18.2.2.6,
     * with group filters applied over the group's own join result. */
   final case class OptGroup(patterns: Seq[Bgp.Pattern],
-      filters: Seq[(BindExpr, String, BindExpr)] = Nil,
+      filters: Seq[Seq[Seq[FilterAtom]]] = Nil, // DNF clauses
       nested: Seq[OptGroup] = Nil,
       exists: Seq[(Boolean, Seq[Bgp.Pattern])] = Nil)
       // FILTER [NOT] EXISTS inside the group (r14): (anti-)semi-join
@@ -254,8 +245,8 @@ object SparqlParser {
       "SHA384", "SHA512",
       "LANG", "DATATYPE", "ISIRI", "ISURI", "ISBLANK", "ISLITERAL")
 
-  /** One atomic FILTER test — the unit both the conjunctive lists and
-    * `||` disjunction groups compose from. */
+  /** One atomic FILTER test: a FILTER clause is a disjunction of `&&`
+    * groups of these. */
   sealed trait FilterAtom
   final case class CmpLit(v: String, op: String, value: String,
       numeric: Boolean) extends FilterAtom
@@ -874,12 +865,14 @@ object SparqlParser {
   private def clockNow(): String =
     Option(clockTl.get()).getOrElse(java.time.Instant.now().toString)
 
+  /** (kind, lang, datatype) of a constructed term. */
+  private type CtorMeta = (String, Option[String], Option[String])
+
   /** Term metadata a constructor BIND stamps on its variable — the
     * constructed term's kind/lang/datatype where statically known.
     * CONSTRUCT templates consult this so a BIND(STRDT(…)) object
     * round-trips the N-Quads sink with its datatype. */
-  private def ctorMeta(
-      e: BindExpr): Option[(String, Option[String], Option[String])] =
+  private def ctorMeta(e: BindExpr): Option[CtorMeta] =
     e match {
       case BCall("STRLANG", Seq(_, BStr(tag))) =>
         Some((graft.model.TermKind.Literal, Some(tag), None))
@@ -908,8 +901,7 @@ object SparqlParser {
     * variables stay unresolved and fail loudly in [[bindCol]] — their
     * term metadata lives on the quad relation at the scan (TermTest). */
   private def resolveAccessors(e: BindExpr,
-      meta: Map[String, (String, Option[String], Option[String])])
-      : BindExpr = {
+      meta: Map[String, CtorMeta]): BindExpr = {
     import graft.model.TermKind
     def bool(b: Boolean) = BStr(if (b) "true" else "false")
     def rec(e: BindExpr): BindExpr = e match {
@@ -1247,17 +1239,8 @@ object SparqlParser {
       case (None, Some(b)) => b
       case (None, None) => true // two bare vars: lexical, like CmpVar
     }
-    val (a, b) =
-      if (isStr) (bindCol(l).cast("string"), bindCol(r).cast("string"))
-      else (bindCol(l).cast("double"), bindCol(r).cast("double"))
-    op match {
-      case "=" => a === b
-      case "!=" => a =!= b
-      case "<" => a < b
-      case ">" => a > b
-      case "<=" => a <= b
-      case ">=" => a >= b
-    }
+    val t = if (isStr) "string" else "double"
+    cmp(bindCol(l).cast(t), op, bindCol(r).cast(t))
   }
 
   private def kw(p: P): Boolean =
@@ -1394,6 +1377,190 @@ object SparqlParser {
     while (p.is("+") || p.is("-")) { val o = p.eat()
       l = HArith(o, l, hMul(p)) }
     l
+  }
+
+  /** One `FILTER( … )` clause, cursor on its `(`, in disjunctive normal
+    * form: a disjunction of `&&` groups of [[FilterAtom]]s (mixed
+    * `&&`/`||` supported, `&&` binding tighter). The outer group and
+    * OPTIONAL groups both parse their FILTERs here. */
+  private def filterClause(p: P): Seq[Seq[FilterAtom]] = {
+    p.expect("(")
+    val dnf = Seq.newBuilder[Seq[FilterAtom]]
+    var atoms = Seq.newBuilder[FilterAtom]
+    var more = true
+    while (more) {
+      if (p.is("REGEX") || p.is("STRSTARTS") || p.is("STRENDS") ||
+          p.is("CONTAINS")) {
+        // SPARQL 1.1 string tests: REGEX(?v, "pat" [, "flags"]),
+        // STRSTARTS(?v, "s"), CONTAINS(?v, "s")
+        val fn = p.eat().toUpperCase
+        p.expect("(")
+        val v = p.eat()
+        require(v.startsWith("?"),
+          s"$fn needs a variable, got '$v'")
+        p.expect(",")
+        val arg = p.eat()
+        require(arg.startsWith("\""),
+          s"$fn needs a string literal, got '$arg'")
+        var flags = ""
+        if (p.is(",")) {
+          p.eat()
+          val f = p.eat()
+          require(fn == "REGEX" && f.startsWith("\""),
+            "only REGEX takes a flags argument")
+          flags = unquote(f)
+        }
+        p.expect(")")
+        atoms += StrFn(fn, v.substring(1), unquote(arg), flags)
+      } else if (p.is("LANG") || p.is("LANGMATCHES") ||
+          p.is("DATATYPE")) {
+        // term accessors over the quad's term columns — compiled
+        // to pattern-scan predicates (see TermTest)
+        val fn = p.eat().toUpperCase
+        p.expect("(")
+        val v =
+          if (fn == "LANGMATCHES") {
+            // LANGMATCHES(LANG(?v), "range")
+            p.expect("LANG"); p.expect("(")
+            val x = p.eat(); p.expect(")"); x
+          } else p.eat()
+        require(v.startsWith("?"),
+          s"$fn needs a variable, got '$v'")
+        val (op, arg) =
+          if (fn == "LANGMATCHES") {
+            p.expect(",")
+            val a = p.eat()
+            require(a.startsWith("\""),
+              s"LANGMATCHES needs a string range, got '$a'")
+            p.expect(")")
+            ("=", unquote(a))
+          } else {
+            p.expect(")")
+            val o = p.eat()
+            require(Seq("=", "!=").contains(o),
+              s"$fn supports = and != comparisons, got '$o'")
+            val a = p.eat()
+            val raw =
+              if (a.startsWith("\"")) unquote(a)
+              else if (a.startsWith("<")) a.substring(1, a.length - 1)
+              else a
+            (o, raw)
+          }
+        atoms += TermTest(v.substring(1), fn, op, arg)
+      } else if (p.is("BOUND") || p.is("ISIRI") || p.is("ISURI") ||
+          p.is("ISLITERAL") || p.is("ISBLANK") || p.is("ISNUMERIC") ||
+          p.is("!")) {
+        // [!]BOUND(?v) — IS [NOT] NULL on the binding column —
+        // and the [!]is* term tests (TermTest)
+        val neg = p.is("!")
+        if (neg) p.eat()
+        val fn = p.eat().toUpperCase
+        require(Seq("BOUND", "ISIRI", "ISURI", "ISLITERAL",
+          "ISBLANK", "ISNUMERIC").contains(fn),
+          s"expected BOUND/isIRI/isLiteral/isBlank/isNumeric, " +
+            s"got '$fn'")
+        p.expect("(")
+        val v = p.eat()
+        require(v.startsWith("?"),
+          s"$fn needs a variable, got '$v'")
+        p.expect(")")
+        if (fn == "BOUND") atoms += BoundTest(v.substring(1), neg)
+        else atoms += TermTest(v.substring(1),
+          if (fn == "ISURI") "ISIRI" else fn,
+          if (neg) "!=" else "=", "")
+      } else if (p.is("SAMETERM")) {
+        // sameTerm(a, b) — §17.4.1.8. The engine's binding
+        // columns carry lexical forms, so this compiles to the
+        // expression comparison (numeric when a side is numeric);
+        // the lexical-form deviation ("01" vs "1" as integers)
+        // is the same one the = operator carries here
+        p.eat(); p.expect("(")
+        val l = bindExpr(p)
+        p.expect(",")
+        val r = bindExpr(p)
+        p.expect(")")
+        atoms += ExprCmp(l, "=", r)
+      } else if ((BindFns.exists(p.is) && !p.is("STR")) ||
+          p.is("(") || p.peek.headOption.exists(_.isDigit) ||
+          p.peek.startsWith("\"") || // literal-first: "a" < ?x
+          (p.peek.startsWith("-") && p.peek.length > 1) ||
+          (p.peek.startsWith("<") && p.peek2 == "(") ||
+          (p.peek.startsWith("?") &&
+            Seq("+", "-", "*", "/").contains(p.peek2))) {
+        // FILTER(expr op expr) — both sides through the BIND
+        // expression grammar (arithmetic, string builders,
+        // IRI-named extension functions). STR stays on the
+        // legacy lexical-compare path below. A call with no
+        // comparison is a bare boolean test (geof:sfWithin).
+        val l = bindExpr(p)
+        if (Seq("=", "!=", "<", ">", "<=", ">=").exists(p.is)) {
+          val op = p.eat()
+          atoms += ExprCmp(l, op, bindExpr(p))
+        } else atoms += ExprBool(l)
+      } else {
+        // STR(?v) casts the comparison to the lexical form — on
+        // this engine's string-valued binding columns that means
+        // forcing the string (not numeric) comparison path
+        val strWrapped = p.is("STR")
+        if (strWrapped) { p.eat(); p.expect("(") }
+        val v = p.eat()
+        require(v.startsWith("?"),
+          s"FILTER needs a variable, got '$v'")
+        if (strWrapped) p.expect(")")
+        if (p.is("IN") || p.is("NOT")) {
+          // ?v [NOT] IN ("lit", <iri>, …) — an inline allow/deny
+          // list, compiled to isin() on the binding column
+          val neg = p.is("NOT")
+          if (neg) { p.eat(); p.expect("IN") } else p.expect("IN")
+          p.expect("(")
+          val vs = Seq.newBuilder[String]
+          while (!p.is(")")) {
+            val t = p.eat()
+            if (t != ",") vs += (
+              if (t.startsWith("\"")) unquote(t)
+              else if (t.startsWith("<")) t.substring(1, t.length - 1)
+              else t)
+          }
+          p.expect(")")
+          atoms += InList(v.substring(1), neg, vs.result())
+        } else {
+          val op = p.eat()
+          require(Seq("=", "!=", "<", ">", "<=", ">=").contains(op),
+            s"unsupported FILTER operator '$op'")
+          if (p.peek.startsWith("?")) {
+            // var-vs-var comparison — lexical (string) ordering on
+            // the two binding columns, matching the oracle's
+            // VARCHAR comparison semantics
+            atoms += CmpVar(v.substring(1), op, p.eat().substring(1))
+          } else {
+            val lit = p.eat()
+            val numeric = !strWrapped &&
+              !lit.startsWith("\"") && !lit.startsWith("<")
+            val raw =
+              if (lit.startsWith("\"")) unquote(lit)
+              else if (lit.startsWith("<")) // IRI comparate
+                lit.substring(1, lit.length - 1)
+              else lit
+            atoms += CmpLit(v.substring(1), op, raw, numeric)
+          }
+        }
+      }
+      // SPARQL gives && higher precedence than ||: each || closes one
+      // && group of the disjunction
+      if (p.is("&&")) p.eat()
+      else if (p.is("||")) {
+        p.eat(); dnf += atoms.result(); atoms = Seq.newBuilder[FilterAtom]
+      } else more = false
+    }
+    p.expect(")")
+    dnf += atoms.result()
+    val clause = dnf.result()
+    require(clause.length == 1 ||
+      !clause.exists(_.exists(_.isInstanceOf[TermTest])),
+      "term-accessor tests (LANG/DATATYPE/is*) compile to " +
+        "pattern-scan predicates and cannot join a || group — " +
+        "split into separate FILTERs or use UNION")
+    clause
   }
 
   private def parseQuery(p: P): Query = {
@@ -1569,16 +1736,8 @@ object SparqlParser {
     val fns = Seq.newBuilder[PropFnCall]
     val opts = Seq.newBuilder[OptGroup]
     val mins = Seq.newBuilder[Seq[Bgp.Pattern]]
-    val fils = Seq.newBuilder[(String, String, String, Boolean)]
-    val fnFils = Seq.newBuilder[(String, String, String, String)]
-    val eFils = Seq.newBuilder[(BindExpr, String, BindExpr)]
-    val bFils = Seq.newBuilder[BindExpr]
-    val varFils = Seq.newBuilder[(String, String, String)]
-    val inFils = Seq.newBuilder[(String, Boolean, Seq[String])]
-    val bndFils = Seq.newBuilder[(String, Boolean)]
+    val fils = Seq.newBuilder[Seq[Seq[FilterAtom]]]
     val exFils = Seq.newBuilder[(Boolean, Seq[Bgp.Pattern])]
-    val orFils = Seq.newBuilder[Seq[Seq[FilterAtom]]]
-    val tFils = Seq.newBuilder[TermTest]
     val eBnds = Seq.newBuilder[(String, BindExpr)]
     val vals = Seq.newBuilder[(String, Seq[String])]
     val valsMulti =
@@ -1741,17 +1900,16 @@ object SparqlParser {
           else if (!bs.exists(needsFullGrammar)) unis += bs.map(asTriples)
           else uniQs += bs.map(asSubQuery)
         } else if (p.is("OPTIONAL")) {
-          // group body: triples, FILTERs SCOPED to the group (the
-          // expression-comparison subset — a scoped filter constrains
-          // what MATCHES, left-join-with-condition, never dropping
-          // unmatched solutions the way an outer FILTER would), and
-          // NESTED OPTIONAL groups (recursively; each nested group
-          // left-joins onto ITS enclosing group's solutions before the
-          // enclosing group left-joins outward — §18.2.2.6)
+          // group body: triples, FILTERs SCOPED to the group (a scoped
+          // filter constrains what MATCHES, left-join-with-condition,
+          // never dropping unmatched solutions the way an outer FILTER
+          // would), and NESTED OPTIONAL groups (recursively; each nested
+          // group left-joins onto ITS enclosing group's solutions before
+          // the enclosing group left-joins outward — §18.2.2.6)
           def optGroup(): OptGroup = {
             p.expect("{")
             val gp = Seq.newBuilder[Bgp.Pattern]
-            val gf = Seq.newBuilder[(BindExpr, String, BindExpr)]
+            val gf = Seq.newBuilder[Seq[Seq[FilterAtom]]]
             val gn = Seq.newBuilder[OptGroup]
             val ge = Seq.newBuilder[(Boolean, Seq[Bgp.Pattern])]
             while (!p.is("}")) {
@@ -1777,14 +1935,14 @@ object SparqlParser {
                 ge += ((eNeg, triples(bp, g)))
                 bp.expect("}")
               } else if (p.is("FILTER")) {
-                p.eat(); p.expect("(")
-                val l = bindExpr(p)
-                val op = p.eat()
-                require(Seq("=", "!=", "<", ">", "<=", ">=").contains(op),
-                  s"OPTIONAL-scoped FILTER supports comparisons, got '$op'")
-                val r = bindExpr(p)
-                p.expect(")")
-                gf += ((l, op, r))
+                p.eat()
+                val clause = filterClause(p)
+                require(!clause.flatten.exists(_.isInstanceOf[TermTest]),
+                  "LANG/DATATYPE/is* tests run as pattern-scan " +
+                    "predicates of the required group and cannot be " +
+                    "scoped inside OPTIONAL — move the FILTER out of the " +
+                    "OPTIONAL group")
+                gf += clause
               } else gp ++= triples(p, g)
             }
             p.expect("}")
@@ -1860,205 +2018,8 @@ object SparqlParser {
             bp.expect("}")
           }
         } else if (p.is("FILTER")) {
-          p.eat(); p.expect("(")
-          val atoms = Seq.newBuilder[FilterAtom]
-          var connector = "" // "", "&&" or "||"
-          var more = true
-          while (more) {
-            if (p.is("REGEX") || p.is("STRSTARTS") || p.is("STRENDS") ||
-                p.is("CONTAINS")) {
-              // SPARQL 1.1 string tests: REGEX(?v, "pat" [, "flags"]),
-              // STRSTARTS(?v, "s"), CONTAINS(?v, "s")
-              val fn = p.eat().toUpperCase
-              p.expect("(")
-              val v = p.eat()
-              require(v.startsWith("?"),
-                s"$fn needs a variable, got '$v'")
-              p.expect(",")
-              val arg = p.eat()
-              require(arg.startsWith("\""),
-                s"$fn needs a string literal, got '$arg'")
-              var flags = ""
-              if (p.is(",")) {
-                p.eat()
-                val f = p.eat()
-                require(fn == "REGEX" && f.startsWith("\""),
-                  "only REGEX takes a flags argument")
-                flags = unquote(f)
-              }
-              p.expect(")")
-              atoms += StrFn(fn, v.substring(1), unquote(arg), flags)
-            } else if (p.is("LANG") || p.is("LANGMATCHES") ||
-                p.is("DATATYPE")) {
-              // term accessors over the quad's term columns — compiled
-              // to pattern-scan predicates (see TermTest)
-              val fn = p.eat().toUpperCase
-              p.expect("(")
-              val v =
-                if (fn == "LANGMATCHES") {
-                  // LANGMATCHES(LANG(?v), "range")
-                  p.expect("LANG"); p.expect("(")
-                  val x = p.eat(); p.expect(")"); x
-                } else p.eat()
-              require(v.startsWith("?"),
-                s"$fn needs a variable, got '$v'")
-              val (op, arg) =
-                if (fn == "LANGMATCHES") {
-                  p.expect(",")
-                  val a = p.eat()
-                  require(a.startsWith("\""),
-                    s"LANGMATCHES needs a string range, got '$a'")
-                  p.expect(")")
-                  ("=", unquote(a))
-                } else {
-                  p.expect(")")
-                  val o = p.eat()
-                  require(Seq("=", "!=").contains(o),
-                    s"$fn supports = and != comparisons, got '$o'")
-                  val a = p.eat()
-                  val raw =
-                    if (a.startsWith("\"")) unquote(a)
-                    else if (a.startsWith("<")) a.substring(1, a.length - 1)
-                    else a
-                  (o, raw)
-                }
-              atoms += TermTest(v.substring(1), fn, op, arg)
-            } else if (p.is("BOUND") || p.is("ISIRI") || p.is("ISURI") ||
-                p.is("ISLITERAL") || p.is("ISBLANK") || p.is("ISNUMERIC") ||
-                p.is("!")) {
-              // [!]BOUND(?v) — IS [NOT] NULL on the binding column —
-              // and the [!]is* term tests (TermTest)
-              val neg = p.is("!")
-              if (neg) p.eat()
-              val fn = p.eat().toUpperCase
-              require(Seq("BOUND", "ISIRI", "ISURI", "ISLITERAL",
-                "ISBLANK", "ISNUMERIC").contains(fn),
-                s"expected BOUND/isIRI/isLiteral/isBlank/isNumeric, " +
-                  s"got '$fn'")
-              p.expect("(")
-              val v = p.eat()
-              require(v.startsWith("?"),
-                s"$fn needs a variable, got '$v'")
-              p.expect(")")
-              if (fn == "BOUND") atoms += BoundTest(v.substring(1), neg)
-              else atoms += TermTest(v.substring(1),
-                if (fn == "ISURI") "ISIRI" else fn,
-                if (neg) "!=" else "=", "")
-            } else if (p.is("SAMETERM")) {
-              // sameTerm(a, b) — §17.4.1.8. The engine's binding
-              // columns carry lexical forms, so this compiles to the
-              // expression comparison (numeric when a side is numeric);
-              // the lexical-form deviation ("01" vs "1" as integers)
-              // is the same one the = operator carries here
-              p.eat(); p.expect("(")
-              val l = bindExpr(p)
-              p.expect(",")
-              val r = bindExpr(p)
-              p.expect(")")
-              atoms += ExprCmp(l, "=", r)
-            } else if ((BindFns.exists(p.is) && !p.is("STR")) ||
-                p.is("(") || p.peek.headOption.exists(_.isDigit) ||
-                p.peek.startsWith("\"") || // literal-first: "a" < ?x
-                (p.peek.startsWith("-") && p.peek.length > 1) ||
-                (p.peek.startsWith("<") && p.peek2 == "(") ||
-                (p.peek.startsWith("?") &&
-                  Seq("+", "-", "*", "/").contains(p.peek2))) {
-              // FILTER(expr op expr) — both sides through the BIND
-              // expression grammar (arithmetic, string builders,
-              // IRI-named extension functions). STR stays on the
-              // legacy lexical-compare path below. A call with no
-              // comparison is a bare boolean test (geof:sfWithin).
-              val l = bindExpr(p)
-              if (Seq("=", "!=", "<", ">", "<=", ">=").exists(p.is)) {
-                val op = p.eat()
-                atoms += ExprCmp(l, op, bindExpr(p))
-              } else atoms += ExprBool(l)
-            } else {
-              // STR(?v) casts the comparison to the lexical form — on
-              // this engine's string-valued binding columns that means
-              // forcing the string (not numeric) comparison path
-              val strWrapped = p.is("STR")
-              if (strWrapped) { p.eat(); p.expect("(") }
-              val v = p.eat()
-              require(v.startsWith("?"),
-                s"FILTER needs a variable, got '$v'")
-              if (strWrapped) p.expect(")")
-              if (p.is("IN") || p.is("NOT")) {
-                // ?v [NOT] IN ("lit", <iri>, …) — an inline allow/deny
-                // list, compiled to isin() on the binding column
-                val neg = p.is("NOT")
-                if (neg) { p.eat(); p.expect("IN") } else p.expect("IN")
-                p.expect("(")
-                val vs = Seq.newBuilder[String]
-                while (!p.is(")")) {
-                  val t = p.eat()
-                  if (t != ",") vs += (
-                    if (t.startsWith("\"")) unquote(t)
-                    else if (t.startsWith("<")) t.substring(1, t.length - 1)
-                    else t)
-                }
-                p.expect(")")
-                atoms += InList(v.substring(1), neg, vs.result())
-              } else {
-                val op = p.eat()
-                require(Seq("=", "!=", "<", ">", "<=", ">=").contains(op),
-                  s"unsupported FILTER operator '$op'")
-                if (p.peek.startsWith("?")) {
-                  // var-vs-var comparison — lexical (string) ordering on
-                  // the two binding columns, matching the oracle's
-                  // VARCHAR comparison semantics
-                  atoms += CmpVar(v.substring(1), op, p.eat().substring(1))
-                } else {
-                  val lit = p.eat()
-                  val numeric = !strWrapped &&
-                    !lit.startsWith("\"") && !lit.startsWith("<")
-                  val raw =
-                    if (lit.startsWith("\"")) unquote(lit)
-                    else if (lit.startsWith("<")) // IRI comparate
-                      lit.substring(1, lit.length - 1)
-                    else lit
-                  atoms += CmpLit(v.substring(1), op, raw, numeric)
-                }
-              }
-            }
-            if (p.is("&&") || p.is("||")) {
-              // SPARQL gives && higher precedence than || — record the
-              // connector sequence and split into DNF below (mixed
-              // trees supported, r9; was single-connector only)
-              connector += (if (p.eat() == "&&") "&" else "|")
-            } else more = false
-          }
-          p.expect(")")
-          val group = atoms.result()
-          // split at '||' boundaries: a disjunction of && groups
-          val dnfB = Seq.newBuilder[Seq[FilterAtom]]
-          var cur = Seq.newBuilder[FilterAtom]
-          group.zipWithIndex.foreach { case (a, i) =>
-            cur += a
-            if (i < connector.length && connector.charAt(i) == '|') {
-              dnfB += cur.result(); cur = Seq.newBuilder[FilterAtom]
-            }
-          }
-          dnfB += cur.result()
-          val dnf = dnfB.result()
-          if (dnf.length == 1) dnf.head.foreach {
-            // pure conjunction: each atom keeps its optimized path
-            // (scan-level term filters, pushable per-kind predicates)
-            case CmpLit(v, op, value, num) => fils += ((v, op, value, num))
-            case CmpVar(a, op, b) => varFils += ((a, op, b))
-            case InList(v, n, vs) => inFils += ((v, n, vs))
-            case BoundTest(v, n) => bndFils += ((v, n))
-            case StrFn(f, v, a, fl) => fnFils += ((f, v, a, fl))
-            case ExprCmp(l, o, r) => eFils += ((l, o, r))
-            case ExprBool(e) => bFils += e
-            case t: TermTest => tFils += t
-          } else {
-            require(!dnf.exists(_.exists(_.isInstanceOf[TermTest])),
-              "term-accessor tests (LANG/DATATYPE/is*) compile to " +
-                "pattern-scan predicates and cannot join a || group — " +
-                "split into separate FILTERs or use UNION")
-            orFils += dnf
-          }
+          p.eat()
+          fils += filterClause(p)
         } else tripleish(p, g, pats, pths, fns)
       }
     }
@@ -2069,11 +2030,10 @@ object SparqlParser {
       p.eat(); p.expect("BY")
       while (p.peek.startsWith("?")) grp += p.eat().substring(1)
     }
-    val hav = Seq.newBuilder[(Option[String], String, String, Double)]
-    val havC = Seq.newBuilder[(HExpr, String, HExpr)]
+    val hav = Seq.newBuilder[(HExpr, String, HExpr)]
     if (p.is("HAVING")) {
-      // HAVING ((COUNT|SUM|…)(?v|*) op n | ?alias op n [&& …]) —
-      // group filters over aggregate values, numeric comparates
+      // HAVING (expr op expr [&& …]) — group filters over aggregate
+      // arithmetic, compared numerically
       p.eat(); p.expect("(")
       var more = true
       while (more) {
@@ -2081,13 +2041,7 @@ object SparqlParser {
         val op = p.eat()
         require(Seq("=", "!=", "<", ">", "<=", ">=").contains(op),
           s"unsupported HAVING operator '$op'")
-        val rhs = hAdd(p)
-        (lhs, rhs) match {
-          // the historical simple shapes keep their dedicated path
-          case (HAgg(f, v, false), HNum(n)) => hav += ((Some(f), v, op, n))
-          case (HVar(v), HNum(n)) => hav += ((None, v, op, n))
-          case _ => havC += ((lhs, op, rhs))
-        }
+        hav += ((lhs, op, hAdd(p)))
         if (p.is("&&")) p.eat() else more = false
       }
       p.expect(")")
@@ -2150,21 +2104,14 @@ object SparqlParser {
       minusQueries = minusQs.result(), existsQueries = exQs.result(),
       orderExprBinds = ordExprs.result(),
       selectOrder = order.result(),
-      offset = off, having = hav.result(),
-      havingComputed = havC.result(), aggExprs = aggExprsB.result(),
-      filterFns = fnFils.result(),
-      varFilters = varFils.result(), inFilters = inFils.result(),
-      boundFilters = bndFils.result(), existsFilters = exFils.result(),
-      orFilters = orFils.result(),
+      offset = off, having = hav.result(), aggExprs = aggExprsB.result(),
+      existsFilters = exFils.result(),
       // WHERE-clause BINDs first: a SELECT expression may reference them
       exprBinds = eBnds.result() ++ selExprs.result(),
-      exprFilters = eFils.result(),
-      boolFilters = bFils.result(),
       fromGraphs = fromG.result(),
       fromNamed = fromN.result(),
       serviceGroups = svcs.result(),
       serviceTexts = svcTexts.result(),
-      termFilters = tFils.result(),
       verb = if (constructTpl.nonEmpty) "construct"
         else if (isAsk) "ask"
         else if (descVar.isDefined) "describe" else "select",
@@ -2176,8 +2123,8 @@ object SparqlParser {
     require((parsed.aggregates.isEmpty && parsed.aggExprs.isEmpty) ||
       parsed.projection.toSet.subsetOf(parsed.groupBy.toSet),
       "with aggregates, every projected variable must be GROUPed BY")
-    require((parsed.having.isEmpty && parsed.havingComputed.isEmpty) ||
-      parsed.aggregates.nonEmpty || parsed.aggExprs.nonEmpty,
+    require(parsed.having.isEmpty || parsed.aggregates.nonEmpty ||
+      parsed.aggExprs.nonEmpty,
       "HAVING requires an aggregating SELECT")
     parsed
   }
@@ -2364,6 +2311,11 @@ object SparqlParser {
     "negativeInteger", "unsignedLong", "unsignedInt", "unsignedShort",
     "unsignedByte").map("http://www.w3.org/2001/XMLSchema#" + _)
 
+  /** The atoms of the FILTER clauses without `||`: the only atoms that
+    * may run as scan predicates or connect pattern groups. */
+  private def conjunctiveAtoms(q: Query): Seq[FilterAtom] =
+    q.filters.collect { case Seq(grp) => grp }.flatten
+
   /** Compile each [[TermTest]] into a quad-column predicate on every
     * pattern binding its variable — object position always; subject
     * position for the kind tests (subjects are never literals, so
@@ -2374,7 +2326,8 @@ object SparqlParser {
     * non-literal is a type error → the row filters out (the
     * `kind = literal` conjunct). */
   private def attachTermFilters(q: Query): Seq[Bgp.Pattern] = {
-    if (q.termFilters.isEmpty) return q.patterns
+    val termTests = conjunctiveAtoms(q).collect { case t: TermTest => t }
+    if (termTests.isEmpty) return q.patterns
     def pred(tf: TermTest, kindCol: Column): Column = tf.fn match {
       case "ISIRI" =>
         if (tf.op == "=") kindCol === graft.model.TermKind.Iri
@@ -2419,7 +2372,7 @@ object SparqlParser {
         throw new IllegalArgumentException(s"unknown term test '$other'")
     }
     val kindTests = Set("ISIRI", "ISLITERAL", "ISBLANK")
-    q.termFilters.foldLeft(q.patterns) { (pats, tf) =>
+    termTests.foldLeft(q.patterns) { (pats, tf) =>
       var hit = false
       def and(pt: Bgp.Pattern, c: Column): Bgp.Pattern =
         pt.copy(scanFilter = Some(pt.scanFilter.map(_ && c).getOrElse(c)))
@@ -2492,6 +2445,47 @@ object SparqlParser {
       if (set.isEmpty) quads.filter(lit(false))
       else quads.filter(col("graph").isin(set: _*))
     }
+
+  /** Compile one FILTER atom onto the binding columns of `rel`.
+    * `ctorEnv` maps constructor-bound variables to their term metadata,
+    * so accessors over them fold to constants ([[resolveAccessors]]). */
+  private def atomCol(a: FilterAtom, rel: DataFrame,
+      ctorEnv: Map[String, CtorMeta]): Column = a match {
+    case CmpLit(v, op, value, numeric) =>
+      if (numeric) cmp(col(v).cast("double"), op, lit(value.toDouble))
+      else cmp(col(v), op, lit(value))
+    case CmpVar(v1, op, v2) => cmp(col(v1), op, col(v2))
+    case InList(v, neg, vs) =>
+      val in = col(v).isin(vs: _*)
+      if (neg) !in else in
+    case BoundTest(v, neg) =>
+      require(rel.columns.contains(v),
+        s"BOUND(?$v): variable is not bound by any pattern")
+      if (neg) col(v).isNull else col(v).isNotNull
+    case StrFn(fn, v, arg, flags) => fn match {
+      // SPARQL REGEX is a partial match (like Java find/RLIKE); flags
+      // ride as an inline group, the "i" case-insensitivity being the
+      // one users actually write
+      case "REGEX" =>
+        col(v).rlike(if (flags.isEmpty) arg else s"(?$flags)$arg")
+      case "STRSTARTS" => col(v).startsWith(arg)
+      case "STRENDS" => col(v).endsWith(arg)
+      case "CONTAINS" => col(v).contains(arg)
+    }
+    case ExprCmp(l, op, r) => exprCmpCol(resolveAccessors(l, ctorEnv), op,
+      resolveAccessors(r, ctorEnv))
+    case ExprBool(e) => bindBool(resolveAccessors(e, ctorEnv))
+    // term accessors read quad-relation columns (lang/datatype/kind)
+    // that exist only at the scan: attachTermFilters applied them there,
+    // and the parser keeps them out of || groups and OPTIONAL groups
+    case _: TermTest => lit(true)
+  }
+
+  /** Filter `rel` by one FILTER clause: its `&&` groups disjoined. */
+  private def filterBy(rel: DataFrame, clause: Seq[Seq[FilterAtom]],
+      ctorEnv: Map[String, CtorMeta]): DataFrame =
+    rel.filter(clause
+      .map(_.map(atomCol(_, rel, ctorEnv)).reduce(_ && _)).reduce(_ || _))
 
   private def executeQuery(quads: DataFrame, q0: Query,
       functions: Map[String, PropertyFunction],
@@ -2585,22 +2579,27 @@ object SparqlParser {
       // cross-product filtered by the relate predicate, which
       // [[graft.plans.SpatialRelateJoinRewrite]] turns into a
       // grid-cover equi-join.
-      val filterEdges = q.boolFilters.map(bindExprVars) ++
+      // only the atoms of pure && clauses are edges: a || group can
+      // hold without its comparison, so it never connects
+      val conj = conjunctiveAtoms(q)
+      val filterEdges = conj.collect {
+        case ExprBool(e) => bindExprVars(e)
         // only EQUALITY-shaped comparison FILTERs fully connect
         // (ADVICE r13): `FILTER(?a = ?b)` is an equi-θ-join Catalyst
         // hash-joins; an INEQUALITY (`?a != ?b`, `?a < ?b`) selects on
         // the product but still EVALUATES as a near-full cartesian —
         // those form the soft tier below (warn, don't silence)
-        q.varFilters.collect { case (a, "=", b) => Set(a, b) } ++
-        q.exprFilters.collect { case (l, "=", r) =>
-          bindExprVars(l) ++ bindExprVars(r) }
+        case CmpVar(a, "=", b) => Set(a, b)
+        case ExprCmp(l, "=", r) => bindExprVars(l) ++ bindExprVars(r)
+      }
       // the soft tier: non-equality comparisons bridging groups keep
       // the query runnable (a deliberate band/range θ-join is a real
       // query shape) but emit a loud warning — the product is paid
-      val weakEdges = q.varFilters.collect {
-        case (a, op, b) if op != "=" => Set(a, b) } ++
-        q.exprFilters.collect { case (l, op, r) if op != "=" =>
-          bindExprVars(l) ++ bindExprVars(r) }
+      val weakEdges = conj.collect {
+        case CmpVar(a, op, b) if op != "=" => Set(a, b)
+        case ExprCmp(l, op, r) if op != "=" =>
+          bindExprVars(l) ++ bindExprVars(r)
+      }
       // BIND(expr AS ?v) connects ?v to the group expr's variables
       // live in (r12): a FILTER over a BIND-computed variable (e.g. a
       // geof: construct fed into a relation test) is connected, not a
@@ -2708,9 +2707,7 @@ object SparqlParser {
               "cross join)")
           opt = opt.join(sub, sh, "left")
         }
-        og.filters.foreach { case (l, op, r) =>
-          opt = opt.filter(exprCmpCol(l, op, r))
-        }
+        og.filters.foreach(c => opt = filterBy(opt, c, Map.empty))
         og.exists.foreach { case (neg, grp) =>
           val ex = Bgp.select(quads, grp)
           val sh = opt.columns.toSet.intersect(ex.columns.toSet).toSeq
@@ -2828,8 +2825,7 @@ object SparqlParser {
     // expression BINDs in authoring order; each constructor BIND feeds
     // the ctor-metadata environment so a LATER accessor call over its
     // variable (DATATYPE/LANG/is*) folds to the known constant (r14)
-    var ctorEnv =
-      Map.empty[String, (String, Option[String], Option[String])]
+    var ctorEnv = Map.empty[String, CtorMeta]
     q.exprBinds.foreach { case (v, e) =>
       val re = resolveAccessors(e, ctorEnv)
       sol = sol.withColumn(v, bindCol(re))
@@ -2851,23 +2847,6 @@ object SparqlParser {
         }.reduceOption(_ && _).getOrElse(lit(true))
       }.reduce(_ || _)
       sol = sol.filter(pred)
-    }
-    q.filters.foreach { case (v, op, litv, numeric) =>
-      val c: Column = if (numeric) col(v).cast("double") else col(v)
-      val l: Column = if (numeric) lit(litv.toDouble) else lit(litv)
-      sol = sol.filter(cmp(c, op, l))
-    }
-    q.varFilters.foreach { case (v1, op, v2) =>
-      sol = sol.filter(cmp(col(v1), op, col(v2)))
-    }
-    q.inFilters.foreach { case (v, neg, vs) =>
-      val in = col(v).isin(vs: _*)
-      sol = sol.filter(if (neg) !in else in)
-    }
-    q.boundFilters.foreach { case (v, neg) =>
-      require(sol.columns.contains(v),
-        s"BOUND(?$v): variable is not bound by any pattern")
-      sol = sol.filter(if (neg) col(v).isNull else col(v).isNotNull)
     }
     // FILTER [NOT] EXISTS sharing NO variable with the outer solutions
     // is a CONSTANT test per §18.5 (the substituted pattern is the
@@ -2911,58 +2890,10 @@ object SparqlParser {
         sol = sol.join(neg.select(shared.map(col): _*).distinct(), shared,
           "left_anti")
     }
-    // ||-joined groups: compile each atom to its Column and disjoin —
-    // one row filter per FILTER clause, same as the conjunctive path
-    def atomCol(a: FilterAtom): Column = a match {
-      case CmpLit(v, op, value, numeric) =>
-        val c: Column = if (numeric) col(v).cast("double") else col(v)
-        val l: Column = if (numeric) lit(value.toDouble) else lit(value)
-        cmp(c, op, l)
-      case CmpVar(v1, op, v2) => cmp(col(v1), op, col(v2))
-      case InList(v, neg, vs) =>
-        val in = col(v).isin(vs: _*)
-        if (neg) !in else in
-      case BoundTest(v, neg) =>
-        if (neg) col(v).isNull else col(v).isNotNull
-      case StrFn(fn, v, arg, flags) => fn match {
-        case "REGEX" =>
-          col(v).rlike(if (flags.isEmpty) arg else s"(?$flags)$arg")
-        case "STRSTARTS" => col(v).startsWith(arg)
-        case "STRENDS" => col(v).endsWith(arg)
-        case "CONTAINS" => col(v).contains(arg)
-      }
-      case ExprCmp(l, op, r) => exprCmpCol(l, op, r)
-      case ExprBool(e) => bindBool(e)
-      // term accessors read quad-relation columns (lang/datatype/kind)
-      // that only exist at the SCAN, not on the solution relation — a
-      // disjunction would need them post-join, so reject loudly rather
-      // than bind the wrong thing
-      case TermTest(v, fn, _, _) => throw new IllegalArgumentException(
-        s"$fn(?$v) is not supported inside a || disjunction: term " +
-          "accessors compile to per-pattern scan predicates")
-    }
-    q.orFilters.foreach { dnf =>
-      sol = sol.filter(
-        dnf.map(_.map(atomCol).reduce(_ && _)).reduce(_ || _))
-    }
-    q.exprFilters.foreach { case (l, op, r) =>
-      sol = sol.filter(exprCmpCol(
-        resolveAccessors(l, ctorEnv), op, resolveAccessors(r, ctorEnv)))
-    }
-    q.boolFilters.foreach(e =>
-      sol = sol.filter(bindBool(resolveAccessors(e, ctorEnv))))
-    q.filterFns.foreach { case (fn, v, arg, flags) =>
-      sol = sol.filter(fn match {
-        // SPARQL REGEX is a partial match (like Java find/RLIKE);
-        // flags ride as an inline group, the "i" case-insensitivity
-        // being the one users actually write
-        case "REGEX" =>
-          col(v).rlike(if (flags.isEmpty) arg else s"(?$flags)$arg")
-        case "STRSTARTS" => col(v).startsWith(arg)
-        case "STRENDS" => col(v).endsWith(arg)
-        case "CONTAINS" => col(v).contains(arg)
-      })
-    }
+    // every FILTER clause applies here, after the EXISTS and MINUS
+    // joins: a clause over two pattern groups stays a Filter over their
+    // cross join, the shape SpatialRelateJoinRewrite turns into a join
+    q.filters.foreach(c => sol = filterBy(sol, c, ctorEnv))
     if (q.verb == "construct") {
       // solution modifiers bind the solution SEQUENCE per spec — only
       // observable through LIMIT/OFFSET (the built graph is a set), so
@@ -3022,43 +2953,26 @@ object SparqlParser {
           else array_join(sort_array(collect_list(col(a.variable))), a.sep)
         case "SAMPLE" => min(col(a.variable))
       }).as(a.alias)
-      // HAVING entries that name an aggregate directly compute as
-      // hidden columns in the same pass (one aggregation, no re-shuffle)
-      val havingAggs = q.having.zipWithIndex.collect {
-        case ((Some(f), v, _, _), i) => Agg(f, v, s"_having_$i")
-      }
-      // computed-HAVING + SELECT-expression leaves (r11): every
-      // distinct set-function leaf joins the SAME aggregation pass
+      // HAVING and SELECT-expression leaves (r11): every distinct
+      // set-function leaf computes as a hidden column in the SAME
+      // aggregation pass (one shuffle, no re-aggregation)
       def hLeaves(e: HExpr): Seq[HAgg] = e match {
         case a: HAgg => Seq(a)
         case HArith(_, l, r) => hLeaves(l) ++ hLeaves(r)
         case _ => Nil
       }
-      val hcLeaves = (q.havingComputed
+      val hLeafAggs = (q.having
         .flatMap { case (l, _, r) => hLeaves(l) ++ hLeaves(r) } ++
         q.aggExprs.flatMap { case (_, e) => hLeaves(e) }).distinct
-      val hcAggs = hcLeaves.zipWithIndex.map { case (a, i) =>
-        a -> Agg(a.func, a.variable, s"_havc_$i", distinct = a.distinct)
-      }
-      val exprs = (q.aggregates ++ havingAggs ++ hcAggs.map(_._2)).map(one)
+        .zipWithIndex.map { case (a, i) =>
+          a -> Agg(a.func, a.variable, s"_havc_$i", distinct = a.distinct)
+        }
+      val exprs = (q.aggregates ++ hLeafAggs.map(_._2)).map(one)
       sol = sol.groupBy(q.groupBy.map(col): _*)
         .agg(exprs.head, exprs.tail: _*)
-      q.having.zipWithIndex.foreach { case ((fn, v, op, n), i) =>
-        val c = (if (fn.isDefined) col(s"_having_$i") else col(v))
-          .cast("double")
-        val l = lit(n)
-        sol = sol.filter(op match {
-          case "=" => c === l
-          case "!=" => c =!= l
-          case "<" => c < l
-          case ">" => c > l
-          case "<=" => c <= l
-          case ">=" => c >= l
-        })
-      }
-      val hcCols = hcAggs.map { case (a, agg) => a -> agg.alias }.toMap
+      val hLeafCols = hLeafAggs.map { case (a, agg) => a -> agg.alias }.toMap
       def hCol(e: HExpr): Column = e match {
-        case a: HAgg => col(hcCols(a)).cast("double")
+        case a: HAgg => col(hLeafCols(a)).cast("double")
         case HVar(v) => col(v).cast("double")
         case HNum(d) => lit(d)
         case HArith(op, l, r) =>
@@ -3070,16 +2984,8 @@ object SparqlParser {
             case "/" => a / b
           }
       }
-      q.havingComputed.foreach { case (l, op, r) =>
-        val (a, b) = (hCol(l), hCol(r))
-        sol = sol.filter(op match {
-          case "=" => a === b
-          case "!=" => a =!= b
-          case "<" => a < b
-          case ">" => a > b
-          case "<=" => a <= b
-          case ">=" => a >= b
-        })
+      q.having.foreach { case (l, op, r) =>
+        sol = sol.filter(cmp(hCol(l), op, hCol(r)))
       }
       // §11.1 SELECT projection expressions: materialize each alias
       // from the hidden leaf columns (post-HAVING — HAVING sees the
@@ -3087,9 +2993,7 @@ object SparqlParser {
       q.aggExprs.foreach { case (alias, e) =>
         sol = sol.withColumn(alias, hCol(e))
       }
-      if (havingAggs.nonEmpty || hcAggs.nonEmpty)
-        sol = sol.drop((havingAggs.map(_.alias) ++
-          hcAggs.map(_._2.alias)): _*)
+      if (hLeafAggs.nonEmpty) sol = sol.drop(hLeafAggs.map(_._2.alias): _*)
       // emit columns in the written SELECT-list order (projected
       // variables and aggregate aliases interleaved as authored —
       // ADVICE r7; grouped-but-unprojected variables drop here)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
 import graft.plans.GraftExtensions
 
 /** GraftExtensions: injected SQL functions + the join rewrite rules,
@@ -78,8 +77,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
       ("graft_nfc(t)", "graft_nfc(t, t)", "graft_nfc(x)"),
       ("graft_jaro_winkler(s, t)", "graft_jaro_winkler(s)",
         "graft_jaro_winkler(s, x)"),
-      ("graft_haversine_km(x, y, y, x)", "graft_haversine_km(x, y, y)",
-        "graft_haversine_km(x, y, y, f)"),
       ("graft_dot(f, d)", "graft_dot(f)", "graft_dot(f, s)"),
       ("graft_nq_quad(line)", "graft_nq_quad(line, line)",
         "graft_nq_quad(x)"),
@@ -100,24 +97,10 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
     assert(full.forall(_ != null), full)
     assert(nulls.forall(_ == null), "null in must give null out: " + nulls)
     // graft_dot of unequal lengths and the bbox of unparseable WKT are
-    // null; the quad keeps the empty datatype
-    assert(edge(5) == null && edge(7) == null, edge)
-    assert(edge(6).asInstanceOf[org.apache.spark.sql.Row].getString(5) == "")
-  }
-
-  test("graft_haversine_km SQL function matches the Column composition") {
-    import spark.implicits._
-    val rows = Seq((0.0, 0.0, 1.0, 1.0), (151.2, -33.9, 153.0, -27.5))
-      .toDF("lon1", "lat1", "lon2", "lat2")
-    rows.createOrReplaceTempView("pts")
-    val viaSql = spark
-      .sql("SELECT graft_haversine_km(lon1, lat1, lon2, lat2) AS km FROM pts")
-      .collect().map(_.getDouble(0))
-    val viaCols = rows.select(GraftFunctions.haversineKm(
-        col("lon1"), col("lat1"), col("lon2"), col("lat2")).as("km"))
-      .collect().map(_.getDouble(0))
-    assert(viaSql.toSeq == viaCols.toSeq)
-    assert(math.abs(viaSql(0) - 157.25) < 0.1)
+    // null; the line's one quad keeps the empty datatype
+    assert(edge(4) == null && edge(6) == null, edge)
+    assert(edge(5).asInstanceOf[collection.Seq[org.apache.spark.sql.Row]].head
+      .getString(5) == "")
   }
 
   test("graft_dot matches the HOF zip_with/aggregate chain bit-for-bit") {

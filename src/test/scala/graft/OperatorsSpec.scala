@@ -2386,6 +2386,74 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       == Set(("a", Some("5"))))
   }
 
+  test("SparqlParser: OPTIONAL-scoped FILTER takes the full FILTER clause") {
+    import spark.implicits._
+    import graft.rdf.SparqlParser
+    val quads = Seq(
+      ("a", "urn:type", "urn:P"), ("b", "urn:type", "urn:P"),
+      ("c", "urn:type", "urn:P"), ("d", "urn:type", "urn:P"),
+      ("a", "urn:name", "Alice"), ("b", "urn:name", "Bob"),
+      ("c", "urn:name", "Carol"))
+      .toDF("subject", "predicate", "objectValue")
+    def run(filter: String) = SparqlParser.execute(quads,
+      s"""SELECT ?s ?n WHERE { ?s <urn:type> <urn:P> .
+        OPTIONAL { ?s <urn:name> ?n FILTER($filter) } }""").collect()
+      .map(r => (r.getString(0), Option(r.getString(1)))).toSet
+    // unmatched rows keep their NULL binding under every clause shape
+    assert(run("""REGEX(?n, "^A")""") == Set(("a", Some("Alice")),
+      ("b", None), ("c", None), ("d", None)))
+    assert(run("""?n = "Alice" || ?n = "Bob"""") == Set(
+      ("a", Some("Alice")), ("b", Some("Bob")), ("c", None), ("d", None)))
+    assert(run("BOUND(?n)") == Set(("a", Some("Alice")),
+      ("b", Some("Bob")), ("c", Some("Carol")), ("d", None)))
+    // a term test can only run as a scan predicate of the required group
+    val e = intercept[SparqlParser.ParseError](run("""LANG(?n) = "en""""))
+    assert(e.getMessage.contains("cannot be scoped inside OPTIONAL"))
+  }
+
+  test("SparqlParser: each FILTER atom gives one answer alone, under && " +
+      "and under ||") {
+    import spark.implicits._
+    import graft.rdf.SparqlParser
+    val geofW = "http://www.opengis.net/def/function/geosparql/sfWithin"
+    val quads = Seq(
+      ("a", "urn:name", "Ann"), ("b", "urn:name", "Bob"),
+      ("c", "urn:name", "Cy"),
+      ("a", "urn:val", "5"), ("b", "urn:val", "1"), ("c", "urn:val", "7"),
+      ("a", "urn:alt", "5"), ("b", "urn:alt", "2"), ("c", "urn:alt", "9"),
+      ("a", "urn:wkt", "POINT(1 1)"), ("b", "urn:wkt", "POINT(5 5)"),
+      ("c", "urn:wkt", "POINT(1 2)"))
+      .toDF("subject", "predicate", "objectValue")
+    def run(filter: String): Either[(Class[_], String), Set[String]] =
+      try Right(SparqlParser.execute(quads,
+        s"""SELECT ?s WHERE { ?s <urn:name> ?n . ?s <urn:val> ?v .
+          ?s <urn:alt> ?w . ?s <urn:wkt> ?g .
+          BIND(STRLANG(?n, "en") AS ?l) FILTER($filter) }""")
+        .collect().map(_.getString(0)).toSet)
+      catch { case e: Exception => Left((e.getClass, e.getMessage)) }
+    val bound = "requirement failed: BOUND(?nope): variable is not " +
+      "bound by any pattern"
+    val table = Seq[(String, String, Either[(Class[_], String), Set[String]])](
+      ("CmpLit", "?v > 2", Right(Set("a", "c"))),
+      ("CmpVar", "?v = ?w", Right(Set("a"))),
+      ("InList", """?n IN ("Ann", "Cy")""", Right(Set("a", "c"))),
+      ("BoundTest", "BOUND(?n)", Right(Set("a", "b", "c"))),
+      ("BoundTest", "BOUND(?nope)",
+        Left((classOf[IllegalArgumentException], bound))),
+      ("StrFn", """REGEX(?n, "^B")""", Right(Set("b"))),
+      ("ExprCmp", "?v * 2 > 9", Right(Set("a", "c"))),
+      // an accessor over a constructor-bound variable folds to its
+      // constant in every form
+      ("ExprCmp", """CONCAT(LANG(?l), "") = "en"""",
+        Right(Set("a", "b", "c"))),
+      ("ExprBool", s"""<$geofW>(?g, "POLYGON((0 0, 3 0, 3 3, 0 3, 0 0))")""",
+        Right(Set("a", "c"))))
+    table.foreach { case (kind, atom, want) =>
+      Seq(atom, s"""$atom && ?s != "zzz"""", s"""$atom || ?s = "zzz"""")
+        .foreach(f => assert(run(f) == want, s"$kind: FILTER($f)"))
+    }
+  }
+
   test("SparqlParser r9: SERVICE federation against registered stores") {
     import spark.implicits._
     import graft.rdf.SparqlParser
@@ -3052,6 +3120,13 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
           |BIND(CONCAT(?n, ?t) AS ?c) }""".stripMargin)
     }
     assert(eb.getMessage.contains("allowCartesian"))
+    // nor does a || clause: it can hold without its join comparison
+    val ed = intercept[IllegalArgumentException] {
+      SparqlParser.execute(quads,
+        """SELECT * WHERE { ?a <urn:name> ?n . ?p <urn:type> ?t .
+          |FILTER(?a = ?p || ?n = "z") }""".stripMargin)
+    }
+    assert(ed.getMessage.contains("allowCartesian"))
     // but an OPTIONAL rooted in ONE group + a FILTER reaching the other
     // stays connected (the left-join output is genuinely selected on)
     assert(SparqlParser.execute(quads,
