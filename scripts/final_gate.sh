@@ -95,6 +95,14 @@ dup=$(grep -owE 'varFilters|inFilters|boundFilters|filterFns|exprFilters|boolFil
 [ -z "$dup" ] ||
   fail "per-kind filter fields in SparqlParser.scala (use Query.filters): $dup"
 
+# Every JDK HTTP server is built by SparqlServer.httpServer, whose object
+# sets sun.net.httpserver.nodelay first: the JDK reads it once per JVM,
+# and without it every response waits ~40 ms for a delayed ACK.
+jdk=$(grep -rl 'HttpServer\.create' src |
+  grep -vx 'src/main/scala/graft/rdf/SparqlServer.scala' | tr '\n' ' ')
+[ -z "$jdk" ] ||
+  fail "HttpServer.create outside SparqlServer.scala (use SparqlServer.httpServer): $jdk"
+
 sbt -batch compile >/tmp/final_gate_compile.log 2>&1 ||
   { tail -20 /tmp/final_gate_compile.log >&2; fail "sbt compile failed"; }
 

@@ -2348,9 +2348,9 @@ object QuadQueries extends QueryCatalog {
     }),
 
     // Multi-IRI DESCRIBE (r9): `describe <a> <b>` unions the concise
-    // bounded descriptions in ONE describeAll pass (the focus set
-    // broadcasts; one job, not one per IRI) — the batch form a serving
-    // client uses to hydrate a result page of entities.
+    // bounded descriptions in ONE pass (`subject IN (…)`, one broadcast
+    // semi-join; not one job per IRI) — the batch form a serving client
+    // uses to hydrate a result page of entities.
     "q_quads_sparql_describe_multi" -> ((s, dir) => {
       graft.rdf.SparqlParser.execute(
           QuadEmitter.explodeQuadsFull(

@@ -390,61 +390,49 @@ object QuadEmitter {
   }
 
   /** DESCRIBE verb (`cam/graphdb.py:60-71`, `cam/web/app.py:70-75`) as a
-    * concise bounded description: every quad whose subject is `iri`, plus
-    * the quads of blank nodes it points at (the reference's part groups
-    * travel with their owner — a bnode label is meaningless without them).
-    * The bnode hop is a self-join on the quad relation keyed by label;
-    * with the quad set partitioned/bucketed by subject this is the
-    * serving-path point lookup. */
-  /** DESCRIBE over a SET of focus IRIs — the `DESCRIBE ?v WHERE { … }`
-    * form: the same CBD contract as [[describe]] (direct statements plus
-    * one blank-node hop), with the focus set joined in as a relation —
-    * never iterated driver-side. Serving DESCRIBE sets are small
-    * (bounded by the WHERE's solutions), so both the focus and the
-    * bnode-label joins broadcast; a bulk export of millions of focuses
-    * should drop the hint and let the (subject-keyed) shuffle join run.
+    * concise bounded description (CBD) of the focus IRIs: every quad
+    * whose subject is a focus IRI, plus the quads of the blank nodes
+    * those statements point at (the reference's part groups travel
+    * with their owner — a bnode label is meaningless without them).
+    * `DESCRIBE <a> [<b> …]`: the focus test is `subject IN (…)`, so the
+    * constants reach the store scan. See [[cbd]] for the plan. */
+  def describe(quads: DataFrame, iris: String*): DataFrame =
+    cbd(quads, quads.filter(col("subject").isin(iris: _*) &&
+      kindOf(quads, "subjectKind") === TermKind.Iri))
+
+  /** The CBD of a focus RELATION — the `DESCRIBE ?v WHERE { … }` form:
+    * the same contract as [[describe]], with the focus set semi-joined
+    * in — never iterated driver-side. Serving DESCRIBE sets are small
+    * (bounded by the WHERE's solutions), so the focus broadcasts; a bulk
+    * export of millions of focuses should drop the hint and let the
+    * (subject-keyed) shuffle join run.
     * @param iris single-column relation of focus IRIs (any column name)
     */
-  def describeAll(quads: DataFrame, iris: DataFrame): DataFrame = {
-    val subjectKind: Column =
-      if (quads.columns.contains("subjectKind")) col("subjectKind")
-      else lit(graft.model.TermKind.Iri)
-    // kind-less triple relations have no bnode closure to walk
-    val objectKind: Column =
-      if (quads.columns.contains("objectKind")) col("objectKind")
-      else lit(graft.model.TermKind.Iri)
-    val focus = iris.toDF("describe_iri").distinct()
-    val direct = quads
-      .filter(subjectKind === graft.model.TermKind.Iri)
-      .join(broadcast(focus), col("subject") === col("describe_iri"))
-      .drop("describe_iri")
-    val bnodeLabels = direct
-      .filter(objectKind === graft.model.TermKind.BNode)
-      .select(col("objectValue").as("bn_label")).distinct()
-    val hop = quads
-      .filter(subjectKind === graft.model.TermKind.BNode)
-      .join(broadcast(bnodeLabels), col("subject") === col("bn_label"))
-      .drop("bn_label")
-    direct.unionByName(hop)
+  def describeAll(quads: DataFrame, iris: DataFrame): DataFrame =
+    cbd(quads, quads
+      .filter(kindOf(quads, "subjectKind") === TermKind.Iri)
+      .join(broadcast(iris.toDF("describe_iri")),
+        col("subject") === col("describe_iri"), "left_semi"))
+
+  /** `quads ⋉ broadcast(keys)` on `(subjectKind, subject)`: the keys are
+    * the subjects of the `direct` statements (kind `iri`) and their
+    * blank-node objects (kind `bnode`), two keys per direct statement
+    * (the second null unless the object is a blank node). The semi-join
+    * tolerates duplicate keys, so the plan needs no distinct and no
+    * union: the keys' broadcast job, then the result job. */
+  private def cbd(quads: DataFrame, direct: DataFrame): DataFrame = {
+    val keys = direct.select(inline(array(
+      struct(lit(TermKind.Iri).as("k_kind"), col("subject").as("k_term")),
+      struct(when(kindOf(quads, "objectKind") === TermKind.BNode,
+          lit(TermKind.BNode)).as("k_kind"),
+        col("objectValue").as("k_term")))))
+    quads.join(broadcast(keys), kindOf(quads, "subjectKind") ===
+      col("k_kind") && col("subject") === col("k_term"), "left_semi")
   }
 
-  def describe(quads: DataFrame, iri: String): DataFrame = {
-    val subjectKind: Column =
-      if (quads.columns.contains("subjectKind")) col("subjectKind")
-      else lit(graft.model.TermKind.Iri)
-    // kind-less triple relations have no bnode closure to walk
-    val objectKind: Column =
-      if (quads.columns.contains("objectKind")) col("objectKind")
-      else lit(graft.model.TermKind.Iri)
-    val direct = quads.filter(col("subject") === iri &&
-      subjectKind === graft.model.TermKind.Iri)
-    val bnodeLabels = direct
-      .filter(objectKind === graft.model.TermKind.BNode)
-      .select(col("objectValue").as("bn_label")).distinct()
-    val hop = quads
-      .filter(subjectKind === graft.model.TermKind.BNode)
-      .join(broadcast(bnodeLabels), col("subject") === col("bn_label"))
-      .drop("bn_label")
-    direct.unionByName(hop)
-  }
+  /** A term-kind column of `quads`; a kind-less triple relation holds
+    * IRIs only (so it has no blank-node closure to walk). */
+  private def kindOf(quads: DataFrame, kind: String): Column =
+    if (quads.columns.contains(kind)) col(kind)
+    else lit(TermKind.Iri)
 }

@@ -156,10 +156,13 @@ object QuadStore {
   }
 
   /** The store's file layout: rows hash-partitioned by predicate and
-    * sorted `(predicate, subject)` within each partition. */
+    * sorted `(graph, predicate, subject)` within each partition. The
+    * leading `graph` meets the partitioned writer's required ordering,
+    * so the writer adds no sort of its own, which would replace this
+    * one and leave the files out of `(predicate, subject)` order. */
   private def laidOut(rows: DataFrame): DataFrame =
     rows.repartition(col("predicate"))
-      .sortWithinPartitions(col("predicate"), col("subject"))
+      .sortWithinPartitions(col("graph"), col("predicate"), col("subject"))
 
   /** Write rows under one `graph=` directory per graph; `overwrite`
     * (`static` or `dynamic`) is the partition overwrite mode. */

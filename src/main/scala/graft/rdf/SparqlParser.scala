@@ -139,8 +139,7 @@ object SparqlParser {
       propFns: Seq[PropFnCall] = Nil,
       subqueries: Seq[Query] = Nil,
       unions: Seq[Seq[Seq[Bgp.Pattern]]] = Nil, // each: ≥2 branches
-      describeIri: Option[String] = None,
-      describeIris: Seq[String] = Nil, // extra IRIs: DESCRIBE <a> <b>
+      describeIris: Seq[String] = Nil, // DESCRIBE <a> [<b> …]
       describeVar: Option[String] = None, // DESCRIBE ?v WHERE { … }
       selectOrder: Seq[String] = Nil, // SELECT-list column order
       offset: Option[Int] = None,
@@ -1611,14 +1610,13 @@ object SparqlParser {
       p.eat()
       val t = p.eat()
       require(t.startsWith("<"), s"DESCRIBE needs an IRI, got '$t'")
-      val more = Seq.newBuilder[String]
+      val iris = Seq.newBuilder[String] += t.substring(1, t.length - 1)
       // ts.nonEmpty guard: peek's "<eof>" sentinel also starts with '<'
       while (p.ts.nonEmpty && p.peek.startsWith("<"))
-        { val x = p.eat(); more += x.substring(1, x.length - 1) }
+        { val x = p.eat(); iris += x.substring(1, x.length - 1) }
       return Query(distinct = false, Nil, Nil, Nil, Nil, Nil,
         Nil, Nil, Nil, None, verb = "describe",
-        describeIri = Some(t.substring(1, t.length - 1)),
-        describeIris = more.result())
+        describeIris = iris.result())
     }
     // DESCRIBE ?v WHERE { … } — the generic form: parse the body exactly
     // like SELECT ?v (full WHERE grammar, modifiers), describe the
@@ -2446,10 +2444,10 @@ object SparqlParser {
       else quads.filter(col("graph").isin(set: _*))
     }
 
-  /** Compile one FILTER atom onto the binding columns of `rel`.
+  /** Compile one FILTER atom onto the binding columns `bound`.
     * `ctorEnv` maps constructor-bound variables to their term metadata,
     * so accessors over them fold to constants ([[resolveAccessors]]). */
-  private def atomCol(a: FilterAtom, rel: DataFrame,
+  private def atomCol(a: FilterAtom, bound: Set[String],
       ctorEnv: Map[String, CtorMeta]): Column = a match {
     case CmpLit(v, op, value, numeric) =>
       if (numeric) cmp(col(v).cast("double"), op, lit(value.toDouble))
@@ -2459,7 +2457,7 @@ object SparqlParser {
       val in = col(v).isin(vs: _*)
       if (neg) !in else in
     case BoundTest(v, neg) =>
-      require(rel.columns.contains(v),
+      require(bound.contains(v),
         s"BOUND(?$v): variable is not bound by any pattern")
       if (neg) col(v).isNull else col(v).isNotNull
     case StrFn(fn, v, arg, flags) => fn match {
@@ -2481,11 +2479,56 @@ object SparqlParser {
     case _: TermTest => lit(true)
   }
 
-  /** Filter `rel` by one FILTER clause: its `&&` groups disjoined. */
+  /** One FILTER clause as a predicate over the variables `bound`: its
+    * `&&` groups disjoined. */
+  private def clauseCol(clause: Seq[Seq[FilterAtom]], bound: Set[String],
+      ctorEnv: Map[String, CtorMeta]): Column =
+    clause.map(_.map(atomCol(_, bound, ctorEnv)).reduce(_ && _))
+      .reduce(_ || _)
+
+  /** Filter `rel` by one FILTER clause. */
   private def filterBy(rel: DataFrame, clause: Seq[Seq[FilterAtom]],
       ctorEnv: Map[String, CtorMeta]): DataFrame =
-    rel.filter(clause
-      .map(_.map(atomCol(_, rel, ctorEnv)).reduce(_ && _)).reduce(_ || _))
+    rel.filter(clauseCol(clause, rel.columns.toSet, ctorEnv))
+
+  /** The variables one FILTER atom reads. */
+  private def atomVars(a: FilterAtom): Set[String] = a match {
+    case CmpLit(v, _, _, _) => Set(v)
+    case CmpVar(v1, _, v2) => Set(v1, v2)
+    case InList(v, _, _) => Set(v)
+    case BoundTest(v, _) => Set(v)
+    case StrFn(_, v, _, _) => Set(v)
+    case ExprCmp(l, _, r) => bindExprVars(l) ++ bindExprVars(r)
+    case ExprBool(e) => bindExprVars(e)
+    case TermTest(v, _, _, _) => Set(v)
+  }
+
+  /** §18.2.2.6 LeftJoin(l, r, cond): `l` left-joined to an OPTIONAL
+    * group's solutions `r` on their shared variables, with the group's
+    * FILTER clauses `cond` — which read variables of both sides — as
+    * the join condition. Columns come out as a `using` join orders
+    * them: shared, then `l`'s, then `r`'s. */
+  private def leftJoin(l: DataFrame,
+      r: (DataFrame, Seq[Seq[Seq[FilterAtom]]]), what: String,
+      encloser: String): DataFrame = {
+    val (opt, cond) = r
+    val shared = l.columns.toSet.intersect(opt.columns.toSet).toSeq
+    require(shared.nonEmpty,
+      s"$what must share at least one variable with $encloser " +
+        "(a disconnected OPTIONAL is a cross join)")
+    if (cond.isEmpty) l.join(opt, shared, "left")
+    else {
+      // `-` cannot occur in a SPARQL variable name
+      val renamed = opt.select(opt.columns.map(c =>
+        if (shared.contains(c)) col(c).as("opt-" + c) else col(c)): _*)
+      val bound = (l.columns ++ opt.columns).toSet
+      val on = (shared.map(v => col(v) === col("opt-" + v)) ++
+        cond.map(clauseCol(_, bound, Map.empty))).reduce(_ && _)
+      l.join(renamed, on, "left").select((shared ++
+        l.columns.filterNot(shared.contains) ++
+        opt.columns.filterNot(shared.contains)).map(col): _*)
+    }
+  }
 
   private def executeQuery(quads: DataFrame, q0: Query,
       functions: Map[String, PropertyFunction],
@@ -2513,15 +2556,9 @@ object SparqlParser {
             .select(col(v))
           QuadEmitter.describeAll(quads, focus)
         case None =>
-          // multiple IRIs: one relation-valued CBD over the union of
-          // foci (a single describeAll pass, not one job per IRI)
-          if (q0.describeIris.isEmpty)
-            QuadEmitter.describe(quads, q0.describeIri.get)
-          else {
-            import quads.sparkSession.implicits._
-            QuadEmitter.describeAll(quads,
-              (q0.describeIri.get +: q0.describeIris).toDF("iri"))
-          }
+          // one CBD over every named IRI (`subject IN (…)`, not one job
+          // per IRI)
+          QuadEmitter.describe(quads, q0.describeIris: _*)
       }
 
     // constant BINDs substitute into every pattern (the constant pushes
@@ -2695,19 +2732,19 @@ object SparqlParser {
       // a group's solutions: its own BGP, then nested OPTIONALs
       // left-joined onto IT, then its scoped filters over that result
       // (§18.2.2.6 — the nested LeftJoin happens inside the group
-      // before the group joins outward)
-      def optSolutions(og: OptGroup): DataFrame = {
+      // before the group joins outward). A scoped filter that reads a
+      // variable the group does not bind is returned instead: it is the
+      // condition of the LeftJoin that attaches the group.
+      def optSolutions(og: OptGroup)
+          : (DataFrame, Seq[Seq[Seq[FilterAtom]]]) = {
         var opt = Bgp.select(quads, og.patterns, dedup = false)
         og.nested.foreach { ng =>
-          val sub = optSolutions(ng)
-          val sh = opt.columns.toSet.intersect(sub.columns.toSet).toSeq
-          require(sh.nonEmpty,
-            "a nested OPTIONAL must share at least one variable with " +
-              "its enclosing group (a disconnected OPTIONAL is a " +
-              "cross join)")
-          opt = opt.join(sub, sh, "left")
+          opt = leftJoin(opt, optSolutions(ng), "a nested OPTIONAL",
+            "its enclosing group")
         }
-        og.filters.foreach(c => opt = filterBy(opt, c, Map.empty))
+        val (own, outer) = og.filters.partition(c =>
+          c.flatten.flatMap(atomVars).toSet.subsetOf(opt.columns.toSet))
+        own.foreach(c => opt = filterBy(opt, c, Map.empty))
         og.exists.foreach { case (neg, grp) =>
           val ex = Bgp.select(quads, grp)
           val sh = opt.columns.toSet.intersect(ex.columns.toSet).toSeq
@@ -2717,18 +2754,12 @@ object SparqlParser {
           opt = opt.join(ex.select(sh.map(col): _*).distinct(), sh,
             if (neg) "left_anti" else "left_semi")
         }
-        opt
+        (opt, outer)
       }
-      components += q.optionals
-        .foldLeft(base) { case (acc, og) =>
-          val opt = optSolutions(og)
-          val shared = acc.columns.toSet.intersect(opt.columns.toSet).toSeq
-          require(shared.nonEmpty,
-            "an OPTIONAL group must share at least one variable with " +
-              "the required patterns (a disconnected OPTIONAL is a " +
-              "cross join)")
-          acc.join(opt, shared, "left")
-        }
+      components += q.optionals.foldLeft(base) { (acc, og) =>
+        leftJoin(acc, optSolutions(og), "an OPTIONAL group",
+          "the required patterns")
+      }
     } else require(q.optionals.isEmpty && q.minuses.isEmpty,
       "OPTIONAL/MINUS need required patterns")
     q.paths.foreach(pp => components +=

@@ -3,7 +3,7 @@ package graft.rdf
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.HttpExchange
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 
 /** SPARQL 1.1 Protocol SERVER — the reference's entire serving tier is
   * an HTTP endpoint being *served*: the web UI posts SPARQL to the
@@ -31,9 +31,9 @@ import org.apache.spark.sql.DataFrame
   * the boolean document (JSON or XML), CONSTRUCT / DESCRIBE with
   * `application/n-quads` text.
   *
-  * One Spark execution per request: the handler collects at most
-  * `maxResultRows + 1` rows of the page — the solutions with every
-  * column cast to string, or the N-Quads lines of a CONSTRUCT — and
+  * One Spark execution per request: the handler collects the page —
+  * the solutions with every column cast to string, or the N-Quads
+  * lines of a CONSTRUCT — in one result job ([[collectPage]]), and
   * [[SparqlResults]] renders the document on the driver from those
   * rows, in solution order. The serving contract is LIMIT-bounded
   * result pages over a store the cluster scans, never the corpus over
@@ -43,12 +43,29 @@ import org.apache.spark.sql.DataFrame
   * parsing (the client surfaces the reference's non-200 RuntimeError).
   *
   * The handler pool bounds concurrent requests, Spark's scheduler
-  * shares the cluster between them (FAIR pools apply unchanged). The
-  * store relation is lineage-cut once at construction
-  * ([[SparqlParser.execute]] does this), so every request reuses the
-  * same materialized scan root.
+  * shares the cluster between them (FAIR pools apply unchanged). A
+  * served relation that is already materialized — a store scan, a
+  * checkpoint — is served as it is; [[SparqlParser.execute]] cuts any
+  * other relation's lineage once per request, and a protocol update
+  * swaps in a relation cut once at the update.
+  *
+  * Responses are written with TCP_NODELAY. The JDK server sends the
+  * headers and then the body as separate writes; with Nagle's algorithm
+  * on, the body waits for the client's delayed ACK of the headers,
+  * about 40 ms on every response. The JDK reads
+  * `sun.net.httpserver.nodelay` once per JVM, when its first server is
+  * built, so this object sets it in its initializer and every JDK
+  * server of the program is built by [[httpServer]].
   */
 object SparqlServer {
+
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** A JDK HTTP server bound to `127.0.0.1:port` (0 = a free port), with
+    * TCP_NODELAY on its connections (see the object's doc). */
+  private[graft] def httpServer(port: Int): com.sun.net.httpserver.HttpServer =
+    com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", port), 0)
 
   /** A running endpoint; `stop()` releases the port. `relation` is the
     * CURRENT served quad relation — the initial one until a protocol
@@ -82,9 +99,6 @@ object SparqlServer {
     // (readers see either the old or the new relation, never a mix)
     val current =
       new java.util.concurrent.atomic.AtomicReference[DataFrame](quads)
-    // at most cap+1 rows reach the driver (a cap at Int.MaxValue or
-    // above disables the check)
-    val pageRows = math.min(maxResultRows, Int.MaxValue - 2L).toInt + 1
     def handle(ex: HttpExchange): Unit = guarded(ex) {
       textOf(ex, "query", "application/sparql-query", get = true) match {
         case Left((code, why)) => respond(ex, code, "text/plain", why)
@@ -105,7 +119,7 @@ object SparqlServer {
               if (cols.contains("graph")) result
               else result.withColumn("graph",
                 org.apache.spark.sql.functions.lit(null).cast("string")))
-          val rows = page.limit(pageRows).collect().toSeq
+          val rows = collectPage(page, maxResultRows)
           def ok(ct: String, body: String): Unit = respond(ex, 200, ct, body)
           if (rows.length > maxResultRows)
             respond(ex, 413, "text/plain",
@@ -152,14 +166,35 @@ object SparqlServer {
       }
     }
 
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", port), 0)
+    val server = httpServer(port)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
     server.setExecutor(pool)
     server.createContext("/sparql", (ex: HttpExchange) => handle(ex))
     server.createContext("/update", (ex: HttpExchange) => handleUpdate(ex))
     server.start()
     new Handle(server, pool, current)
+  }
+
+  /** The rows of `page`, enough of them to tell whether it holds more
+    * than `cap`, from one result job. A page whose optimized plan bounds
+    * its rows at `cap` or fewer (LIMIT, ORDER BY … LIMIT, ASK) is
+    * collected as it is. Any other page is collected in one job in
+    * which each partition yields at most cap+1 rows, in partition
+    * order, so solution order holds. No `Limit` node is added: Spark's
+    * take loop would scan one partition first and then the rest, and a
+    * limit inside whole-stage codegen names its counter afresh on every
+    * plan, which recompiles the generated class on every request. The
+    * driver holds at most partitions × (cap+1) rows, the worst case of
+    * Spark's own final take round. (A cap at Int.MaxValue or above
+    * disables the check.) */
+  private[graft] def collectPage(page: DataFrame, cap: Long): Seq[Row] = {
+    if (page.queryExecution.optimizedPlan.maxRows.exists(_ <= cap))
+      page.collect().toSeq
+    else {
+      val n = math.min(cap, Int.MaxValue - 2L).toInt + 1
+      page.mapPartitions(_.take(n))(Encoders.row(page.schema))
+        .collect().toSeq
+    }
   }
 
   private val Json = "application/sparql-results+json"

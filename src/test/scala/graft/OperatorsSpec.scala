@@ -2411,6 +2411,29 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(e.getMessage.contains("cannot be scoped inside OPTIONAL"))
   }
 
+  test("SparqlParser: an OPTIONAL-scoped FILTER over an outer variable " +
+      "is the LeftJoin's condition (§18.2.2.6)") {
+    import spark.implicits._
+    import graft.rdf.SparqlParser
+    val quads = Seq(
+      ("a", "urn:min", "3"), ("a", "urn:val", "5"), ("a", "urn:val", "2"),
+      ("b", "urn:min", "4"), ("b", "urn:val", "1"), ("c", "urn:min", "1"))
+      .toDF("subject", "predicate", "objectValue")
+    def run(filters: String) = SparqlParser.execute(quads,
+      s"""SELECT ?s ?v WHERE { ?s <urn:min> ?m .
+        OPTIONAL { ?s <urn:val> ?v $filters } }""").collect()
+      .map(r => (r.getString(0), Option(r.getString(1)))).toSet
+    // ?m is bound outside the group: the filter selects the matches
+    // per outer row, and an outer row with none keeps a NULL binding
+    assert(run("FILTER(?v > ?m)") ==
+      Set(("a", Some("5")), ("b", None), ("c", None)))
+    assert(run("""FILTER(?v > ?m && ?v != "5")""") ==
+      Set(("a", None), ("b", None), ("c", None)))
+    // a clause over the group's own variables still filters the group
+    assert(run("""FILTER(?v > ?m) FILTER(?v != "2")""") ==
+      Set(("a", Some("5")), ("b", None), ("c", None)))
+  }
+
   test("SparqlParser: each FILTER atom gives one answer alone, under && " +
       "and under ||") {
     import spark.implicits._
@@ -2684,8 +2707,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
         |""".stripMargin
     val nt = "<http://example.org/c> <http://example.org/label> " +
       "\"Gamma\" .\n"
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.rdf.SparqlServer.httpServer(0)
     def serve(path: String, body: String, ct: String): Unit =
       server.createContext(path,
         (ex: com.sun.net.httpserver.HttpExchange) => {
@@ -2737,8 +2759,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
         |   "label":{"type":"literal","value":"Alpha","xml:lang":"en"}},
         |  {"s":{"type":"uri","value":"urn:b"}}
         |]}}""".stripMargin
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.rdf.SparqlServer.httpServer(0)
     server.createContext("/sparql",
       (ex: com.sun.net.httpserver.HttpExchange) => {
         val body = new String(ex.getRequestBody.readAllBytes(),

@@ -1,4 +1,5 @@
 package graft
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
   test("knn plan audit") {
@@ -219,6 +220,130 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // the touched keys are broadcast to the left join of the stored rows
     assert((upsertJobs, upsertBroadcasts) == (4, 1))
     assert((openJobs, openBroadcasts) == (0, 0))
+  }
+
+  test("persisted quad store: every bulk-loaded and upserted file is " +
+      "sorted by (predicate, subject)") {
+    import org.apache.spark.sql.functions.{col, lit, concat}
+    // subjects in id order are not in string order (urn:s10 < urn:s2),
+    // so a file holds the documented order only if the layout's sort
+    // survives the partitioned write
+    def quads(from: Long, until: Long, tag: String) =
+      spark.range(from, until).select(
+        concat(lit("urn:s"), col("id")).as("subject"),
+        lit("iri").as("subjectKind"),
+        concat(lit("urn:p"), (col("id") % 5).cast("string")).as("predicate"),
+        concat(lit(tag), col("id")).as("objectValue"),
+        lit("literal").as("objectKind"),
+        lit(null).cast("string").as("datatype"),
+        lit(null).cast("string").as("lang"),
+        concat(lit("urn:g"), (col("id") % 2).cast("string")).as("graph"))
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_quadstore_order").toString
+    def files(): Seq[java.nio.file.Path] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .toSeq
+      finally walk.close()
+    }
+    def assertSorted(what: String): Unit = {
+      assert(files().nonEmpty)
+      files().foreach { f =>
+        val rows = spark.read.parquet(f.toString)
+          .select("predicate", "subject").collect()
+          .map(r => (r.getString(0), r.getString(1))).toSeq
+        assert(rows.size > 1 && rows == rows.sorted,
+          s"$what file $f is not sorted by (predicate, subject): " +
+            rows.take(8).mkString(" "))
+      }
+    }
+    graft.rdf.QuadStore.write(quads(1, 400, "v"), path)
+    assertSorted("bulk-loaded")
+    graft.rdf.QuadStore.upsert(spark, path, quads(300, 500, "w"))
+    assertSorted("upserted")
+  }
+
+  test("served requests: DESCRIBE runs 2 jobs and geocode 3, and a " +
+      "repeated DESCRIBE or OPTIONAL query compiles no class") {
+    import org.apache.spark.sql.functions.{col, lit, concat}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the serving shape of the reference's store: customers with a
+    // name, a blank-node name part and a geocode chain, in two graphs,
+    // written large enough that each graph= partition holds several
+    // files (a take loop over one file would need one job only)
+    val ids = spark.range(0, 3000)
+    def iri(prefix: String) = concat(lit(prefix), col("id"))
+    def quad(s: org.apache.spark.sql.Column, sKind: String, p: String,
+        o: org.apache.spark.sql.Column, oKind: String, g: String) =
+      ids.select(s.as("subject"), lit(sKind).as("subjectKind"),
+        lit(p).as("predicate"), o.as("objectValue"),
+        lit(oKind).as("objectKind"), lit(null).cast("string").as("datatype"),
+        lit(null).cast("string").as("lang"), lit(g).as("graph"))
+    val (c, b) = (iri("urn:c/"), iri("b"))
+    val quads = Seq(
+      quad(c, "iri", "urn:type", lit("urn:Place"), "iri", "urn:g:a"),
+      quad(c, "iri", "urn:name", iri("Customer "), "literal", "urn:g:a"),
+      quad(c, "iri", "urn:hasPart", b, "bnode", "urn:g:a"),
+      quad(b, "bnode", "urn:value", iri("given "), "literal", "urn:g:a"),
+      quad(b, "bnode", "urn:partType", lit("urn:Given"), "iri", "urn:g:a"),
+      quad(c, "iri", "urn:hasGeocode", iri("urn:geocode/"), "iri", "urn:g:g"),
+      quad(iri("urn:geocode/"), "iri", "urn:hasGeometry", iri("urn:geom/"),
+        "iri", "urn:g:g"),
+      quad(iri("urn:geom/"), "iri", "urn:asWKT", iri("POINT(1 "), "literal",
+        "urn:g:g")).reduce(_ unionByName _)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_quadstore_serve").toString
+    graft.rdf.QuadStore.write(quads, path)
+    for (g <- Seq("urn%3Ag%3Aa", "urn%3Ag%3Ag")) {
+      val n = new java.io.File(s"$path/graph=$g").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(n >= 2, s"graph=$g holds $n files; the test needs several")
+    }
+    val sc = spark.sparkContext
+    val h = graft.rdf.SparqlServer.serve(
+      graft.rdf.QuadStore.open(spark, path))
+    // jobs (every job, AQE stages and broadcast builds included) and
+    // generated classes compiled while one request is served
+    def served(q: String): (Int, Long) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+      sc.addSparkListener(l)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      try {
+        graft.rdf.HttpVocab.get(h.endpoint + "?query=" +
+          java.net.URLEncoder.encode(q, "UTF-8"), timeoutMs = 120000)
+        org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+        (n.get(), CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled)
+      } finally sc.removeSparkListener(l)
+    }
+    def describe(k: Int) = s"describe <urn:c/$k>"
+    def geocode(k: Int) =
+      s"""SELECT * WHERE {
+         |  BIND(<urn:c/$k> AS ?iri)
+         |  ?iri <urn:hasGeocode> ?geocode .
+         |  ?geocode <urn:hasGeometry> ?geo .
+         |  ?geo <urn:asWKT> ?wkt .
+         |}""".stripMargin
+    val optional = "SELECT ?s ?n ?g WHERE { ?s <urn:name> ?n " +
+      "OPTIONAL { ?s <urn:hasGeocode> ?g } }"
+    try {
+      // warm: first-use plan caches and generated classes
+      served(describe(1)); served(geocode(1)); served(optional)
+      val (describeJobs, describeCompiled) = served(describe(2))
+      assert(describeJobs == 2, s"DESCRIBE ran $describeJobs jobs (want 2)")
+      assert(describeCompiled == 0,
+        s"a repeated DESCRIBE compiled $describeCompiled classes")
+      val (geocodeJobs, _) = served(geocode(2))
+      assert(geocodeJobs == 3, s"geocode ran $geocodeJobs jobs (want 3)")
+      val (_, optionalCompiled) = served(optional)
+      assert(optionalCompiled == 0,
+        s"a repeated OPTIONAL query compiled $optionalCompiled classes")
+    } finally h.stop()
   }
 
   test("sketch expressions are not duplicated into pushed-down filters") {

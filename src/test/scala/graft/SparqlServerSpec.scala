@@ -344,24 +344,26 @@ class SparqlServerSpec extends AnyFunSuite with SparkTestBase {
     } finally h.stop()
   }
 
+  /** Jobs started while `run` runs. */
+  private def jobs(run: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+    sc.addSparkListener(l)
+    try {
+      run
+      org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
+      n.get()
+    } finally sc.removeSparkListener(l)
+  }
+
   test("SparqlServer: a served request runs the jobs of one in-process " +
       "collect of its page — SELECT in every format, ASK, DESCRIBE") {
-    val sc = spark.sparkContext
-    def jobs(run: => Any): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
-      sc.addSparkListener(l)
-      try {
-        run
-        org.apache.spark.GraftListenerBus.waitUntilEmpty(sc)
-        n.get()
-      } finally sc.removeSparkListener(l)
-    }
     val cap = 100000L
     val h = SparqlServer.serve(quadDf, maxResultRows = cap)
     try {
@@ -370,7 +372,7 @@ class SparqlServerSpec extends AnyFunSuite with SparkTestBase {
         assert(code == 200, body)
       }
       def page(df: org.apache.spark.sql.DataFrame): Int =
-        jobs(df.limit(cap.toInt + 1).collect())
+        jobs(SparqlServer.collectPage(df, cap))
       val select = "SELECT ?s ?n WHERE { ?s <https://schema.org/name> ?n } " +
         "ORDER BY ?s"
       served(select) // warm: plan caches and the relation's cut
@@ -432,6 +434,84 @@ class SparqlServerSpec extends AnyFunSuite with SparkTestBase {
       assert(update("INSERT DATA { <urn:over> <urn:p:score> \"9\" }", 1) ==
         413)
       assert(!scores("urn:over").contains("\"9\""))
+    } finally h.stop()
+  }
+
+  /** 200 names over four partitions, each (subject, name) pair unique
+    * (registered statistics say so), so a one-pattern SELECT is a plain
+    * scan of the four partitions. */
+  private def names = {
+    import spark.implicits._
+    val quads = (1 to 200).map(i => (f"urn:s$i%03d", "iri",
+      "https://schema.org/name", s"n$i", "literal", null: String,
+      null: String, "urn:g:1"))
+      .toDF("subject", "subjectKind", "predicate", "objectValue",
+        "objectKind", "datatype", "lang", "graph")
+      .repartition(4).localCheckpoint()
+    graft.rdf.QuadStats.register(quads)
+  }
+
+  test("SparqlServer: an unbounded page is collected in one job over " +
+      "every partition; a LIMIT page in one job as it is; both 413 over " +
+      "the cap") {
+    val quads = names
+    assert(quads.rdd.getNumPartitions == 4)
+    val all = "SELECT ?s ?n WHERE { ?s <https://schema.org/name> ?n }"
+    val top = all + " ORDER BY ?s LIMIT 5"
+    def csvRows(body: String) = body.split("\r\n").toSeq.tail
+    val h = SparqlServer.serve(quads)
+    try {
+      post(h.endpoint, all); post(h.endpoint, top) // warm
+      var resp = (0, "")
+      assert(jobs { resp = post(h.endpoint, all, "text/csv") } == 1)
+      assert(resp._1 == 200 && csvRows(resp._2).size == 200, resp)
+      assert(jobs { resp = post(h.endpoint, top, "text/csv") } == 1)
+      assert(resp._1 == 200 && csvRows(resp._2) ==
+        (1 to 5).map(i => f"urn:s$i%03d,n$i"), resp)
+    } finally h.stop()
+    val capped = SparqlServer.serve(quads, maxResultRows = 4L)
+    try {
+      for (q <- Seq(all, all + " LIMIT 5")) {
+        val (code, why) = post(capped.endpoint, q)
+        assert(code == 413, s"$q: $code $why")
+      }
+      assert(post(capped.endpoint, all + " LIMIT 4")._1 == 200)
+    } finally capped.stop()
+  }
+
+  test("SparqlServer: ORDER BY without LIMIT keeps solution order across " +
+      "partitions") {
+    // keep the sort's four range partitions (AQE would coalesce them)
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val h = SparqlServer.serve(names)
+    spark.conf.set(coalesce, "false")
+    try {
+      val (code, body) = post(h.endpoint, "SELECT ?s WHERE { " +
+        "?s <https://schema.org/name> ?n } ORDER BY DESC(?n)", "text/csv")
+      assert(code == 200, body)
+      assert(body.split("\r\n").toSeq.tail ==
+        (1 to 200).sortBy(i => s"n$i").reverse.map(i => f"urn:s$i%03d"))
+    } finally { spark.conf.unset(coalesce); h.stop() }
+  }
+
+  test("SparqlServer: keep-alive responses are sent with TCP_NODELAY") {
+    // a request with no query answers 400 without Spark work, so its
+    // latency is the HTTP exchange alone; with Nagle's algorithm on, the
+    // body waited ~40 ms for the client's delayed ACK of the headers
+    val h = SparqlServer.serve(quadDf)
+    val http = java.net.http.HttpClient.newBuilder()
+      .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+    try {
+      val req = java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(h.endpoint)).GET().build()
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        val resp = http.send(req,
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode == 400, resp.body)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(10) < 10.0, s"median ${ms(10)} ms: ${ms.mkString(" ")}")
     } finally h.stop()
   }
 }
